@@ -179,7 +179,8 @@ ORDER BY 2 DESC, vec_id LIMIT 10
 
 def _q_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch-of-queries generalization: 3 query vectors × top-3 each in ONE
-    scan (broadcast queries + row_number window)."""
+    scan (the record scorer keeps each query's top-3 per Arrow batch,
+    then a row_number window merges them)."""
     emb = _emb(spark, sf_dir)
     queries = (emb.filter(F.col("vec_id") < 3)
                .select(F.col("vec_id").alias("query_id"),
@@ -3051,18 +3052,18 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The query batch is collected ONCE into a literal relation (the
     # blessed tiny-relation collect — M query vectors, same class as
     # ann_ivf's single collected vector): as a DataFrame subtree it
-    # would re-run its embeddings scan in every plan branch that
-    # broadcasts it (exact side + centroid ranking + candidate
-    # restriction = 3 extra corpus scans, measured ~25% of this query's
-    # wall-clock at sf0.1).
+    # would re-run its embeddings scan in every consumer that reads it
+    # (the exact side's and the IVF side's query collects; with the
+    # earlier broadcast plan, 3 extra corpus scans measured ~25% of this
+    # query's wall-clock at sf0.1).
     qrows = (emb.filter(F.col("vec_id").isin(_RECALL_QUERY_IDS))
              .collect())
     qset = spark.createDataFrame(
         [(r.vec_id, r.embedding) for r in qrows],
         "query_id bigint, query_embedding array<double>")
     # Exact side: ONE corpus scan for the whole query batch via
-    # batch_topk (broadcast queries + two-stage bucketed window), not a
-    # scan per query id — M queries cost the same scan as one
+    # batch_topk (per-batch top-k in the record scorer + two-stage
+    # bucketed window), not a scan per query id — M queries cost the same scan as one
     # (VERDICT r02 #4). records_id keeps the shuffle slim: only
     # (query_id, vec_id, score) moves, never the embeddings — and
     # attach_payload=False skips the winners-to-records payload join
@@ -3071,12 +3072,12 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = batch_topk(emb, qset, 10, records_id="vec_id",
                        tie_break=["vec_id"],
                        attach_payload=False).select("query_id", "vec_id")
-    # IVF side, batched too: one tiny centroid-ranking job for all
-    # queries, ONE pruned read of the union of probed cells (partition
-    # pruning still applies), per-query candidates restricted via a
-    # broadcast (query, cell) relation — M queries cost one index read
-    # instead of M (equivalence with the per-query path pinned in
-    # tests/test_ann.py).
+    # IVF side, batched too: the centroids are ranked for all queries
+    # on the driver, ONE pruned read of the union of probed cells
+    # (partition pruning still applies), and each cell row is scored
+    # only against the queries that probe its cell, inside the same
+    # record scorer — M queries cost one index read instead of M
+    # (equivalence with the per-query path pinned in tests/test_ann.py).
     ivf = ann.ivf_query_index_batch(spark, idx, qset, 10, nprobe=2) \
         .select("query_id", "vec_id")
     return (ann.topk_recall(exact, ivf, query_col="query_id")

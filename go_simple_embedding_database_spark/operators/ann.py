@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from go_simple_embedding_database_spark.functions.kernels import (
     cosine_pairs_kernel, cosine_scores_kernel)
@@ -336,9 +336,10 @@ def ivf_query_index(spark, path: str, qvec: list[float], k: int,
 # differently), which makes it ~100x slower per element than numpy.
 # Above this |centroids| * |queries| * dim element-op budget (~a few
 # hundred ms of single-threaded driver compute) the ranking falls back
-# to the Spark batch_topk path: same kernel semantics (cosine_py is the
-# bit-exact twin of the Catalyst kernel), same total order (score desc,
-# centroid_id asc), so the probe sets are identical — pinned by
+# to a Spark ranking through topk.record_topk: same kernel semantics
+# (cosine_py and the scorer both run the kernel's left fold), same total
+# order (score desc, centroid_id asc), so the probe sets are identical —
+# pinned by
 # tests/test_ann.py::test_ivf_batch_driver_and_spark_ranking_agree.
 IVF_DRIVER_RANK_MAX_OPS = 2_000_000
 
@@ -368,22 +369,27 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     SCALE GATE: above ``IVF_DRIVER_RANK_MAX_OPS`` element-ops
     (|centroids| * |queries| * dim — a real IVF's 10^3-10^4 centroids
     times a 10^3-query batch would be MINUTES of single-threaded
-    driver Python) the ranking runs as a Spark ``batch_topk`` over the
-    centroid relation instead, bit-identically;
+    driver Python) the ranking runs as a Spark job over the centroid
+    relation instead (the scorer of step 3, unrouted, then the bucketed
+    window), bit-identically, and its probe pairs are collected;
     (2) the cells table is read ONCE filtered to the UNION
     of probed cells (still partition pruning — `cell IN (...)` at the
-    file-listing level); (3) a broadcast (query, cell) pair relation
-    restricts each query's candidates to ITS probed cells; (4) the
-    two-stage bucketed window takes the exact per-query top-k, so one
-    query's candidates never funnel through a single task.
+    file-listing level); (3) ``topk.record_topk`` scores each cell row
+    only against the queries that probe its cell (a driver-side route
+    map cell → query indices built from the probe pairs) and keeps each
+    query's k best per Arrow batch, carrying the whole cell row through
+    — no pair relation and no payload join (the query frame is joined
+    back only for columns beyond its id and vector); (4) the two-stage
+    bucketed window merges those local top-k
+    rows into the exact per-query top-k, so one query's candidates never
+    funnel through a single task.
 
     Returns (query columns, index row columns, score_col) — exactly the
     rows the per-query path returns for each query, one plan.
     """
-    from pyspark.sql.types import StructField, StructType
-
     from go_simple_embedding_database_spark.functions.kernels import cosine_py
-    from go_simple_embedding_database_spark.operators.topk import bucketed_topk
+    from go_simple_embedding_database_spark.operators.topk import (
+        bucketed_topk, record_topk)
 
     centroids_df = (spark.read.parquet(f"{path}/centroids")
                     .select("centroid_id", "centroid"))
@@ -391,86 +397,63 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     dim = len(cent_rows[0]["centroid"]) if cent_rows else 0
     budget = (IVF_DRIVER_RANK_MAX_OPS if driver_rank_max_ops is None
               else driver_rank_max_ops)
-    pair_df = None
-    if not cent_rows:
-        # Empty index: nothing can be probed — the empty relation is the
-        # correct result, decided BEFORE touching the query batch. With
-        # |C| = 0 the ops budget below degenerates to max_q = budget, and
-        # the capped collect would pull up to budget + 1 query rows just
-        # to return nothing (ADVICE r05).
-        pairs, probed_cells = [], []
-    else:
-        # The budget also bounds what the driver MATERIALIZES: collect at
-        # most max_q + 1 query rows (one extra to detect overflow) rather
-        # than the whole batch — a gate that first pulled all of |Q| to
-        # the driver to decide |Q| is too big would defeat itself.
+    qfield = queries.schema[query_id]
+    routes: dict = {}
+    q_rows: list = []
+    if cent_rows:
+        # An empty index probes nothing: the empty relation is decided
+        # BEFORE touching the query batch (ADVICE r05). Otherwise the
+        # scorer needs every query vector on the driver anyway, so the
+        # batch (a request working set) is collected once, and the
+        # budget only picks where the centroid ranking runs.
+        q_rows = queries.select(query_id, queries_vec).collect()
         max_q = budget // max(1, len(cent_rows) * dim)
-        q_rows = (queries.select(query_id, queries_vec)
-                  .limit(max_q + 1).collect()) if max_q > 0 else []
-        if q_rows and len(q_rows) <= max_q:
-            pairs = []
-            for qr in q_rows:
+        if len(q_rows) <= max_q:
+            for i, qr in enumerate(q_rows):
                 ranked = sorted(
                     ((cosine_py(qr[queries_vec], cr["centroid"]),
                       cr["centroid_id"])
                      for cr in cent_rows),
                     key=lambda t: (-t[0], t[1]))
-                pairs.extend(
-                    (qr[query_id], cid) for _, cid in ranked[:nprobe])
-            probed_cells = sorted({c for _, c in pairs})
-        elif not q_rows and max_q > 0:
-            # empty query batch, proven by the capped collect — the empty
-            # relation is the correct result; skip the Spark ranking job
-            pairs, probed_cells = [], []
+                for _, cid in ranked[:nprobe]:
+                    routes.setdefault(cid, []).append(i)
         else:
-            # scale fallback: identical ranking as a Spark job — the
-            # Catalyst kernel is cosine_py's bit-exact twin and the order
-            # (score desc, centroid_id asc) matches, so the probe pairs
-            # are the ones the Python loop would produce. The winner pair
-            # relation STAYS a DataFrame (checkpointed — it feeds both
-            # the distinct-cells pull and the candidate join;
-            # unmaterialized, the ranking would run twice). What the gate
-            # bounds is driver CPU: the single-threaded |C| * |Q| * dim
-            # ranking loop never runs above budget, and the only
-            # driver-side RESULT materialization is the distinct probed
-            # cells (≤ |C|) pulled for partition pruning. It does NOT
-            # bound broadcast memory — F.broadcast(pair_df) below still
-            # builds the |Q| * nprobe pair relation through the driver
-            # (as any broadcast does), and F.broadcast(queries) ships the
-            # query batch, both inherent to the broadcast-join plan shape
-            # (a request working set, not a data-scale relation).
-            from go_simple_embedding_database_spark.operators.topk import (
-                batch_topk)
-            pair_df = batch_topk(
-                centroids_df, queries.select(query_id, queries_vec),
-                nprobe, records_vec="centroid", queries_vec=queries_vec,
-                query_id=query_id, tie_break=["centroid_id"],
-                records_id="centroid_id", attach_payload=False) \
-                .select(query_id, F.col("centroid_id").alias("cell")) \
-                .localCheckpoint(eager=False)
-            probed_cells = sorted(
-                r.cell for r in pair_df.select("cell").distinct().collect())
+            # scale fallback: the same ranking as a Spark job through the
+            # same scorer — its fold is cosine_py's bit-exact twin and the
+            # order (score desc, centroid_id asc) matches, so the probe
+            # pairs are the ones the Python loop would produce. What the
+            # gate bounds is driver CPU: the single-threaded
+            # |C| * |Q| * dim ranking loop never runs above budget. The
+            # |Q| * nprobe probe pairs are collected once, keyed by the
+            # query's index in q_rows — the key the routes need.
+            ranked = bucketed_topk(
+                record_topk(centroids_df,
+                            list(enumerate(qr[1] for qr in q_rows)),
+                            StructField("_q", LongType()), nprobe,
+                            "centroid", "_s", ["centroid_id"],
+                            ["centroid_id"]),
+                "_q", [F.desc("_s"), F.asc("centroid_id")], nprobe,
+                "centroid_id").collect()
+            for r in ranked:
+                routes.setdefault(r["centroid_id"], []).append(r["_q"])
     # Empty probe set (empty query batch OR empty index): isin([]) is
     # unbuildable; the empty relation is the correct result either way.
+    probed_cells = sorted(routes)
     cell_filter = (F.col("cell").isin(probed_cells) if probed_cells
                    else F.lit(False))
     cells = _read_cells(spark, path).filter(cell_filter)
-    if pair_df is None:
-        # Explicit schema (not inference): an EMPTY query batch must
-        # yield an empty result, and schema inference raises on an
-        # empty row list.
-        pair_schema = StructType([
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField("cell", cells.schema["cell"].dataType),
-        ])
-        pair_df = spark.createDataFrame(pairs, pair_schema)
-    scored = (cells.join(F.broadcast(pair_df), "cell")
-              .join(F.broadcast(queries), query_id)
-              .withColumn(score_col, cosine_pairs_kernel(
-                  F.col(vec_col), F.col(queries_vec))))
-    return bucketed_topk(scored, query_id,
-                         [F.desc(score_col), F.asc(id_col)], k,
-                         id_col).drop(queries_vec)
+    scored = record_topk(cells, q_rows, qfield, k, vec_col, score_col,
+                         cells.columns, [id_col], routes=routes,
+                         route_col="cell")
+    out = bucketed_topk(scored, query_id,
+                        [F.desc(score_col), F.asc(id_col)], k, id_col)
+    qattrs = [c for c in queries.columns if c not in (query_id, queries_vec)]
+    if qattrs:
+        out = out.join(F.broadcast(queries.select(query_id, *qattrs)),
+                       query_id)
+    return out.select(query_id, "cell",
+                      *[c for c in cells.columns if c != "cell"],
+                      *qattrs, score_col)
 
 
 def signlsh_buckets(df: DataFrame, hyperplanes: list[list[float]],

@@ -9,10 +9,13 @@ Spark-first physical strategy:
   driver merge. O(N) work, O(partitions·k) merge, NO global sort and NO
   shuffle of all rows. This scales linearly with executors; the reference
   does an O(N log N) single-threaded sort (collection.go:98-103).
-- **batch of queries** → broadcast the (small) query set, one scan of the
-  big table computes every (query, record) score, ``row_number()`` window
-  partitioned by query keeps k each. One pass over the data regardless of
-  the number of queries — the scan cost is amortized across the batch.
+- **batch of queries** → the (small) query set is collected and rides
+  the scorer's closure; one scan of the big table scores each record
+  against every query and keeps only each query's k best rows per Arrow
+  batch (``record_topk``), then a two-stage ``row_number()`` window
+  partitioned by query merges those local winners into k each — local
+  top-k, then global merge. One pass over the data regardless of the
+  number of queries, and at most k·M rows per batch leave Python.
 - **all-pairs similarity join** → same shape with both sides potentially
   large; the LSH/IVF variants in ``operators.ann`` cut the candidate set
   at scale.
@@ -37,12 +40,13 @@ def _batch_scorer_mode() -> str:
     bytes once"): the ``pair`` form materializes the broadcast cross
     join, so every record VECTOR crosses the scoring stage M times (once
     per query) — at the production batch shape (M=100) that is 100× the
-    bytes the decision needs. ``record`` scores via mapInPandas over the
-    records alone with the collected query batch riding the closure:
-    each record vector is read ONCE and scored against all M queries
-    vectorized — bit-identical scores (the same strict left-fold op
-    sequence; pinned by tests/test_topk.py), ~M× less scoring-stage
-    input.
+    bytes the decision needs. ``record`` scores via mapInArrow over the
+    records alone with the collected query batch riding the closure
+    (``record_topk``): each record vector is read ONCE and scored
+    against all M queries vectorized — bit-identical scores (the same
+    strict left-fold op sequence; pinned by tests/test_topk.py), ~M×
+    less scoring-stage input — and only each query's k best rows per
+    Arrow batch leave Python.
 
     Default is ``record`` — unlike the cosine/text/kmeans kernel
     dispatches, this one wins at BOTH measured shapes, so no crossover
@@ -56,94 +60,203 @@ def _batch_scorer_mode() -> str:
     return os.environ.get("SPARK_GRAFT_BATCH_SCORER", "record").lower()
 
 
-def _record_form_scores(records, queries, records_vec: str,
-                        queries_vec: str, query_id: str, records_id: str,
-                        score_col: str, tie_cols: list[str]):
-    """(query_id, records_id, score, *tie_cols) for EVERY (record, query)
-    pair — the slim scored relation of batch_topk's record form. Each
-    record row enters the Python worker once; scores against the M
-    closure queries are computed with the EXACT per-pair op sequence of
-    ``cosine_similarity`` (strict left fold per dim, vectorized across
-    rows AND queries; den-before-dot on length mismatch; zero-norm → 0.0;
-    NULL vector → NULL; NULL element → NaN per the kernel contract —
-    Arrow renders it NaN before the fold, exactly like the pair twins)."""
+def _order_keys(arr) -> list:
+    """numpy sort keys (most significant first) that order the Arrow
+    array ``arr`` like Spark's ``asc`` — NULLs first; for floating types
+    NaN after every number and -0.0 == 0.0. Arrow's own rank puts NaN
+    beside the NULLs, so floats get an explicit (class, value) pair;
+    every other type ranks densely in Arrow (binary order for strings,
+    as Spark's UTF8_BINARY compares)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_floating(arr.type):
+        v = arr.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+        cls = np.where(~valid, 0, np.where(np.isnan(v), 2, 1))
+        return [cls, np.where(cls == 1, v, 0.0)]
+    return [pc.rank(arr, sort_keys="ascending", null_placement="at_start",
+                    tiebreaker="dense").to_numpy().astype(np.int64)]
+
+
+def _score_keys(s, null):
+    """(class, -score) sort keys for Spark's ``desc(score)``: NaN first
+    (Spark orders NaN above every double), then score descending, NULL
+    last."""
+    import numpy as np
+
+    nan = np.isnan(s) & ~null
+    cls = np.where(null, 2, np.where(nan, 0, 1))
+    return cls, np.where(cls == 1, -s, 0.0)
+
+
+def _first_k(S, null, ties: list, k: int):
+    """(row, column) positions of each column's first ``k`` entries of
+    the score block ``S`` (rows × queries) in the total order
+    (``desc(score)``, then the per-row ``ties`` keys ascending).
+
+    O(rows) per column: ``np.partition`` on a float key that is monotone
+    in that order finds the k-th key; every entry up to and including the
+    boundary ties is a candidate, and only a column with more than k
+    candidates pays an exact lexsort — over its candidates alone."""
+    import numpy as np
+
+    if S.shape[0] <= k:
+        return np.nonzero(np.ones(S.shape, dtype=bool))
+    cls, neg = _score_keys(S, null)
+    key = np.where(cls == 1, neg, np.where(cls == 0, -np.inf, np.inf))
+    kth = np.partition(key, k - 1, axis=0)[k - 1]
+    cand = key <= kth
+    for j in np.flatnonzero(cand.sum(axis=0) > k):
+        rows = np.flatnonzero(cand[:, j])
+        order = np.lexsort([t[rows] for t in reversed(ties)]
+                           + [neg[rows, j], cls[rows, j]])
+        cand[rows[order[k:]], j] = False
+    return np.nonzero(cand)
+
+
+def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
+                records_vec: str, score_col: str, keep_cols: list[str],
+                tie_cols: list[str], routes: dict | None = None,
+                route_col: str | None = None) -> DataFrame:
+    """The record-form scorer: (query_id, *keep_cols, score_col) holding,
+    for every Arrow batch of ``records``, only each query's ``k`` best
+    rows in the order ``desc(score)``, ``asc(tie_cols)`` — the local
+    top-k that ``bucketed_topk`` then merges globally (global top-k ⊆
+    union of per-batch top-k). At most k·M rows per batch leave Python
+    instead of every (record, query) pair.
+
+    ``q_rows`` are the collected (query_id, query vector) rows, riding
+    the closure; ``qid_field`` is the query_id StructField. Each record
+    row enters the worker once and is scored against its queries with
+    the EXACT op sequence of ``cosine_similarity`` (strict left fold per
+    dim, vectorized across rows and queries — no matmul; den-before-dot
+    on a length mismatch; zero norm → 0.0; NULL vector → NULL; a NULL
+    element on either side → NaN per the kernel contract), so kept
+    scores are bit-identical to the pair kernel.
+
+    ``routes`` (``route_col`` value → indices into ``q_rows``) scores a
+    row only against the queries that may rank it — IVF's probe pairs;
+    a row whose value has no route is dropped. Without routes every row
+    meets every query. The record columns pass through as Arrow data,
+    untouched, so any payload can ride along."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from go_simple_embedding_database_spark.functions.kernels import (
-        _fold_norm_block, _stack_f64)
+        _fold_norm_block)
 
-    q_rows = queries.select(query_id, queries_vec).collect()
-    qids = [r[0] for r in q_rows]
+    query_id = qid_field.name
+    keep_cols = list(dict.fromkeys(keep_cols))
+    qid_arr = pa.array([r[0] for r in q_rows],
+                       type=to_arrow_type(qid_field.dataType))
     qvecs = [None if r[1] is None else
-             np.asarray([float(v) for v in r[1]], dtype=np.float64)
-             for r in q_rows]
-    qnorm = [None if q is None else _fold_norm_block(q.reshape(1, -1))[0]
-             for q in qvecs]
-    m = len(qids)
-    in_cols = list(dict.fromkeys([records_id, records_vec] + tie_cols))
-    keep_cols = [c for c in in_cols if c != records_vec]
+             np.asarray([np.nan if v is None else float(v) for v in r[1]],
+                        dtype=np.float64) for r in q_rows]
+    m = len(qvecs)
+    qdim = np.asarray([-1 if q is None else len(q) for q in qvecs],
+                      dtype=np.int64)
+    qnorm = np.asarray([np.nan if q is None else
+                        _fold_norm_block(q.reshape(1, -1))[0]
+                        for q in qvecs])
+    # one (M × dim) matrix per query dimensionality, zero rows elsewhere
+    qmats = {int(d): np.stack([q if q is not None and len(q) == d
+                               else np.zeros(d) for q in qvecs])
+             for d in set(qdim.tolist()) if d >= 0}
+    route_idx = None if routes is None else {
+        c: np.asarray(sorted(set(js)), dtype=np.int64)
+        for c, js in routes.items()}
+    in_cols = list(dict.fromkeys(
+        [records_vec, *keep_cols, *tie_cols]
+        + ([route_col] if routes is not None else [])))
 
-    def score_batches(batches):
-        for pdf in batches:
-            n = len(pdf)
-            xv = pdf[records_vec].to_numpy()
-            vals = np.zeros((n, m), dtype=np.float64)
-            mask = np.zeros((n, m), dtype=bool)
-            groups: dict[int, list[int]] = {}
-            null_rows: list[int] = []
-            for i in range(n):
-                if xv[i] is None:
-                    null_rows.append(i)
-                else:
-                    groups.setdefault(len(xv[i]), []).append(i)
-            if null_rows:
-                mask[np.asarray(null_rows), :] = True
-            for dx, idxs in groups.items():
-                ii = np.asarray(idxs)
-                X = _stack_f64([xv[i] for i in idxs])
-                # record-side norms: one fold per record, bit-identical
-                # to the per-pair fold (deterministic op sequence)
-                nxs = _fold_norm_block(X)
-                for j, q in enumerate(qvecs):
-                    if q is None:
-                        mask[ii, j] = True
-                    elif len(q) != dx:
-                        # den-before-dot mismatch rule (kernels module)
-                        den = nxs * qnorm[j]
-                        zero = den == 0.0
-                        vals[ii[zero], j] = 0.0
-                        mask[ii[~zero], j] = True
+    def score_block(X, J):
+        """Scores and NULL mask of rows X (n × d) against queries J."""
+        d = X.shape[1]
+        S = np.zeros((len(X), len(J)))
+        null = np.zeros(S.shape, dtype=bool)
+        nx = _fold_norm_block(X)
+        den = nx[:, None] * qnorm[J][None, :]
+        same = qdim[J] == d
+        # length mismatch: den-before-dot (kernels module) — a zero
+        # denominator is 0.0, anything else NULL; a NULL query has a NaN
+        # norm, so it lands here as NULL too
+        null[:, ~same] = den[:, ~same] != 0.0
+        if same.any():
+            QT = qmats[d][J[same]].T
+            XT = X.T.copy()
+            dot = np.zeros((len(X), QT.shape[1]))
+            for t in range(d):
+                dot += XT[t][:, None] * QT[t][None, :]
+            dn = den[:, same]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                S[:, same] = np.where(dn == 0.0, 0.0, dot / dn)
+        return S, null
+
+    def topk_batches(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0 or m == 0 or k < 1:
+                continue
+            vec = batch.column(records_vec)
+            lens = (vec.value_lengths().fill_null(-1)
+                    .to_numpy(zero_copy_only=False).astype(np.int64))
+            # a NULL element renders NaN here, as in the pair twins
+            flat = (vec.flatten().cast(pa.float64())
+                    .to_numpy(zero_copy_only=False))
+            width = np.maximum(lens, 0)
+            starts = np.cumsum(width) - width
+            if route_idx is None:
+                groups = [(np.arange(n), np.arange(m))]
+            else:
+                cell = batch.column(route_col).to_numpy(zero_copy_only=False)
+                uniq, inv = np.unique(cell, return_inverse=True)
+                groups = [(np.flatnonzero(inv == u), route_idx[c])
+                          for u, c in enumerate(uniq.tolist())
+                          if c in route_idx]
+            ties = [key for c in tie_cols
+                    for key in _order_keys(batch.column(c))]
+            parts = []
+            for R, J in groups:
+                lr = lens[R]
+                for d in np.unique(lr).tolist():
+                    Rd = R[lr == d]
+                    if d < 0:
+                        S = np.zeros((len(Rd), len(J)))
+                        null = np.ones(S.shape, dtype=bool)
                     else:
-                        dot = np.zeros(len(ii))
-                        for d in range(dx):
-                            dot = dot + X[:, d] * q[d]
-                        den = nxs * qnorm[j]
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            vals[ii, j] = np.where(den == 0.0, 0.0,
-                                                   dot / den)
-            rep = np.repeat(np.arange(n), m)
-            out = pdf[keep_cols].iloc[rep].reset_index(drop=True)
-            out[query_id] = pd.Series(qids * n, dtype=object) \
-                if not isinstance(qids[0] if qids else 0, (int, float)) \
-                else np.tile(np.asarray(qids), n)
-            # FloatingArray(values, mask): stored NaN stays NaN, only
-            # masked entries are SQL NULL (the kernels-module rule)
-            out[score_col] = pd.Series(
-                pd.arrays.FloatingArray(vals.reshape(-1), mask.reshape(-1)))
-            yield out[[query_id, *keep_cols, score_col]]
+                        X = flat[starts[Rd][:, None] + np.arange(d)]
+                        S, null = score_block(X, J)
+                    r, c = _first_k(S, null, [t[Rd] for t in ties], k)
+                    parts.append((Rd[r], J[c], S[r, c], null[r, c]))
+            if not parts:
+                continue
+            rows, qs, s, null = (np.concatenate(p) for p in zip(*parts))
+            if len(parts) > 1:
+                # several blocks can hold one query's candidates: one
+                # exact sort by (query, score order, ties), then each
+                # query's first k
+                cls, neg = _score_keys(s, null)
+                order = np.lexsort([t[rows] for t in reversed(ties)]
+                                   + [neg, cls, qs])
+                qsorted = qs[order]
+                first = np.searchsorted(qsorted, qsorted, side="left")
+                keep = order[np.arange(len(order)) - first < k]
+                rows, qs, s, null = rows[keep], qs[keep], s[keep], null[keep]
+            take = pa.array(rows)
+            yield pa.RecordBatch.from_arrays(
+                [qid_arr.take(pa.array(qs))]
+                + [batch.column(c).take(take) for c in keep_cols]
+                + [pa.array(s, mask=null, type=pa.float64())],
+                names=[query_id, *keep_cols, score_col])
 
-    qf = queries.schema[query_id]
-    fields = [f"`{query_id}` {qf.dataType.simpleString()}"]
-    for c in keep_cols:
-        fields.append(
-            f"`{c}` {records.schema[c].dataType.simpleString()}")
-    fields.append(f"`{score_col}` double")
-    return (records.select(*in_cols)
-            .mapInPandas(score_batches, ", ".join(fields)))
-
-
+    schema = StructType(
+        [qid_field] + [records.schema[c] for c in keep_cols]
+        + [StructField(score_col, DoubleType())])
+    return records.select(*in_cols).mapInArrow(topk_batches, schema)
 
 
 def bucketed_topk(scored: DataFrame, group_col: str, order: list[Column],
@@ -217,19 +330,22 @@ def batch_topk(
 
     The query side rides with every task either way (queries are small
     by construction — the working set of a request batch): in the
-    default ``record`` scoring form (round 11, see ``_batch_scorer_mode``)
-    the collected query batch travels in the mapInPandas closure and
-    each record VECTOR enters the scoring stage exactly once for all M
-    queries; in the ``pair`` form (env fallback, and the shape used when
-    ``records_id`` is absent or a tie column lives on the query side)
-    the queries are broadcast and the cross join materializes M pair
-    rows per record. The big records table is scanned once in both. The per-query selection is a TWO-stage window: stage 1
-    partitions by (query, bucket) so every query's candidates spread over
-    ``buckets`` tasks (a single ``partitionBy(query_id)`` window would
-    funnel ALL N scored rows of a query through one task — an OOM/straggler
-    at the 100 TB design point; AQE cannot split a window partition);
-    stage 2 re-ranks the surviving ``buckets × k`` rows per query — tiny.
-    Global top-k ⊆ union of per-bucket top-k, so the result is identical.
+    default ``record`` scoring form (see ``_batch_scorer_mode``) the
+    collected query batch travels in the ``record_topk`` closure, each
+    record VECTOR enters the scoring stage exactly once for all M
+    queries, and each Arrow batch emits only its k best rows per query
+    (at most k·M rows, not N·M); in the ``pair`` form (env fallback, and
+    the shape used when ``records_id`` is absent or a tie column lives
+    on the query side) the queries are broadcast and the cross join
+    materializes M pair rows per record. The big records table is
+    scanned once in both. The global per-query selection is a TWO-stage
+    window: stage 1 partitions by (query, bucket) so every query's
+    candidates spread over ``buckets`` tasks (a single
+    ``partitionBy(query_id)`` window would funnel ALL scored rows of a
+    query through one task — an OOM/straggler at the 100 TB design
+    point; AQE cannot split a window partition); stage 2 re-ranks the
+    surviving ``buckets × k`` rows per query — tiny. Global top-k ⊆
+    union of per-batch and per-bucket top-k, so the result is identical.
     ``row_number`` (not ``rank``) reproduces exactly-k-with-arbitrary-ties.
 
     With ``records_id`` (a unique record key) the shuffle carries only
@@ -269,10 +385,12 @@ def batch_topk(
     if (_batch_scorer_mode() == "record"
             and all(c in records.columns for c in tie_cols)):
         # Record form (§8): each record vector enters the scoring stage
-        # ONCE for all M queries instead of M times as pair rows.
-        slim = _record_form_scores(records, queries, records_vec,
-                                   queries_vec, query_id, records_id,
-                                   score_col, tie_cols)
+        # ONCE for all M queries, and only each query's k best rows per
+        # Arrow batch leave it.
+        q_rows = queries.select(query_id, queries_vec).collect()
+        slim = record_topk(records, q_rows, queries.schema[query_id], k,
+                           records_vec, score_col, [records_id, *tie_cols],
+                           tie_cols)
     else:
         joined = records.crossJoin(F.broadcast(queries))
         scored = joined.withColumn(

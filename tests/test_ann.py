@@ -240,9 +240,14 @@ def test_ivf_query_index_batch_equals_per_query(spark, embeddings,
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     qset = (emb.filter(F.col("vec_id").isin(qids))
             .select(F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("query_embedding")))
+                    F.col("embedding").alias("query_embedding"),
+                    F.concat(F.lit("q"), F.col("vec_id").cast("string"))
+                    .alias("tag")))
     batched = ann.ivf_query_index_batch(spark, path, qset, 10, nprobe=2)
-    got = {(r.query_id, r.vec_id) for r in batched.collect()}
+    rows = batched.collect()
+    # extra query columns ride along onto every answer row
+    assert all(r.tag == f"q{r.query_id}" for r in rows)
+    got = {(r.query_id, r.vec_id) for r in rows}
     want = set()
     for qid in qids:
         qv = [float(v) for v in
@@ -294,9 +299,9 @@ def test_ivf_index_empty_source_queries_empty(spark, embeddings, tmp_path):
                        .alias("query_embedding"))
     assert ann.ivf_query_index_batch(spark, path, qset, 5).count() == 0
     # NON-empty batch against the empty index: the short-circuit decides
-    # "nothing probeable" from |C| = 0 alone — before the capped query
-    # collect, which with |C| = 0 would degenerate to max_q = budget and
-    # pull the whole batch just to return nothing (ADVICE r05)
+    # "nothing probeable" from |C| = 0 alone — before the query collect,
+    # which would pull the whole batch just to return nothing
+    # (ADVICE r05)
     live = embeddings.select(F.col("vec_id").alias("query_id"),
                              F.col("embedding").cast("array<double>")
                              .alias("query_embedding")).limit(7)
@@ -364,9 +369,8 @@ def test_ivf_batch_driver_and_spark_ranking_agree(spark, tmp_path):
 
 def test_ivf_batch_capped_collect_overflow_falls_back(spark, embeddings,
                                                       centroids, tmp_path):
-    """The gate bounds what the driver MATERIALIZES, not just what it
-    computes: with a budget admitting only 2 queries, a 4-query batch
-    must overflow the capped limit-collect and take the Spark ranking —
+    """The ranking gate counts the whole batch: with a budget admitting
+    only 2 queries, a 4-query batch must take the Spark ranking —
     returning exactly the unlimited driver path's rows."""
     path = str(tmp_path / "ivfcap")
     ann.ivf_write_index(embeddings, centroids, path)

@@ -75,19 +75,20 @@ def test_similarity_join_threshold_only(spark, embeddings):
 
 def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
                                                  monkeypatch):
-    """Round-11 record-form scorer (SPARK_GRAFT_BATCH_SCORER=record, the
-    §8 move-heavy-bytes-once shape): the slim scored relation is
-    bit-identical to the pair form over EVERY (record, query) pair —
-    including NULL vectors, NULL elements (NaN per the kernel contract),
-    length mismatches and zero norms — and the winners match. Default
-    stays the pair form (plan unchanged); record mode plans MapInPandas
-    and no cross join before the window."""
+    """The record-form scorer (``record_topk``, batch_topk's default
+    scoring form) is bit-identical to the pair kernel over EVERY
+    (record, query) pair — with k at least the record count nothing is
+    truncated — including NULL vectors, NULL elements on either side
+    (NaN per the kernel contract), length mismatches and zero norms; and
+    batch_topk's winners match the pair form
+    (``SPARK_GRAFT_BATCH_SCORER=pair``). The record form plans
+    MapInArrow."""
     import struct
 
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel)
     from go_simple_embedding_database_spark.operators.topk import (
-        _record_form_scores, batch_topk)
+        batch_topk, record_topk)
 
     base = embeddings.select("vec_id", F.col("embedding")
                              .cast("array<double>").alias("embedding"))
@@ -96,40 +97,144 @@ def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
          (90003, [0.0, 0.0, 0.0]), (90004, [1.0, 2.0])],
         "vec_id long, embedding array<double>")
     records = base.unionByName(weird)
+    holed = [float(v) for v in
+             base.filter(F.col("vec_id") == 2).first().embedding]
+    holed[1] = None
     queries = (base.filter(F.col("vec_id") < 2)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_embedding"))
                .unionByName(spark.createDataFrame(
-                   [(80001, None), (80002, [1.0, 0.0])],
+                   [(80001, None), (80002, [1.0, 0.0]), (80003, holed)],
                    "query_id long, query_embedding array<double>")))
 
     def b(x):
         return None if x is None else struct.pack("<d", x)
 
-    monkeypatch.delenv("SPARK_GRAFT_BATCH_SCORER", raising=False)
     pair = {(r.query_id, r.vec_id): b(r.s) for r in
             records.crossJoin(F.broadcast(queries)).select(
                 "query_id", "vec_id",
                 cosine_pairs_kernel(F.col("embedding"),
                                     F.col("query_embedding")).alias("s"))
             .collect()}
-    rec_slim = _record_form_scores(
-        records, queries, "embedding", "query_embedding", "query_id",
-        "vec_id", "s", [])
-    rec = {(r.query_id, r.vec_id): b(r.s) for r in rec_slim.collect()}
-    assert rec == pair and len(rec) == records.count() * queries.count()
+    n_rec = records.count()
+    every = record_topk(
+        records, queries.collect(), queries.schema["query_id"], n_rec,
+        "embedding", "s", ["vec_id"], [])
+    rec = {(r.query_id, r.vec_id): b(r.s) for r in every.collect()}
+    assert rec == pair and len(rec) == n_rec * queries.count()
+    assert all(rec[(80003, v)] == b(float("nan")) for v in (0, 1, 2))
 
-    # end-to-end winners + dispatch plan shape
+    # end-to-end winners against the pair form, and the plan shape
+    monkeypatch.setenv("SPARK_GRAFT_BATCH_SCORER", "pair")
     pw = sorted(map(tuple, batch_topk(
         records, queries, 3, score_col="sim", tie_break=["vec_id"],
         records_id="vec_id").select("query_id", "vec_id", "sim")
         .collect()))
-    monkeypatch.setenv("SPARK_GRAFT_BATCH_SCORER", "record")
+    monkeypatch.delenv("SPARK_GRAFT_BATCH_SCORER")
     rdf = batch_topk(records, queries, 3, score_col="sim",
                      tie_break=["vec_id"], records_id="vec_id")
     rw = sorted(map(tuple, rdf.select("query_id", "vec_id", "sim")
                     .collect()))
     plan = formatted_plan(rdf)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan and "CartesianProduct" not in plan
     assert [(a, c, b(s)) for a, c, s in pw] == \
            [(a, c, b(s)) for a, c, s in rw]
+
+
+def test_record_topk_truncation_parity(spark):
+    """Per-batch truncation inside the record scorer keeps exactly the
+    rows a single ``row_number`` window over the pair-form scores ranks
+    first — unrouted (through batch_topk) and routed (the IVF shape) —
+    with bitwise-equal scores. Several tiny Arrow batches per partition
+    and k above a batch's row count; NaN scores (record-side NULL
+    element) rank first, NULL scores (NULL vector, dim mismatch, NULL
+    query vector) last; zero norms score 0.0; heavy ties at the k-th
+    score, broken by float (NaN/NULL/-0.0), string (NULL) and id
+    columns or left arbitrary; a string query_id."""
+    import struct
+
+    from pyspark.sql import Window
+
+    from go_simple_embedding_database_spark.functions.kernels import (
+        cosine_pairs_kernel)
+    from go_simple_embedding_database_spark.operators.topk import (
+        batch_topk, bucketed_topk, record_topk)
+
+    nan = float("nan")
+    vals = [-1.0, 0.0, 1.0, 2.0]
+    rows = []
+    for i in range(60):
+        vec = [vals[(i * 7 + d * (i % 5 + 1)) % 4] for d in range(4)]
+        # few distinct w, so score ties fall through to w, then grp
+        w = [None, -0.0, nan, 0.0][i % 4]
+        grp = [None, "a", "b", "é"][(i // 4) % 4]
+        rows.append((i, vec, w, grp))
+    rows += [(100, [1.0, None, 0.5, 0.0], 0.0, "a"),   # NULL element
+             (101, None, 0.0, "a"),                    # NULL vector
+             (102, [1.0, 2.0], 0.0, "a"),              # dim mismatch
+             (103, [0.0, 0.0, 0.0, 0.0], 0.0, "a"),    # zero norm
+             (104, [0.0, 0.0], 0.0, "a")]              # zero, mismatch
+    records = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, w double, grp string"
+    ).repartition(2).withColumn("cell", F.col("vec_id") % 3)
+    queries = spark.createDataFrame(
+        [("q0", [1.0, 0.0, 1.0, -1.0]), ("q1", [2.0, 1.0, 0.0, 1.0]),
+         ("q2", [0.0, 0.0, 0.0, 0.0]), ("q3", [1.0, None, 1.0, 1.0]),
+         ("q4", None), ("q5", [1.0, 1.0, 1.0])],
+        "query_id string, query_embedding array<double>")
+    q_rows = queries.collect()
+    routes = {0: [0, 1, 4], 1: [1, 2, 3], 2: [0, 5]}
+    route_pairs = spark.createDataFrame(
+        [(q_rows[j].query_id, c) for c, js in routes.items() for j in js],
+        "query_id string, cell long")
+    pairs = records.crossJoin(queries).withColumn(
+        "s", cosine_pairs_kernel(F.col("embedding"),
+                                 F.col("query_embedding")))
+
+    def b(x):
+        return b"NULL" if x is None else struct.pack("<d", x)
+
+    def reference(scored, k, ties):
+        order = [F.desc("s")] + [F.asc(c) for c in ties]
+        w = Window.partitionBy("query_id").orderBy(*order)
+        return (scored.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= k)
+                .select("query_id", "vec_id", "s").collect())
+
+    exact = {(r.query_id, r.vec_id): b(r.s) for r in pairs.collect()}
+
+    def check(got, want, total):
+        if total:
+            assert sorted((q, v, b(s)) for q, v, s in got) == \
+                   sorted((q, v, b(s)) for q, v, s in want)
+            return
+        # arbitrary tie fill: the same kept scores per query, bitwise,
+        # and every winner carries its own exact pair score
+        assert sorted((q, b(s)) for q, _, s in got) == \
+               sorted((q, b(s)) for q, _, s in want)
+        assert all(exact[(q, v)] == b(s) for q, v, s in got)
+
+    saved = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for k in (3, 10):
+            for ties in (["w", "grp", "vec_id"], ["grp", "w", "vec_id"],
+                         []):
+                got = batch_topk(
+                    records, queries, k, score_col="s",
+                    tie_break=ties or None, records_id="vec_id",
+                    attach_payload=False).select("query_id", "vec_id", "s")
+                check(got.collect(), reference(pairs, k, ties), bool(ties))
+                order = [F.desc("s")] + [F.asc(c) for c in ties]
+                routed = bucketed_topk(
+                    record_topk(records, q_rows, queries.schema["query_id"],
+                                k, "embedding", "s",
+                                ["vec_id", "cell", *ties], ties,
+                                routes=routes, route_col="cell"),
+                    "query_id", order, k, "vec_id")
+                check(routed.select("query_id", "vec_id", "s").collect(),
+                      reference(pairs.join(route_pairs,
+                                           ["query_id", "cell"]), k, ties),
+                      bool(ties))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", saved)

@@ -31,12 +31,16 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "scan stage; `ReadSchema` shows only the columns used."),
     "batch_topk": (
         "Batched top-k (many query vectors at once)",
-        "The query set is the BROADCAST side (`BroadcastExchange` on the "
-        "queries relation, never on the records corpus) and the per-query "
-        "ranking runs as a two-stage window: stage 1 partitions by "
-        "(query_id, bucket) so one query's candidates never funnel into a "
-        "single task; the slim projection keeps embeddings out of every "
-        "exchange (`Exchange` operands carry id+score only)."),
+        "The query set is collected once and rides the scorer's closure: "
+        "`MapInArrow` over the corpus scan scores each record against "
+        "every query and emits only each query's k best rows per Arrow "
+        "batch, so no cross join and at most k·M rows per batch leave "
+        "Python. The global per-query ranking runs as a two-stage window: "
+        "stage 1 partitions by (query_id, bucket) so one query's "
+        "candidates never funnel into a single task; the slim projection "
+        "keeps embeddings out of every exchange (`Exchange` operands "
+        "carry id+score only). The only broadcast is the k·M winners "
+        "joined back onto the records for the payload."),
     "similarity_join_knn": (
         "k-NN similarity join (queries x corpus)",
         "Broadcast orientation: the SMALL query side broadcasts "
@@ -64,16 +68,15 @@ COMMENTARY: dict[str, tuple[str, str]] = {
     "ann_recall": (
         "ANN recall evaluation (exact side batched)",
         "The exact reference side runs ONE corpus scan for the whole "
-        "query batch via batch_topk (broadcast query set + two-stage "
-        "bucketed window, slim id+score shuffle; round 2 scanned once "
-        "per query). In THIS plan the exact side appears as `Scan "
-        "ExistingRDD` — topk_recall materializes its reference via "
-        "lazy localCheckpoint so the hit join and the denominator read "
-        "the tiny winners once instead of re-running the exact "
-        "pipeline; the single-corpus-scan property of the pre-"
-        "checkpoint construction is pinned by tests/test_plans.py::"
+        "query batch via batch_topk (per-batch top-k inside the "
+        "`MapInArrow` scorer + two-stage bucketed window, slim id+score "
+        "shuffle; round 2 scanned once per query); its single-corpus-"
+        "scan property is pinned by tests/test_plans.py::"
         "test_ann_recall_exact_side_single_corpus_scan. The IVF side "
-        "stays partition-pruned per probe."),
+        "reads the cells table once, partition-pruned to the union of "
+        "probed cells, and scores each cell row through the same "
+        "scorer against only the queries that probe its cell — no "
+        "(query, cell) pair relation and no join back to the queries."),
     "ann_ivf": (
         "IVF ANN query via the materialized index",
         "The per-query scan must show `PartitionFilters: [cell IN (..)]` "
