@@ -22,7 +22,9 @@ Two evaluators, one semantics:
   over 200k pairs at sf0.1). ~10× per-row throughput for dim=64 (guide
   §4.2: batch work belongs in vectorized native code). numpy's own
   ``dot``/``einsum`` are deliberately NOT used — pairwise summation
-  rounds differently from a left fold (same argument as ``cosine_py``).
+  rounds differently from a left fold. The batch scorer
+  (``operators.topk.record_topk_batches``) runs the same fold across
+  rows and queries at once.
 
   Used by the bulk scoring paths (operators.topk, operators.ann) where
   the input columns are the narrow (id, vector) projections those
@@ -314,42 +316,6 @@ def cosine_scores_arrow(vec: Column, qvec: list[float]) -> Column:
         return pd.Series(pd.arrays.FloatingArray(res, res_null))
 
     return _score(_as_double(vec))
-
-
-def cosine_py(x: list[float], y: list[float]) -> float:
-    """Bit-exact pure-Python twin of ``cosine_similarity`` for TINY
-    driver-side relations (ranking a handful of IVF centroids against a
-    query batch — ``operators.ann.ivf_query_index_batch``).
-
-    Exactness argument: the Catalyst kernel is a sequential left fold of
-    correctly-rounded f64 ops (``aggregate`` over ``zip_with`` — each
-    ``acc + a*b`` step is one IEEE-754 multiply then one add), and this
-    loop performs the identical op sequence, so every intermediate — and
-    therefore the comparison order any top-k derives — is bit-identical.
-    numpy is deliberately NOT used here: its pairwise-summation dot
-    product rounds differently from a left fold.
-
-    Zero-norm → 0.0 (reference parity, utils/utils.go:19-21).
-    Length mismatch → ValueError: the Catalyst kernel's ``zip_with``
-    poisons the fold to NULL, making mismatches VISIBLE — a silent
-    zip-truncation here would instead rank centroids by a truncated dot
-    product (ADVICE r04)."""
-    import math
-
-    if len(x) != len(y):
-        raise ValueError(
-            f"cosine_py: length mismatch ({len(x)} vs {len(y)})")
-    dot = 0.0
-    for a, b in zip(x, y):
-        dot = dot + float(a) * float(b)
-    nx = 0.0
-    for a in x:
-        nx = nx + float(a) * float(a)
-    ny = 0.0
-    for b in y:
-        ny = ny + float(b) * float(b)
-    den = math.sqrt(nx) * math.sqrt(ny)
-    return 0.0 if den == 0.0 else dot / den
 
 
 def well_formed_vector(v: Column, dim: int) -> Column:

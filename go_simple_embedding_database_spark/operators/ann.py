@@ -331,25 +331,11 @@ def ivf_query_index(spark, path: str, qvec: list[float], k: int,
                               score_col=score_col, tie_break=[id_col])
 
 
-# Driver-side centroid ranking runs kernels.cosine_py — pure Python,
-# deliberately (bit-exact left fold; numpy's pairwise summation rounds
-# differently), which makes it ~100x slower per element than numpy.
-# Above this |centroids| * |queries| * dim element-op budget (~a few
-# hundred ms of single-threaded driver compute) the ranking falls back
-# to a Spark ranking through topk.record_topk: same kernel semantics
-# (cosine_py and the scorer both run the kernel's left fold), same total
-# order (score desc, centroid_id asc), so the probe sets are identical —
-# pinned by
-# tests/test_ann.py::test_ivf_batch_driver_and_spark_ranking_agree.
-IVF_DRIVER_RANK_MAX_OPS = 2_000_000
-
-
 def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
                           nprobe: int = 2, vec_col: str = "embedding",
                           id_col: str = "vec_id", score_col: str = "score",
                           query_id: str = "query_id",
-                          queries_vec: str = "query_embedding",
-                          driver_rank_max_ops: int | None = None) -> DataFrame:
+                          queries_vec: str = "query_embedding") -> DataFrame:
     """Query a materialized IVF index for a WHOLE batch of queries with
     ONE pruned read of the cells table.
 
@@ -361,18 +347,15 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     pruned cells read below needs the probe list driver-side anyway, so
     a Spark job here would buy distribution nobody needs at the price of
     a whole scheduler round-trip (measured ~1 s of the ann_recall gate
-    query at sf0.1 — VERDICT r03 #3). ``kernels.cosine_py`` is the
-    bit-exact fold twin of the Catalyst kernel and the sort key is the
-    per-query path's exact tie order (score desc, centroid_id asc), so
-    probe sets are identical (pinned by
-    tests/test_ann.py::test_ivf_query_index_batch_equals_per_query).
-    SCALE GATE: above ``IVF_DRIVER_RANK_MAX_OPS`` element-ops
-    (|centroids| * |queries| * dim — a real IVF's 10^3-10^4 centroids
-    times a 10^3-query batch would be MINUTES of single-threaded
-    driver Python) the ranking runs as a Spark job over the centroid
-    relation instead (the scorer of step 3, unrouted, then the bucketed
-    window), bit-identically, and its probe pairs are collected;
-    (2) the cells table is read ONCE filtered to the UNION
+    query at sf0.1 — VERDICT r03 #3). The ranking is the scorer's own
+    per-batch function, ``topk.record_topk_batches``, over the collected
+    centroids as one Arrow batch: the kernel's bit-exact fold and the
+    per-query path's exact order (score desc, centroid_id asc), so probe
+    sets are identical (pinned by
+    tests/test_ann.py::test_ivf_query_index_batch_equals_per_query), and
+    a malformed query vector (NULL, NULL element, wrong dim) scores
+    NULL/NaN instead of raising. Its cost is one |centroids| × |queries|
+    score block; (2) the cells table is read ONCE filtered to the UNION
     of probed cells (still partition pruning — `cell IN (...)` at the
     file-listing level); (3) ``topk.record_topk`` scores each cell row
     only against the queries that probe its cell (a driver-side route
@@ -387,64 +370,38 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     Returns (query columns, index row columns, score_col) — exactly the
     rows the per-query path returns for each query, one plan.
     """
-    from go_simple_embedding_database_spark.functions.kernels import cosine_py
     from go_simple_embedding_database_spark.operators.topk import (
-        bucketed_topk, record_topk)
+        bucketed_topk, record_topk, record_topk_batches)
 
-    centroids_df = (spark.read.parquet(f"{path}/centroids")
-                    .select("centroid_id", "centroid"))
-    cent_rows = centroids_df.collect()
-    dim = len(cent_rows[0]["centroid"]) if cent_rows else 0
-    budget = (IVF_DRIVER_RANK_MAX_OPS if driver_rank_max_ops is None
-              else driver_rank_max_ops)
-    qfield = queries.schema[query_id]
+    cents = (spark.read.parquet(f"{path}/centroids")
+             .select("centroid_id", "centroid").toArrow().combine_chunks())
     routes: dict = {}
     q_rows: list = []
-    if cent_rows:
+    if cents.num_rows:
         # An empty index probes nothing: the empty relation is decided
         # BEFORE touching the query batch (ADVICE r05). Otherwise the
         # scorer needs every query vector on the driver anyway, so the
-        # batch (a request working set) is collected once, and the
-        # budget only picks where the centroid ranking runs.
+        # batch (a request working set) is collected once; the probe
+        # pairs are keyed by the query's index in q_rows — the key the
+        # routes need.
         q_rows = queries.select(query_id, queries_vec).collect()
-        max_q = budget // max(1, len(cent_rows) * dim)
-        if len(q_rows) <= max_q:
-            for i, qr in enumerate(q_rows):
-                ranked = sorted(
-                    ((cosine_py(qr[queries_vec], cr["centroid"]),
-                      cr["centroid_id"])
-                     for cr in cent_rows),
-                    key=lambda t: (-t[0], t[1]))
-                for _, cid in ranked[:nprobe]:
-                    routes.setdefault(cid, []).append(i)
-        else:
-            # scale fallback: the same ranking as a Spark job through the
-            # same scorer — its fold is cosine_py's bit-exact twin and the
-            # order (score desc, centroid_id asc) matches, so the probe
-            # pairs are the ones the Python loop would produce. What the
-            # gate bounds is driver CPU: the single-threaded
-            # |C| * |Q| * dim ranking loop never runs above budget. The
-            # |Q| * nprobe probe pairs are collected once, keyed by the
-            # query's index in q_rows — the key the routes need.
-            ranked = bucketed_topk(
-                record_topk(centroids_df,
-                            list(enumerate(qr[1] for qr in q_rows)),
-                            StructField("_q", LongType()), nprobe,
-                            "centroid", "_s", ["centroid_id"],
-                            ["centroid_id"]),
-                "_q", [F.desc("_s"), F.asc("centroid_id")], nprobe,
-                "centroid_id").collect()
-            for r in ranked:
-                routes.setdefault(r["centroid_id"], []).append(r["_q"])
+        rank = record_topk_batches(
+            list(enumerate(qr[1] for qr in q_rows)),
+            StructField("_q", LongType()), nprobe, "centroid", "_s",
+            ["centroid_id"], ["centroid_id"])
+        for b in rank(cents.to_batches()):
+            for i, cid in zip(b.column("_q").to_pylist(),
+                              b.column("centroid_id").to_pylist()):
+                routes.setdefault(cid, []).append(i)
     # Empty probe set (empty query batch OR empty index): isin([]) is
     # unbuildable; the empty relation is the correct result either way.
     probed_cells = sorted(routes)
     cell_filter = (F.col("cell").isin(probed_cells) if probed_cells
                    else F.lit(False))
     cells = _read_cells(spark, path).filter(cell_filter)
-    scored = record_topk(cells, q_rows, qfield, k, vec_col, score_col,
-                         cells.columns, [id_col], routes=routes,
-                         route_col="cell")
+    scored = record_topk(cells, q_rows, queries.schema[query_id], k,
+                         vec_col, score_col, cells.columns, [id_col],
+                         routes=routes, route_col="cell")
     out = bucketed_topk(scored, query_id,
                         [F.desc(score_col), F.asc(id_col)], k, id_col)
     qattrs = [c for c in queries.columns if c not in (query_id, queries_vec)]

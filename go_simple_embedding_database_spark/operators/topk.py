@@ -15,10 +15,14 @@ Spark-first physical strategy:
   batch (``record_topk``), then a two-stage ``row_number()`` window
   partitioned by query merges those local winners into k each — local
   top-k, then global merge. One pass over the data regardless of the
-  number of queries, and at most k·M rows per batch leave Python.
-- **all-pairs similarity join** → same shape with both sides potentially
-  large; the LSH/IVF variants in ``operators.ann`` cut the candidate set
-  at scale.
+  number of queries, and at most k·M rows per batch leave Python. Its
+  per-batch function, ``record_topk_batches``, is the one code that
+  ranks a query batch: ``batch_topk`` and the IVF batch probe's cell
+  scoring run it on the workers, the probe's centroid ranking on the
+  driver.
+- **all-pairs similarity join** → a broadcast cross join scored by the
+  pair kernel, both sides potentially large; the LSH/IVF variants in
+  ``operators.ann`` cut the candidate set at scale.
 
 Tie semantics: ``limit``/``row_number`` keep an arbitrary subset of rows
 tied at the k-th score — exactly k rows out, matching the reference's
@@ -33,31 +37,6 @@ from pyspark.sql import functions as F
 
 from go_simple_embedding_database_spark.functions.kernels import (
     cosine_pairs_kernel, cosine_scores_kernel)
-
-
-def _batch_scorer_mode() -> str:
-    """batch_topk scoring-form dispatch (round 11, guide §8 "move heavy
-    bytes once"): the ``pair`` form materializes the broadcast cross
-    join, so every record VECTOR crosses the scoring stage M times (once
-    per query) — at the production batch shape (M=100) that is 100× the
-    bytes the decision needs. ``record`` scores via mapInArrow over the
-    records alone with the collected query batch riding the closure
-    (``record_topk``): each record vector is read ONCE and scored
-    against all M queries vectorized — bit-identical scores (the same
-    strict left-fold op sequence; pinned by tests/test_topk.py), ~M×
-    less scoring-stage input — and only each query's k best rows per
-    Arrow batch leave Python.
-
-    Default is ``record`` — unlike the cosine/text/kmeans kernel
-    dispatches, this one wins at BOTH measured shapes, so no crossover
-    split is needed: the gate shape (M=3, 20k rows, alternating
-    in-process A/B on the declared query) measured pair 0.82 s vs
-    record 0.66 s median, and the production shape (100×, M=100,
-    SCALE.json batch_scorer_ab) measured pair-HOF 91.0 s / pair-Arrow
-    11.4 s / record 2.68 s. ``SPARK_GRAFT_BATCH_SCORER=pair`` restores
-    the broadcast-cross-join form (comparison/fallback)."""
-    import os
-    return os.environ.get("SPARK_GRAFT_BATCH_SCORER", "record").lower()
 
 
 def _order_keys(arr) -> list:
@@ -116,25 +95,27 @@ def _first_k(S, null, ties: list, k: int):
     return np.nonzero(cand)
 
 
-def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
-                records_vec: str, score_col: str, keep_cols: list[str],
-                tie_cols: list[str], routes: dict | None = None,
-                route_col: str | None = None) -> DataFrame:
-    """The record-form scorer: (query_id, *keep_cols, score_col) holding,
-    for every Arrow batch of ``records``, only each query's ``k`` best
-    rows in the order ``desc(score)``, ``asc(tie_cols)`` — the local
-    top-k that ``bucketed_topk`` then merges globally (global top-k ⊆
-    union of per-batch top-k). At most k·M rows per batch leave Python
-    instead of every (record, query) pair.
+def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
+                        score_col: str, keep_cols: list[str],
+                        tie_cols: list[str], routes: dict | None = None,
+                        route_col: str | None = None):
+    """The record-form scorer's per-batch function: an iterator of Arrow
+    record batches (holding ``records_vec``, ``keep_cols``, ``tie_cols``
+    and, when routed, ``route_col``) → for each batch, the
+    (query_id, *keep_cols, score_col) rows of each query's ``k`` best in
+    the order ``desc(score)``, ``asc(tie_cols)``. Workers run it inside
+    ``record_topk``'s mapInArrow; the IVF batch probe runs it on the
+    driver over its collected centroids (one batch, so the per-batch top-k
+    is the exact top-k).
 
     ``q_rows`` are the collected (query_id, query vector) rows, riding
     the closure; ``qid_field`` is the query_id StructField. Each record
-    row enters the worker once and is scored against its queries with
-    the EXACT op sequence of ``cosine_similarity`` (strict left fold per
-    dim, vectorized across rows and queries — no matmul; den-before-dot
-    on a length mismatch; zero norm → 0.0; NULL vector → NULL; a NULL
-    element on either side → NaN per the kernel contract), so kept
-    scores are bit-identical to the pair kernel.
+    row is scored against its queries with the EXACT op sequence of
+    ``cosine_similarity`` (strict left fold per dim, vectorized across
+    rows and queries — no matmul; den-before-dot on a length mismatch;
+    zero norm → 0.0; NULL vector → NULL; a NULL element on either side →
+    NaN per the kernel contract), so kept scores are bit-identical to the
+    pair kernel.
 
     ``routes`` (``route_col`` value → indices into ``q_rows``) scores a
     row only against the queries that may rank it — IVF's probe pairs;
@@ -144,7 +125,6 @@ def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from go_simple_embedding_database_spark.functions.kernels import (
         _fold_norm_block)
@@ -169,9 +149,6 @@ def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
     route_idx = None if routes is None else {
         c: np.asarray(sorted(set(js)), dtype=np.int64)
         for c, js in routes.items()}
-    in_cols = list(dict.fromkeys(
-        [records_vec, *keep_cols, *tie_cols]
-        + ([route_col] if routes is not None else [])))
 
     def score_block(X, J):
         """Scores and NULL mask of rows X (n × d) against queries J."""
@@ -253,10 +230,33 @@ def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
                 + [pa.array(s, mask=null, type=pa.float64())],
                 names=[query_id, *keep_cols, score_col])
 
+    return topk_batches
+
+
+def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
+                records_vec: str, score_col: str, keep_cols: list[str],
+                tie_cols: list[str], routes: dict | None = None,
+                route_col: str | None = None) -> DataFrame:
+    """The record-form scorer: (query_id, *keep_cols, score_col) holding,
+    for every Arrow batch of ``records``, only each query's ``k`` best
+    rows (``record_topk_batches`` in mapInArrow) — the local top-k that
+    ``bucketed_topk`` then merges globally (global top-k ⊆ union of
+    per-batch top-k). Each record row enters the worker once for all M
+    queries, and at most k·M rows per batch leave Python instead of
+    every (record, query) pair."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    keep_cols = list(dict.fromkeys(keep_cols))
+    in_cols = list(dict.fromkeys(
+        [records_vec, *keep_cols, *tie_cols]
+        + ([route_col] if routes is not None else [])))
     schema = StructType(
         [qid_field] + [records.schema[c] for c in keep_cols]
         + [StructField(score_col, DoubleType())])
-    return records.select(*in_cols).mapInArrow(topk_batches, schema)
+    return records.select(*in_cols).mapInArrow(
+        record_topk_batches(q_rows, qid_field, k, records_vec, score_col,
+                            keep_cols, tie_cols, routes, route_col),
+        schema)
 
 
 def bucketed_topk(scored: DataFrame, group_col: str, order: list[Column],
@@ -328,32 +328,30 @@ def batch_topk(
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of queries in ONE scan.
 
-    The query side rides with every task either way (queries are small
-    by construction — the working set of a request batch): in the
-    default ``record`` scoring form (see ``_batch_scorer_mode``) the
-    collected query batch travels in the ``record_topk`` closure, each
+    The (small, by construction — the working set of a request batch)
+    query batch is collected and rides the ``record_topk`` closure: each
     record VECTOR enters the scoring stage exactly once for all M
     queries, and each Arrow batch emits only its k best rows per query
-    (at most k·M rows, not N·M); in the ``pair`` form (env fallback, and
-    the shape used when ``records_id`` is absent or a tie column lives
-    on the query side) the queries are broadcast and the cross join
-    materializes M pair rows per record. The big records table is
-    scanned once in both. The global per-query selection is a TWO-stage
-    window: stage 1 partitions by (query, bucket) so every query's
-    candidates spread over ``buckets`` tasks (a single
-    ``partitionBy(query_id)`` window would funnel ALL scored rows of a
-    query through one task — an OOM/straggler at the 100 TB design
+    (at most k·M rows, not N·M). The global per-query selection is
+    ``bucketed_topk``'s TWO-stage window: stage 1 partitions by (query,
+    bucket) so every query's candidates spread over ``buckets`` tasks (a
+    single ``partitionBy(query_id)`` window would funnel ALL scored rows
+    of a query through one task — an OOM/straggler at the 100 TB design
     point; AQE cannot split a window partition); stage 2 re-ranks the
     surviving ``buckets × k`` rows per query — tiny. Global top-k ⊆
     union of per-batch and per-bucket top-k, so the result is identical.
     ``row_number`` (not ``rank``) reproduces exactly-k-with-arbitrary-ties.
+    ``tie_break`` columns must be record columns (a query column is
+    constant within a query, so it never breaks a tie).
 
-    With ``records_id`` (a unique record key) the shuffle carries only
+    Without ``records_id`` every record column passes through the scorer
+    and the windows, and each winner comes back whole with its query
+    columns (query vector dropped) and ``score_col``. With ``records_id``
+    (a unique record key) the scorer and the shuffle carry only
     (query_id, id, score, tie columns) — the record payload (embedding
     included) is re-attached afterwards by broadcasting the k×|queries|
     winners against the records table: the wide columns are never
-    shuffled at all. Pass it at scale; the default path shuffles whole
-    scored rows, acceptable when the payload is narrow.
+    shuffled at all. Pass it at scale when the payload is wide.
 
     ``attach_payload=False`` (only meaningful with ``records_id``) skips
     that re-attach join and returns the slim winners
@@ -362,52 +360,33 @@ def batch_topk(
     is a whole extra corpus scan Catalyst cannot prune away (an inner
     join is not removable even when its columns go unused).
     """
-    order = [F.desc(score_col)] + [F.asc(c) for c in (tie_break or [])]
-    nb = buckets or records.sparkSession.sparkContext.defaultParallelism
-
-    if records_id is None:
-        joined = records.crossJoin(F.broadcast(queries))
-        # Arrow-vectorized bit-exact kernel — the scored pair stream is
-        # the hot loop of every batch similarity scan (functions/kernels).
-        scored = joined.withColumn(
-            score_col,
-            cosine_pairs_kernel(F.col(records_vec), F.col(queries_vec)))
-        w1 = Window.partitionBy(query_id, "_b").orderBy(*order)
-        w2 = Window.partitionBy(query_id).orderBy(*order)
-        pre = (scored.withColumn("_b", F.spark_partition_id() % nb)
-               .withColumn("_rn", F.row_number().over(w1))
-               .filter(F.col("_rn") <= k).drop("_rn", "_b"))
-        return (pre.withColumn("_rn", F.row_number().over(w2))
-                .filter(F.col("_rn") <= k)
-                .drop("_rn", queries_vec))
-
-    tie_cols = [c for c in (tie_break or [])]
-    if (_batch_scorer_mode() == "record"
-            and all(c in records.columns for c in tie_cols)):
-        # Record form (§8): each record vector enters the scoring stage
-        # ONCE for all M queries, and only each query's k best rows per
-        # Arrow batch leave it.
-        q_rows = queries.select(query_id, queries_vec).collect()
-        slim = record_topk(records, q_rows, queries.schema[query_id], k,
-                           records_vec, score_col, [records_id, *tie_cols],
-                           tie_cols)
-    else:
-        joined = records.crossJoin(F.broadcast(queries))
-        scored = joined.withColumn(
-            score_col,
-            cosine_pairs_kernel(F.col(records_vec), F.col(queries_vec)))
-        slim_cols = list(dict.fromkeys(
-            [query_id, records_id, score_col] + tie_cols))
-        slim = scored.select(*slim_cols)
-    winners = bucketed_topk(slim, query_id, order, k, records_id, nb)
-    if not attach_payload:
+    tie_cols = list(tie_break or [])
+    stray = [c for c in tie_cols if c not in records.columns]
+    if stray:
+        raise ValueError(
+            f"tie_break columns {stray} are not columns of the records")
+    order = [F.desc(score_col)] + [F.asc(c) for c in tie_cols]
+    q_rows = queries.select(query_id, queries_vec).collect()
+    keep = records.columns if records_id is None else [records_id, *tie_cols]
+    scored = record_topk(records, q_rows, queries.schema[query_id], k,
+                         records_vec, score_col, keep, tie_cols)
+    # no unique key without records_id: the score spreads the buckets
+    winners = bucketed_topk(scored, query_id, order, k,
+                            records_id or score_col, buckets)
+    if records_id is not None and not attach_payload:
         return winners
-    out = records.join(
-        F.broadcast(winners.select(*dict.fromkeys([records_id, query_id, score_col]))),
+    out = winners if records_id is None else records.join(
+        F.broadcast(winners.select(
+            *dict.fromkeys([records_id, query_id, score_col]))),
         records_id)
-    qattrs = queries.drop(queries_vec)
-    if len(qattrs.columns) > 1:
-        out = out.join(F.broadcast(qattrs), query_id)
+    qattrs = [c for c in queries.columns if c not in (query_id, queries_vec)]
+    if qattrs:
+        out = out.join(F.broadcast(queries.select(query_id, *qattrs)),
+                       query_id)
+    if records_id is None:
+        out = out.select(*records.columns,
+                         *[c for c in queries.columns if c != queries_vec],
+                         score_col)
     return out
 
 

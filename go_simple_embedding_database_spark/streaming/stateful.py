@@ -76,69 +76,3 @@ def batch_key_stats(events: DataFrame, key_col: str = "user_id",
         F.sum(value_col).alias("sum_value"),
         F.max(ts_col).alias("last_ts"),
     )
-
-
-def running_key_stats_tws(events: DataFrame, key_col: str = "user_id",
-                          value_col: str = "value",
-                          ts_col: str = "ts",
-                          state_ttl_ms: int = 3600 * 1000) -> DataFrame:
-    """The ``transformWithStateInPandas`` twin of ``running_key_stats`` —
-    Spark 4's replacement for ``applyInPandasWithState``: named state
-    variables (ValueState here) instead of one opaque tuple, per-state
-    TTL instead of a manual timeout dance, and arbitrarily many state
-    variables per operator once needed (ListState/MapState). Same
-    semantics as the legacy operator: one continuously-updated
-    (count, sum, last_ts) row per key per micro-batch, idle keys aged out
-    of the store by TTL so state stays bounded.
-
-    Kept alongside the legacy operator deliberately: both surfaces are
-    public Spark API and a migration between them is exactly what a user
-    of this engine will do; the convergence test pins that they agree
-    with the batch twin."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    try:  # the TWS state-server protocol speaks protobuf
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's state-server protocol); install it or use "
-            "running_key_stats (applyInPandasWithState), which has the "
-            "same semantics without the dependency") from e
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    out_schema = (f"{key_col} {key_type}, n_events bigint, "
-                  f"sum_value double, last_ts timestamp")
-
-    class _RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState(
-                "stats", STATE_SCHEMA, ttlDurationMs=state_ttl_ms)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._stats.exists():
-                n, s, last = self._stats.get()
-            else:
-                n, s, last = 0, 0.0, None
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf[value_col].sum())
-                mx = pdf[ts_col].max()
-                last = mx if last is None or mx > last else last
-            self._stats.update((n, s, last))
-            yield pd.DataFrame({key_col: [key[0]], "n_events": [n],
-                                "sum_value": [s], "last_ts": [last]})
-
-        def close(self) -> None:
-            pass
-
-    # TTL needs a clock: state TTL is only valid under the ProcessingTime
-    # time mode (with timeMode="None" the query crashes at runtime).
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_RunningStats(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )

@@ -86,19 +86,6 @@ def test_kernel_stays_in_codegen(spark):
     assert "EvalPython" not in plan
 
 
-def test_cosine_py_length_mismatch_raises():
-    """The Catalyst kernel's zip_with poisons a dim mismatch to NULL —
-    visible. cosine_py must be equally visible: Python zip would
-    silently truncate and rank IVF centroids by a truncated dot product
-    (ADVICE r04)."""
-    from go_simple_embedding_database_spark.functions.kernels import cosine_py
-
-    with pytest.raises(ValueError, match="length mismatch"):
-        cosine_py([1.0, 2.0], [1.0, 2.0, 3.0])
-    with pytest.raises(ValueError, match="length mismatch"):
-        cosine_py([], [1.0])
-
-
 def test_well_formed_vector_twins_agree_on_every_edge(spark):
     """The r11 malformed-embedding scan guard, landed library-first:
     both twins accept exactly the fully-populated finite dim-width

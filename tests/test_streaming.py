@@ -358,45 +358,6 @@ def test_streaming_upsert_transactional_versions(spark, tmp_path):
     assert v1 == {1: "one-v1"}
 
 
-def test_tws_running_stats_converges_to_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas twin: same convergence contract as the
-    applyInPandasWithState operator (drained bounded stream == batch
-    groupBy), exercised through the Spark 4 named-state API."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state-server protocol needs protobuf, "
-               "absent from this container (operator gated accordingly)")
-    from go_simple_embedding_database_spark.streaming.stateful import (
-        batch_key_stats,
-        running_key_stats_tws,
-    )
-    events = load_table(spark, sf_dir, "events").limit(400) \
-        .select("user_id", "value", "ts")
-    src = str(tmp_path / "tws_src")
-    events.filter(F.col("user_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    events.filter(F.col("user_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    stored = spark.read.parquet(src)
-
-    stream = (spark.readStream.schema(stored.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (running_key_stats_tws(stream).writeStream.format("memory")
-         .queryName("tws_stats").outputMode("update")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got_rows = spark.sql("select * from tws_stats").collect()
-    last = {}
-    for r in got_rows:
-        prev = last.get(r.user_id)
-        if prev is None or r.n_events >= prev.n_events:
-            last[r.user_id] = r
-    got = {(k, v.n_events, round(v.sum_value, 6), v.last_ts)
-           for k, v in last.items()}
-    want = {(r.user_id, r.n_events, round(r.sum_value, 6), r.last_ts)
-            for r in batch_key_stats(stored).collect()}
-    assert got == want
-
-
 def test_streaming_dedup_ingest_grows_dedup_free_corpus(spark, tmp_path):
     """Batch 1 carries an intra-batch duplicate (one survives); batch 2
     carries a cross-batch duplicate of batch 1 (dropped via the persisted

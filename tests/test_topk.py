@@ -49,11 +49,26 @@ def test_batch_topk_exact_k_per_query(spark, embeddings):
 
 
 def test_batch_topk_broadcasts_queries(spark, embeddings):
+    """The query batch rides the scorer's closure: the records are
+    scored in MapInArrow, never crossed with the queries."""
     queries = (embeddings.limit(3)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_embedding")))
-    df = batch_topk(embeddings, queries, 2)
-    assert "BroadcastNestedLoopJoin" in formatted_plan(df) or "BroadcastExchange" in formatted_plan(df)
+    plan = formatted_plan(batch_topk(embeddings, queries, 2))
+    assert "MapInArrow" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_batch_topk_rejects_query_side_tie_break(spark, embeddings):
+    """A query column is constant within a query, so it can never break
+    a tie: naming one is a caller error, not a silent no-op."""
+    queries = (embeddings.limit(2)
+               .select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("query_embedding"),
+                       F.lit("t").alias("tag")))
+    with pytest.raises(ValueError, match="tag"):
+        batch_topk(embeddings, queries, 2, tie_break=["vec_id", "tag"])
 
 
 def test_similarity_join_threshold_and_k(spark, embeddings):
@@ -73,22 +88,22 @@ def test_similarity_join_threshold_only(spark, embeddings):
     assert out.filter(F.col("left_id") == F.col("right_id")).count() == 5
 
 
-def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
-                                                 monkeypatch):
-    """The record-form scorer (``record_topk``, batch_topk's default
-    scoring form) is bit-identical to the pair kernel over EVERY
-    (record, query) pair — with k at least the record count nothing is
-    truncated — including NULL vectors, NULL elements on either side
-    (NaN per the kernel contract), length mismatches and zero norms; and
-    batch_topk's winners match the pair form
-    (``SPARK_GRAFT_BATCH_SCORER=pair``). The record form plans
+def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings):
+    """The record-form scorer (``record_topk``) is bit-identical to the
+    pair kernel over EVERY (record, query) pair — with k at least the
+    record count nothing is truncated — including NULL vectors, NULL
+    elements on either side (NaN per the kernel contract), length
+    mismatches and zero norms; and batch_topk's winners match a single
+    ``row_number`` window over the pair-kernel scores. batch_topk plans
     MapInArrow."""
     import struct
+
+    from pyspark.sql import Window
 
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel)
     from go_simple_embedding_database_spark.operators.topk import (
-        batch_topk, record_topk)
+        record_topk)
 
     base = embeddings.select("vec_id", F.col("embedding")
                              .cast("array<double>").alias("embedding"))
@@ -110,12 +125,11 @@ def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
     def b(x):
         return None if x is None else struct.pack("<d", x)
 
-    pair = {(r.query_id, r.vec_id): b(r.s) for r in
-            records.crossJoin(F.broadcast(queries)).select(
-                "query_id", "vec_id",
-                cosine_pairs_kernel(F.col("embedding"),
-                                    F.col("query_embedding")).alias("s"))
-            .collect()}
+    pairs = records.crossJoin(F.broadcast(queries)).select(
+        "query_id", "vec_id",
+        cosine_pairs_kernel(F.col("embedding"),
+                            F.col("query_embedding")).alias("sim"))
+    pair = {(r.query_id, r.vec_id): b(r.sim) for r in pairs.collect()}
     n_rec = records.count()
     every = record_topk(
         records, queries.collect(), queries.schema["query_id"], n_rec,
@@ -124,27 +138,28 @@ def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
     assert rec == pair and len(rec) == n_rec * queries.count()
     assert all(rec[(80003, v)] == b(float("nan")) for v in (0, 1, 2))
 
-    # end-to-end winners against the pair form, and the plan shape
-    monkeypatch.setenv("SPARK_GRAFT_BATCH_SCORER", "pair")
-    pw = sorted(map(tuple, batch_topk(
-        records, queries, 3, score_col="sim", tie_break=["vec_id"],
-        records_id="vec_id").select("query_id", "vec_id", "sim")
-        .collect()))
-    monkeypatch.delenv("SPARK_GRAFT_BATCH_SCORER")
+    # end-to-end winners against a single window over the pair scores,
+    # and the plan shape
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
+                                               F.asc("vec_id"))
+    want = sorted(map(tuple, pairs.withColumn("_rn", F.row_number().over(w))
+                      .filter(F.col("_rn") <= 3)
+                      .select("query_id", "vec_id", "sim").collect()))
     rdf = batch_topk(records, queries, 3, score_col="sim",
                      tie_break=["vec_id"], records_id="vec_id")
     rw = sorted(map(tuple, rdf.select("query_id", "vec_id", "sim")
                     .collect()))
     plan = formatted_plan(rdf)
     assert "MapInArrow" in plan and "CartesianProduct" not in plan
-    assert [(a, c, b(s)) for a, c, s in pw] == \
+    assert [(a, c, b(s)) for a, c, s in want] == \
            [(a, c, b(s)) for a, c, s in rw]
 
 
 def test_record_topk_truncation_parity(spark):
     """Per-batch truncation inside the record scorer keeps exactly the
     rows a single ``row_number`` window over the pair-form scores ranks
-    first — unrouted (through batch_topk) and routed (the IVF shape) —
+    first — unrouted (through batch_topk, with and without records_id)
+    and routed (the IVF shape) —
     with bitwise-equal scores. Several tiny Arrow batches per partition
     and k above a batch's row count; NaN scores (record-side NULL
     element) rank first, NULL scores (NULL vector, dim mismatch, NULL
@@ -202,6 +217,7 @@ def test_record_topk_truncation_parity(spark):
                 .select("query_id", "vec_id", "s").collect())
 
     exact = {(r.query_id, r.vec_id): b(r.s) for r in pairs.collect()}
+    by_id = {r.vec_id: repr(tuple(r)) for r in records.collect()}
 
     def check(got, want, total):
         if total:
@@ -225,6 +241,15 @@ def test_record_topk_truncation_parity(spark):
                     tie_break=ties or None, records_id="vec_id",
                     attach_payload=False).select("query_id", "vec_id", "s")
                 check(got.collect(), reference(pairs, k, ties), bool(ties))
+                # no records_id: every record column comes back, intact
+                whole = batch_topk(records, queries, k, score_col="s",
+                                   tie_break=ties or None)
+                assert whole.columns == [*records.columns, "query_id", "s"]
+                rows = whole.collect()
+                check([(r.query_id, r.vec_id, r.s) for r in rows],
+                      reference(pairs, k, ties), bool(ties))
+                assert all(repr(tuple(r[c] for c in records.columns))
+                           == by_id[r.vec_id] for r in rows)
                 order = [F.desc("s")] + [F.asc(c) for c in ties]
                 routed = bucketed_topk(
                     record_topk(records, q_rows, queries.schema["query_id"],

@@ -580,8 +580,9 @@ def _bloom_ab(spark, dirs) -> dict:
 
 def _cosine_kernel_ab(spark, dirs) -> dict:
     """HOF vs Arrow cosine kernel A/B (round-10 optimization pass): the
-    batch_topk scored stream — corpus x 3-query broadcast cross join,
-    every pair scored — timed under both evaluators at 1x and deep
+    pair-kernel scored stream — corpus x M-query broadcast cross join,
+    every pair scored (similarity_join's shape) — timed under both
+    evaluators at 1x and deep
     scale. Justifies the SPARK_GRAFT_COSINE_KERNEL dispatch default
     (kernels.cosine_pairs_kernel): Catalyst HOFs are CodegenFallback
     (~15 us/row interpreted at dim=64), the Arrow kernel is the same
@@ -720,64 +721,6 @@ def _kmeans_argmin_ab(spark, dirs) -> dict:
         out[label] = rec
         print(f"kmeans_argmin_ab {label}: {rec}", flush=True)
     return {"kmeans_argmin_ab": out}
-
-
-def _batch_scorer_ab(spark, dirs) -> dict:
-    """Pair-form (HOF and Arrow cosine kernels) vs record-form
-    (SPARK_GRAFT_BATCH_SCORER=record) batch_topk scoring A/B (round-11,
-    guide §8): the full slim winners pipeline (attach_payload=False) at
-    the gate shape (M=3) and the production batch shape (M=100), where
-    the pair form ships every record vector M times through the scoring
-    stage and the record form ships it once. Winner row counts recorded
-    per form (bitwise equality pinned by tests/test_topk.py)."""
-    from pyspark.sql import functions as F
-
-    from go_simple_embedding_database_spark.operators.topk import (
-        batch_topk)
-
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out = {}
-    for label, d, m_queries in dirs:
-        emb = (spark.read.parquet(f"{d}/embeddings.parquet")
-               .select("vec_id",
-                       F.col("embedding").cast("array<double>")
-                       .alias("embedding")))
-        qset = (emb.filter(F.col("vec_id") < m_queries)
-                .select(F.col("vec_id").alias("query_id"),
-                        F.col("embedding").alias("query_embedding")))
-
-        def winners():
-            return batch_topk(emb, qset, 10, score_col="score",
-                              tie_break=["vec_id"], records_id="vec_id",
-                              attach_payload=False)
-
-        rec = {"m_queries": m_queries}
-        # The scorer env is set EXPLICITLY on every row: record is the
-        # batch_topk default since round 11, so a bare {} would measure
-        # the record form three times over.
-        for fname, env in (("pair_hof",
-                            {"SPARK_GRAFT_BATCH_SCORER": "pair"}),
-                           ("pair_arrow",
-                            {"SPARK_GRAFT_BATCH_SCORER": "pair",
-                             "SPARK_GRAFT_COSINE_KERNEL": "arrow"}),
-                           ("record",
-                            {"SPARK_GRAFT_BATCH_SCORER": "record"})):
-            for k, v in env.items():
-                os.environ[k] = v
-            try:
-                sec, rs = _timed_best(spark, lambda: run(winners()),
-                                      runs=2)
-                rec[f"sec_{fname}"] = sec
-                rec[f"runs_{fname}"] = rs
-                rec[f"rows_{fname}"] = winners().count()
-            finally:
-                for k in env:
-                    del os.environ[k]
-        out[label] = rec
-        print(f"batch_scorer_ab {label}: {rec}", flush=True)
-    return {"batch_scorer_ab": out}
 
 
 def _pagerank_superstep_shuffle(spark) -> dict:
@@ -1270,15 +1213,12 @@ def main() -> None:
                     (f"{DEEP_REPLICAS}x_m3", de, 3),
                     (f"{DEEP_REPLICAS}x_m100", de, 100)]))
         # round-11 dispatch A/Bs: text tokenizer twins (exact-copy docs
-        # keep tokenization volume comparable), k-means argmin twins and
-        # the batch_topk record-form scorer (perm-embedding replicas)
+        # keep tokenization volume comparable) and k-means argmin twins
+        # (perm-embedding replicas)
         deep_results.update(_text_kernel_ab(
             spark, [("1x", SF_DIR), (f"{DEEP_REPLICAS}x", db)]))
         deep_results.update(_kmeans_argmin_ab(
             spark, [("1x", SF_DIR), (f"{DEEP_REPLICAS}x", de)]))
-        deep_results.update(_batch_scorer_ab(
-            spark, [("1x", SF_DIR, 3),
-                    (f"{DEEP_REPLICAS}x_m100", de, 100)]))
         # round-11: PageRank per-superstep exchange grain at 10x/100x
         deep_results.update(_pagerank_superstep_shuffle(spark))
     finally:

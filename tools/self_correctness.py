@@ -10,7 +10,7 @@ auditable, re-runnable record each round. Run:
     python tools/self_correctness.py            # default dispatch mode
     python tools/self_correctness.py --arrow    # production arrow mode
 
-``--arrow`` sets every SPARK_GRAFT_*_KERNEL / scorer dispatch to its
+``--arrow`` sets every SPARK_GRAFT_*_KERNEL dispatch to its
 production (Arrow/vectorized) value and writes ``SELFCHECK_ARROW.json``
 instead — cross-engine rows for the mode the 100 TB deployment actually
 runs (VERDICT r10 #3: production mode must have oracle rows, not only
@@ -53,8 +53,7 @@ def _norm(v):
 ARROW_MODE = "--arrow" in sys.argv
 ARROW_ENVS = {"SPARK_GRAFT_COSINE_KERNEL": "arrow",
               "SPARK_GRAFT_TEXT_KERNEL": "arrow",
-              "SPARK_GRAFT_KMEANS_KERNEL": "arrow",
-              "SPARK_GRAFT_BATCH_SCORER": "record"}
+              "SPARK_GRAFT_KMEANS_KERNEL": "arrow"}
 
 
 def main() -> None:
@@ -120,7 +119,7 @@ def main() -> None:
     with open(dest, "w") as f:
         json.dump({"sf_dir": SF_DIR, "versions": versions,
                    "dispatch": (ARROW_ENVS if ARROW_MODE
-                                else "default (hof/pair)"),
+                                else "default (hof)"),
                    "n_queries": len(out),
                    "n_hash_match": sum(1 for r in out.values()
                                        if r["hash_match"]),
