@@ -19,9 +19,13 @@ anti-joins over the partitioned table; the scalable ingest path is
 
 Mutability model: DataFrames are immutable, so mutation = replacing the
 current records DataFrame (union for append, anti-join filter for delete).
-In path-backed mode the same operations append/rewrite Parquet partitions —
-the pattern Delta Lake's MERGE/DELETE implements transactionally; plain
-Parquet is used here because this container has no Delta.
+A skip-mode ``add_records`` batch is validated ONCE, into a local
+checkpoint that the union reads, so later reads never re-run an earlier
+batch's validation; ``compact()`` rewrites the table as a parquet scan and
+frees those checkpoints. In path-backed mode the same operations
+append/rewrite Parquet partitions — the pattern Delta Lake's MERGE/DELETE
+implements transactionally; plain Parquet is used here because this
+container has no Delta.
 """
 
 from __future__ import annotations
@@ -34,6 +38,8 @@ from pyspark.sql import functions as F
 from go_simple_embedding_database_spark import errors
 from go_simple_embedding_database_spark.functions.embedders import get_embedder
 from go_simple_embedding_database_spark.operators.topk import topk_by_similarity
+from go_simple_embedding_database_spark.plans.checkpoints import (
+    release_local_checkpoint)
 from go_simple_embedding_database_spark.schema import RECORDS_SCHEMA
 
 RECORD_COLUMNS = [f.name for f in RECORDS_SCHEMA.fields]
@@ -76,7 +82,8 @@ class SparkEmbeddingDatabase:
         self.spark = spark
         self._catalog: dict[str, CollectionInfo] = {}
         self._records: DataFrame = spark.createDataFrame([], RECORDS_SCHEMA)
-        # Batches make_records persisted; released by compact().
+        # Batches make_records persisted and the local checkpoints of
+        # skip-mode validated batches; compact() releases both.
         self._pinned: list[DataFrame] = []
 
     # -- catalog / DDL (§2.1) ------------------------------------------------
@@ -114,13 +121,16 @@ class SparkEmbeddingDatabase:
     def collections_df(self) -> DataFrame:
         """The catalog as a DataFrame — joinable against records for bulk
         validation (the Spark analog of GetCollections,
-        database/database.go:139-144)."""
-        rows = [
-            Row(collection_id=c.collection_id, embedder_id=c.embedder_id)
-            for c in self._catalog.values()
-        ]
-        return self.spark.createDataFrame(rows, "collection_id string, embedder_id string") \
-            if rows else self.spark.createDataFrame([], "collection_id string, embedder_id string")
+        database/database.go:139-144). Built from a pandas frame: with
+        Arrow on, a handful of rows become a local relation instead of a
+        Python-RDD job."""
+        import pandas as pd
+
+        rows = pd.DataFrame(
+            [(c.collection_id, c.embedder_id) for c in self._catalog.values()],
+            columns=["collection_id", "embedder_id"], dtype=object)
+        return self.spark.createDataFrame(
+            rows, "collection_id string, embedder_id string")
 
     # -- records / DML (§2.2) ------------------------------------------------
 
@@ -180,14 +190,19 @@ class SparkEmbeddingDatabase:
 
     def compact(self, path: str) -> None:
         """Lineage/cache maintenance for long ingest sessions: write the
-        records table to parquet, reload it as the new scan baseline, and
-        unpersist every batch ``make_records`` pinned. Without this the
-        union lineage deepens per batch and the pinned embedding caches
-        accumulate for the life of the session."""
+        records table to parquet, reload its records as the new scan
+        baseline, and release every batch ``make_records`` pinned and
+        every checkpoint a skip-mode ``add_records`` took. Without this
+        the union lineage deepens per batch and the pinned embedding
+        caches accumulate for the life of the session. A violations frame
+        returned by a skip-mode ``add_records`` reads its batch's
+        checkpoint, so consume it before the next ``compact()``."""
         self.save_parquet(path)
-        self._records = type(self).load_parquet(self.spark, path)._records
+        self._records = _read_records(self.spark, path)
         for df in self._pinned:
-            df.unpersist()
+            # unpersist() is a no-op on a local checkpoint
+            if not release_local_checkpoint(df):
+                df.unpersist()
         self._pinned.clear()
 
     def add_record(self, collection_id: str, record: Row) -> None:
@@ -229,6 +244,14 @@ class SparkEmbeddingDatabase:
         the violations DataFrame for the caller to inspect/quarantine —
         the 100 TB-friendly mode (a single bad row must not kill a 10-hour
         ingest; quarantine-and-continue is the standard pipeline pattern).
+
+        In 'skip' mode the validated batch is materialised once, as an
+        eager local checkpoint that both the inserted rows and the
+        returned violations read — the reference checks each record once,
+        at insert (collection/collection.go:32-45), and so does this: no
+        later read of the records table re-runs the batch's validation.
+        The checkpoint lives until the next ``compact()``, so consume the
+        violations frame before then.
         """
         info = self.get_collection(collection_id)
         records = records.select(
@@ -258,12 +281,11 @@ class SparkEmbeddingDatabase:
         mis_f = (F.col("embedder_id").isNull()
                  | (F.col("embedder_id") != info.embedder_id))
         nul_f = F.col("embedding").isNull()
-        violations = flagged.select(
-            "id",
-            F.when(dup_f, "duplicate id")
-             .when(mis_f, "embedder mismatch")
-             .when(nul_f, "null embedding").alias("violation"),
-        ).filter(F.col("violation").isNotNull())
+        # All three flags are non-NULL booleans, so a NULL violation is
+        # exactly a valid row.
+        violation = (F.when(dup_f, "duplicate id")
+                     .when(mis_f, "embedder mismatch")
+                     .when(nul_f, "null embedding").alias("violation"))
 
         if on_violation == "error":
             c = flagged.agg(
@@ -278,14 +300,20 @@ class SparkEmbeddingDatabase:
                     f"{c.mis} record(s) with mismatched embedder")
             if c.nul:
                 raise errors.NullEmbeddingError(f"{c.nul} null embedding(s)")
+            checked = flagged.select("id", violation)
             valid = records
         else:
-            valid = (flagged.filter(~dup_f & ~mis_f & ~nul_f)
-                     .select("id", "embedder_id", "blob", "embedding"))
+            # Eager, not persist(): the checkpoint job runs under AQE
+            # coalescing and cuts the union lineage at the batch.
+            checked = flagged.select(*records.columns, violation) \
+                .localCheckpoint()
+            self._pinned.append(checked)
+            valid = checked.filter(F.col("violation").isNull())
 
         new = valid.select(F.lit(collection_id).alias("collection_id"), *[c for c in RECORD_COLUMNS if c != "collection_id"])
         self._records = self._records.unionByName(new)
-        return violations
+        return checked.filter(F.col("violation").isNotNull()) \
+            .select("id", "violation")
 
     def get_record(self, collection_id: str, record_id: str) -> Row:
         """Point lookup (database/database.go:83-89): partition-pruned filter."""
@@ -360,14 +388,19 @@ class SparkEmbeddingDatabase:
         db = cls(spark)
         for r in spark.read.parquet(f"{path}/collections").collect():
             db._catalog[r.collection_id] = CollectionInfo(r.collection_id, r.embedder_id)
-        # Cast back to the canonical schema: partition-column type
-        # inference would otherwise read a numeric-looking collection_id
-        # directory ('123') as a long, and the next unionByName with a
-        # string batch throws under ANSI.
-        # simpleString casts (not the StructField dataType): parquet reads
-        # arrays with containsNull=true and Spark refuses a cast that only
-        # tightens nullability.
-        db._records = spark.read.parquet(f"{path}/records").select(
-            *[F.col(f.name).cast(f.dataType.simpleString())
-              for f in RECORDS_SCHEMA.fields])
+        db._records = _read_records(spark, path)
         return db
+
+
+def _read_records(spark: SparkSession, path: str) -> DataFrame:
+    """The records table ``save_parquet`` wrote under ``path``, read with
+    the canonical column types rather than inferred ones: an empty table
+    has no data files to infer from, and partition-column inference would
+    read a numeric-looking collection_id directory ('123') as a long that
+    the next unionByName with a string batch rejects under ANSI. (A DDL
+    schema, not RECORDS_SCHEMA itself: parquet reads arrays with
+    containsNull=true.)"""
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                    for f in RECORDS_SCHEMA.fields)
+    return spark.read.schema(ddl).parquet(f"{path}/records") \
+        .select(*RECORD_COLUMNS)

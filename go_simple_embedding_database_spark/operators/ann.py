@@ -61,32 +61,16 @@ def assign_cells(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding"
     id as ``cell``. One scan, centroids broadcast, no shuffle of the data
     side; at scale, write the result partitioned by ``cell``.
 
-    A synthetic per-row id anchors the argmax window: windowing by the
-    row's columns would collapse byte-identical duplicate rows (no unique
-    id is exactly the case this variant serves) into one output row,
-    silently dropping records from the index."""
+    A synthetic per-row id anchors the argmax window: windowing by a data
+    column would collapse rows that share its value — duplicate ids,
+    NULL ids, byte-identical rows — into one output row, silently
+    dropping records from the index."""
     tagged = df.withColumn("_rowid", F.monotonically_increasing_id())
     c = F.broadcast(centroids)
     scored = tagged.crossJoin(c).withColumn(
         "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
     )
     w = Window.partitionBy("_rowid").orderBy(F.desc("_csim"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*df.columns, F.col("centroid_id").alias("cell"))
-    )
-
-
-def assign_cells_by_id(df: DataFrame, centroids: DataFrame, id_col: str,
-                       vec_col: str = "embedding") -> DataFrame:
-    """Same as assign_cells but partitions the argmax window by the (known
-    unique) id column — cheaper than whole-row identity."""
-    c = F.broadcast(centroids)
-    scored = df.crossJoin(c).withColumn(
-        "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("centroid_id"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -234,7 +218,7 @@ def ivf_topk(df: DataFrame, centroids: DataFrame, qvec: list[float], k: int,
         for r in topk_by_similarity(centroids, qvec, nprobe, vec_col="centroid",
                                     score_col="_s", tie_break=["centroid_id"]).collect()
     ]
-    cells = assign_cells_by_id(df, centroids, id_col, vec_col)
+    cells = assign_cells(df, centroids, vec_col)
     pruned = cells.filter(F.col("cell").isin(probe_cells) if probe_cells
                           else F.lit(False))
     return topk_by_similarity(pruned, qvec, k, vec_col=vec_col,
@@ -242,7 +226,7 @@ def ivf_topk(df: DataFrame, centroids: DataFrame, qvec: list[float], k: int,
 
 
 def ivf_write_index(df: DataFrame, centroids: DataFrame, path: str,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
+                    vec_col: str = "embedding",
                     mode: str = "overwrite") -> None:
     """Materialize the IVF index: one pass assigns cells (centroids
     broadcast), writes the table PARTITIONED BY cell, and stores the
@@ -256,7 +240,7 @@ def ivf_write_index(df: DataFrame, centroids: DataFrame, path: str,
     no data files at all, and a schema-inference read of that directory
     raises instead of returning the empty relation. Readers pass the
     recorded schema explicitly — empty index, empty result."""
-    cells = assign_cells_by_id(df, centroids, id_col, vec_col)
+    cells = assign_cells(df, centroids, vec_col)
     cells.write.mode(mode).partitionBy("cell").parquet(f"{path}/cells")
     centroids.write.mode(mode).parquet(f"{path}/centroids")
     with open(os.path.join(_local_path(path), "_cells_schema.json"),
@@ -305,7 +289,7 @@ def ensure_ivf_index(spark, src_path: str, index_path: str,
     def _build() -> None:
         df = spark.read.parquet(src_path)
         centroids = deterministic_centroids(df, n_centroids, vec_col, id_col)
-        ivf_write_index(df, centroids, index_path, id_col, vec_col)
+        ivf_write_index(df, centroids, index_path, vec_col)
 
     ensure_materialized(index_path, fingerprint, _build)
 

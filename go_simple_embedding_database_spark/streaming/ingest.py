@@ -103,13 +103,13 @@ def streaming_index_ingest(spark, source_dir: str, index_path: str,
     assignment code (no streaming/batch divergence) and appends only the
     partitions it touches. Queries via ``ann.ivf_query_index`` see new
     vectors as soon as the micro-batch commits."""
-    from go_simple_embedding_database_spark.operators.ann import assign_cells_by_id
+    from go_simple_embedding_database_spark.operators.ann import assign_cells
 
     raw = spark.readStream.schema(schema).json(source_dir)
     records = embed_stream(raw, embedder_id)
 
     def _append_batch(batch: DataFrame, _batch_id: int) -> None:
-        cells = assign_cells_by_id(batch, centroids, "id", "embedding")
+        cells = assign_cells(batch, centroids, "embedding")
         cells.write.mode("append").partitionBy("cell").parquet(f"{index_path}/cells")
 
     writer = (records.writeStream.foreachBatch(_append_batch)

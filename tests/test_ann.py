@@ -13,12 +13,55 @@ def centroids(spark, embeddings):
 
 
 def test_assign_cells_covers_all(spark, embeddings, centroids):
-    cells = ann.assign_cells_by_id(embeddings, centroids, "vec_id")
+    cells = ann.assign_cells(embeddings, centroids)
     assert cells.count() == embeddings.count()          # exactly one cell per row
     assert cells.select("cell").distinct().count() <= 8
     # a centroid's own vector must land in its own cell (self-cosine = 1)
     own = cells.filter(F.col("vec_id") < 8).select("vec_id", "cell").collect()
     assert all(r.cell == r.vec_id for r in own)
+
+
+def test_assign_cells_matches_id_argmax_on_unique_ids(spark, embeddings,
+                                                      centroids):
+    """On a unique-id corpus the per-row anchor picks the same cell as an
+    argmax window over the id itself."""
+    from pyspark.sql import Window
+
+    from go_simple_embedding_database_spark.functions.kernels import (
+        cosine_pairs_kernel)
+
+    w = Window.partitionBy("vec_id").orderBy(F.desc("_csim"),
+                                             F.asc("centroid_id"))
+    by_id = (embeddings.crossJoin(F.broadcast(centroids))
+             .withColumn("_csim", cosine_pairs_kernel(F.col("embedding"),
+                                                      F.col("centroid")))
+             .withColumn("_rn", F.row_number().over(w))
+             .filter(F.col("_rn") == 1))
+    want = {r.vec_id: r.centroid_id for r in by_id.collect()}
+    got = {r.vec_id: r.cell
+           for r in ann.assign_cells(embeddings, centroids).collect()}
+    assert got == want
+
+
+def test_ivf_index_keeps_duplicate_and_null_id_rows(spark, embeddings,
+                                                    centroids, tmp_path):
+    """Rows that share an id, or have a NULL id, each keep their own row
+    in the written index, in the cell of their own vector."""
+    base = embeddings.filter(F.col("vec_id") < 40)
+    dups = (embeddings.filter(F.col("vec_id").between(40, 44))
+            .withColumn("vec_id", F.col("vec_id") - 40))
+    nulls = (embeddings.filter(F.col("vec_id").between(45, 47))
+             .withColumn("vec_id", F.lit(None).cast("long")))
+    path = str(tmp_path / "ivf")
+    ann.ivf_write_index(base.unionByName(dups).unionByName(nulls),
+                        centroids, path)
+    got = sorted((tuple(r.embedding), r.cell) for r in
+                 spark.read.parquet(f"{path}/cells").collect())
+    unique = embeddings.filter(F.col("vec_id") < 48)
+    want = sorted((tuple(r.embedding), r.cell) for r in
+                  ann.assign_cells(unique, centroids).collect())
+    assert len(got) == 48
+    assert got == want
 
 
 def test_ivf_topk_recall(spark, embeddings, centroids):

@@ -230,6 +230,103 @@ def test_parquet_roundtrip(db, spark, tmp_path):
     assert db2.get_record("c1", "r3").blob == "text 3"
 
 
+def test_parquet_roundtrip_empty_catalog(spark, tmp_path):
+    """An empty database saves and loads: with no rows to infer from,
+    the catalog and the records still read back with their schemas."""
+    path = str(tmp_path / "empty")
+    SparkEmbeddingDatabase(spark).save_parquet(path)
+    db2 = SparkEmbeddingDatabase.load_parquet(spark, path)
+    assert db2.list_collections() == {}
+    assert db2.records_df().count() == 0
+    assert spark.read.parquet(f"{path}/collections").schema.simpleString() \
+        == "struct<collection_id:string,embedder_id:string>"
+
+
+def test_compact_keeps_numeric_collection_id_a_string(spark, tmp_path):
+    """A numeric-looking collection id reloads as a string, so the next
+    batch still unions onto the compacted table."""
+    db = SparkEmbeddingDatabase(spark)
+    db.add_collection("123", "mock-constant")
+    blobs = spark.createDataFrame([("a", "x")], "id string, blob string")
+    db.add_records("123", db.make_records(blobs, "mock-constant"))
+    db.compact(str(tmp_path / "compacted"))
+    assert db._records.schema["collection_id"].dataType.simpleString() == "string"
+    more = spark.createDataFrame([("b", "y")], "id string, blob string")
+    db.add_records("123", db.make_records(more, "mock-constant"))
+    assert sorted(r.id for r in db.records_df("123").collect()) == ["a", "b"]
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return {int(k) for k in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _skip_batch(db, spark, ids):
+    blobs = spark.createDataFrame([(i, f"text {i}") for i in ids],
+                                  "id string, blob string")
+    return db.add_records("c1", db.make_records(blobs, "mock-constant"),
+                          on_violation="skip")
+
+
+def test_skip_mode_validation_is_not_rederived(db, spark):
+    """A skip-mode batch is validated once, into a checkpoint: after two
+    batches the records table's executed plan holds neither the
+    validation window nor the duplicate-id join of either batch."""
+    _skip_batch(db, spark, ["a", "b"])
+    v = _skip_batch(db, spark, ["b", "c"])
+    assert [(r.id, r.violation) for r in v.collect()] == [("b", "duplicate id")]
+    plan = db._records._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "Join" not in plan
+    assert sorted(r.id for r in db.records_df("c1").collect()) == ["a", "b", "c"]
+
+
+def test_skip_mode_partitions_planted_batch(db, spark):
+    """Every row of a batch is either inserted or reported as exactly one
+    violation, with the reference's check order: duplicate id (against
+    the collection or an earlier copy in the batch), then embedder
+    mismatch (NULL embedder included), then NULL embedding."""
+    _skip_batch(db, spark, ["a", "b"])
+    v = [1.0, 0.0]
+    batch = spark.createDataFrame([
+        ("a", "mock-constant", "x", v),       # exists already
+        ("d", "mock-constant", "d1", v),      # first copy: inserted
+        ("d", "mock-constant", "d2", v),      # later copy in the batch
+        ("e", "mock-hash-64", "e", v),
+        ("f", None, "f", v),
+        ("g", "mock-constant", "g", None),
+        ("b", "mock-hash-64", "b", None),     # duplicate wins the order
+        ("h", "mock-constant", "h", v),
+    ], "id string, embedder_id string, blob string, embedding array<double>")
+    violations = sorted(
+        (r.id, r.violation) for r in
+        db.add_records("c1", batch, on_violation="skip").collect())
+    assert violations == [
+        ("a", "duplicate id"), ("b", "duplicate id"), ("d", "duplicate id"),
+        ("e", "embedder mismatch"), ("f", "embedder mismatch"),
+        ("g", "null embedding")]
+    inserted = {r.id: r.blob for r in db.records_df("c1").collect()}
+    assert inserted == {"a": "text a", "b": "text b", "d": "d1", "h": "h"}
+    batch_ids = sorted(r.id for r in batch.collect())
+    new_ids = [i for i in inserted if i not in ("a", "b")]
+    assert sorted([i for i, _ in violations] + new_ids) == batch_ids
+
+
+def test_compact_frees_validation_checkpoints(db, spark, tmp_path):
+    """compact() frees every RDD the skip-mode batches persisted — the
+    make_records caches and the validation checkpoints alike (unpersist()
+    alone would leave the checkpoints in place)."""
+    before = _persistent_rdd_ids(spark)
+    _skip_batch(db, spark, ["a", "b"])
+    _skip_batch(db, spark, ["b", "c"])
+    pinned = _persistent_rdd_ids(spark) - before
+    assert pinned
+    db.compact(str(tmp_path / "compacted"))
+    assert db._pinned == []
+    assert not pinned & _persistent_rdd_ids(spark)
+    assert sorted(r.id for r in db.records_df("c1").collect()) == ["a", "b", "c"]
+
+
 def test_compact_releases_pinned_batches(db, spark, tmp_path):
     """compact() truncates the union lineage to a parquet scan and
     unpersists every make_records batch (the round-1 leftover: persisted

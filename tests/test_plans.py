@@ -525,10 +525,6 @@ _GLOBAL_WINDOW_ALLOWED = {
 # free (build+probe, old+new, tf+stats are all legitimate); more needs a
 # rationale. query -> {table: max scan nodes allowed}.
 _MULTISCAN_ALLOWED = {
-    # four DIFFERENTLY-FILTERED fixture slices (seed batch, duplicate
-    # ids, embedder mismatch, null embeddings) — each filter pushes to
-    # its own pruned scan; nothing is re-derived
-    "ingest_violations": {"documents": 4},
     # MERGE reads target + source + writes a new version (txn layer)
     "corpus_upsert": {"documents": 3},
     # CDC diff: old snapshot + new snapshot + the change fixture
