@@ -3402,8 +3402,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     plans/r11/*_before vs *_after diffs on the record).
     tests/test_oracle_parity.py re-checks ALL entries every CI run
     regardless of the window, and tools/self_correctness.py records the
-    uncapped sweep in SELFCHECK.json (plus SELFCHECK_ARROW.json under
-    the production arrow dispatch) each round."""
+    uncapped sweep in SELFCHECK.json each round."""
     return {
         # (r11-0) canary — permanently first in window
         "gate_canary": _q_gate_canary,

@@ -31,6 +31,7 @@ container has no Delta.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -196,7 +197,10 @@ class SparkEmbeddingDatabase:
         the union lineage deepens per batch and the pinned embedding
         caches accumulate for the life of the session. A violations frame
         returned by a skip-mode ``add_records`` reads its batch's
-        checkpoint, so consume it before the next ``compact()``."""
+        checkpoint, so consume it before the next ``compact()``. ``path``
+        must not be where the records table reads from, such as the
+        previous ``compact``'s path: ``save_parquet`` raises
+        ``ValueError`` for it and nothing changes."""
         self.save_parquet(path)
         self._records = _read_records(self.spark, path)
         for df in self._pinned:
@@ -379,7 +383,25 @@ class SparkEmbeddingDatabase:
 
     def save_parquet(self, path: str, mode: str = "overwrite") -> None:
         """Native scalable storage: records partitioned by collection_id
-        (SURVEY §1.3). Catalog is embedded as a tiny side table."""
+        (SURVEY §1.3). Catalog is embedded as a tiny side table.
+
+        Raises ``ValueError``, before writing anything, when ``path`` is
+        where the records table currently reads from (a second
+        ``compact`` to one path, or a save after ``load_parquet`` of the
+        same path): the overwrite would delete those files while the
+        write is still reading them."""
+        def key(uri: str) -> tuple[str, str, str]:
+            u = urlsplit(uri)
+            return u.scheme, u.netloc, unquote(u.path).rstrip("/")
+
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(f"{path}/records")
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        scheme, netloc, root = key(fs.makeQualified(jpath).toUri().toString())
+        if any(k[:2] == (scheme, netloc) and k[2].startswith(root + "/")
+               for k in map(key, self._records.inputFiles())):
+            raise ValueError(
+                f"cannot save to {path!r}: the records table reads from "
+                f"it; save to another path")
         self._records.write.mode(mode).partitionBy("collection_id").parquet(f"{path}/records")
         self.collections_df().write.mode(mode).parquet(f"{path}/collections")
 

@@ -1,58 +1,40 @@
-"""Vector kernels: Catalyst higher-order-function expressions plus
-bit-exact Arrow-vectorized twins for bulk scoring.
+"""Vector kernels: Catalyst higher-order-function expressions.
 
 Reference parity: ``CosineSimilarity`` (/root/reference/utils/utils.go:9-24):
   cos(x,y) = Σ xᵢyᵢ / (‖x‖·‖y‖)
   - length mismatch  → error      (utils/utils.go:11-13)
   - either norm == 0 → 0.0, NO error (utils/utils.go:19-21)
 
-Two evaluators, one semantics:
+One evaluator: ``cosine_similarity``, the pure-Catalyst HOF expression
+(``zip_with`` + ``aggregate``). No Python boundary; the SQL registry
+mirrors it. Catalyst higher-order functions are CodegenFallback — each
+row evaluates the lambda tree interpreted, measured ~15 µs/row for
+dim=64 (round-10 optimization pass), so a scoring scan burns one
+core-second per ~65k rows. Query batches are ranked by
+``operators.topk.record_topk_batches`` instead, which runs the same
+strict left fold over the dimension (``acc = acc + x_d * y_d``)
+vectorized across rows and queries, so its scores are bit-identical to
+this kernel. numpy's own ``dot``/``einsum`` are deliberately NOT used
+there — pairwise summation rounds differently from a left fold.
 
-- ``cosine_similarity`` — the pure-Catalyst HOF expression (``zip_with``
-  + ``aggregate``). No Python boundary; the general-purpose kernel and
-  the one the SQL registry mirrors. BUT: Catalyst higher-order
-  functions are CodegenFallback — each row evaluates the lambda tree
-  interpreted, measured ~15 µs/row for dim=64 (round-10 optimization
-  pass), so a scoring scan burns one core-second per ~65k rows.
-- ``cosine_similarity_arrow`` / ``cosine_scores_arrow`` — vectorized
-  pandas UDFs that perform the IDENTICAL sequence of IEEE-754 f64 ops
-  (a strict left fold over the dimension, vectorized ACROSS rows:
-  ``acc = acc + x_d * y_d`` per dimension), so every score is
-  bit-identical to the HOF kernel (pinned by tests; verified bitwise
-  over 200k pairs at sf0.1). ~10× per-row throughput for dim=64 (guide
-  §4.2: batch work belongs in vectorized native code). numpy's own
-  ``dot``/``einsum`` are deliberately NOT used — pairwise summation
-  rounds differently from a left fold. The batch scorer
-  (``operators.topk.record_topk_batches``) runs the same fold across
-  rows and queries at once.
-
-  Used by the bulk scoring paths (operators.topk, operators.ann) where
-  the input columns are the narrow (id, vector) projections those
-  operators already select — the Arrow boundary ships exactly the
-  arrays being scored (guide §4.1: pass only what the function needs).
-
-  NULL-element convention (round 11, closing the r10 "KNOWN EDGE"): a
-  NULL *element* inside an otherwise well-formed vector scores **NaN**
-  in BOTH kernel modes. Arrow→pandas renders a null list element as NaN
-  (indistinguishable from a stored NaN), so NaN is what the vectorized
-  twins compute; the dispatched HOF side reaches the same value through
-  ``_null_element_to_nan`` — a codegen CASE over the already-computed
-  fold (a NULL fold result under non-NULL, length-matched inputs can
-  ONLY mean a NULL element poisoned it), so the well-formed hot path
-  pays two O(1) size/null checks and nothing else. NULL *vectors*,
-  length mismatches, zero norms, NaN/±Inf values were already identical
-  in both modes. Pinned by
-  tests/test_kernels.py::test_null_element_vectors_agree_in_both_modes.
+``cosine_pairs_kernel`` / ``cosine_scores_kernel`` are the bulk scoring
+entry points: ``cosine_similarity`` plus the NULL-element convention. A
+NULL *element* inside an otherwise well-formed vector scores **NaN**,
+the value the record scorer computes (Arrow→numpy renders a null list
+element as NaN). The HOF reaches it through ``_null_element_to_nan`` —
+a codegen CASE over the already-computed fold (a NULL fold result under
+non-NULL, length-matched inputs can ONLY mean a NULL element poisoned
+it), so the well-formed hot path pays two O(1) size/null checks and
+nothing else. NULL *vectors*, length mismatches, zero norms and
+NaN/±Inf values keep ``cosine_similarity``'s semantics. Pinned by
+tests/test_kernels.py::test_null_element_vectors_score_nan.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 
 def _as_double(v: Column) -> Column:
@@ -123,36 +105,9 @@ def cosine_similarity(x: Column, y: Column, *, strict: bool = False) -> Column:
     return sim
 
 
-def _fold_cosine_block(X: "np.ndarray", Y: "np.ndarray") -> "np.ndarray":
-    """Cosine over row-aligned (n, d) float64 matrices with the EXACT
-    association order of the Catalyst kernel: for each of dot/normx/normy
-    a strict left fold over the dimension (``acc = acc + x_d*y_d``),
-    vectorized across the n rows. Every numpy elementwise op is a
-    correctly-rounded IEEE-754 f64 op — identical op sequence per row ⇒
-    identical bits. Zero denominator → 0.0 (reference parity); NaN/Inf
-    flow through IEEE arithmetic exactly as in the JVM."""
-    n = X.shape[0]
-    dot = np.zeros(n)
-    nx = np.zeros(n)
-    ny = np.zeros(n)
-    for d in range(X.shape[1]):
-        xd = X[:, d]
-        yd = Y[:, d]
-        dot = dot + xd * yd
-        nx = nx + xd * xd
-        ny = ny + yd * yd
-    den = np.sqrt(nx) * np.sqrt(ny)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(den == 0.0, 0.0, dot / den)
-
-
-def _stack_f64(vals: list) -> "np.ndarray":
-    return np.stack(vals).astype(np.float64, copy=False) if vals else \
-        np.empty((0, 0))
-
-
 def _fold_norm_block(X: "np.ndarray") -> "np.ndarray":
-    """sqrt(Σ x²) per row with the kernel's left-fold association order."""
+    """sqrt(Σ x²) per row with the kernel's left-fold association order
+    (the record scorer's norm, ``operators.topk.record_topk_batches``)."""
     acc = np.zeros(X.shape[0])
     for d in range(X.shape[1]):
         xd = X[:, d]
@@ -160,82 +115,12 @@ def _fold_norm_block(X: "np.ndarray") -> "np.ndarray":
     return np.sqrt(acc)
 
 
-@pandas_udf(DoubleType())
-def _cosine_pair_arrow(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    xv = xs.to_numpy()
-    yv = ys.to_numpy()
-    n = len(xv)
-    res = np.zeros(n, dtype=np.float64)
-    res_null = np.zeros(n, dtype=bool)
-    groups: dict[tuple[int, int], list[int]] = {}
-    for i in range(n):
-        if xv[i] is None or yv[i] is None:
-            res_null[i] = True
-        else:
-            groups.setdefault((len(xv[i]), len(yv[i])), []).append(i)
-    for (dx, dy), idxs in groups.items():
-        ii = np.asarray(idxs)
-        if dx != dy:
-            # HOF semantics on a length mismatch: the denominator is
-            # computed per side over each FULL vector (no zip), and the
-            # den == 0.0 branch fires BEFORE the dot — so a mismatch
-            # with a zero-norm side is 0.0; otherwise the zip_with NULL
-            # padding poisons the dot and the result is NULL.
-            den = (_fold_norm_block(_stack_f64([xv[i] for i in idxs]))
-                   * _fold_norm_block(_stack_f64([yv[i] for i in idxs])))
-            zero = den == 0.0
-            res[ii[zero]] = 0.0
-            res_null[ii[~zero]] = True
-            continue
-        sims = _fold_cosine_block(_stack_f64([xv[i] for i in idxs]),
-                                  _stack_f64([yv[i] for i in idxs]))
-        res[ii] = sims
-    # FloatingArray(values, mask) — NOT pd.array(..., "Float64"), which
-    # coerces NaN VALUES to NA: a stored-NaN score must stay NaN (the HOF
-    # kernel's IEEE behavior); only the mask rows are SQL NULL.
-    return pd.Series(pd.arrays.FloatingArray(res, res_null))
-
-
-def cosine_similarity_arrow(x: Column, y: Column) -> Column:
-    """Arrow-vectorized bit-exact twin of ``cosine_similarity(x, y)``
-    (non-strict form) — see the module docstring for the equivalence
-    argument and the one documented edge divergence (NULL element →
-    NaN instead of NULL)."""
-    return _cosine_pair_arrow(_as_double(x), _as_double(y))
-
-
-def _arrow_kernel_enabled() -> bool:
-    """Kernel dispatch policy for the bulk scoring paths (round-10
-    optimization pass, measured both regimes):
-
-    - per-row: the HOF kernel evaluates interpreted at ~15 µs/row
-      (dim=64); the Arrow kernel is ~10× per-row but pays a fixed
-      ArrowEvalPython stage cost (worker round-trip + Arrow transpose,
-      ~0.1-0.25 s per scoring stage on local[32]).
-    - crossover ≈ 15k scored rows per stage: an alternating in-process
-      A/B over the 9 similarity gate queries at sf0.1 (6k-60k scored
-      rows each) measured the Arrow path NET +0.5 s across them, while
-      a 200k-pair scoring stage measured 3.7 s HOF vs 1.4 s Arrow.
-
-    Default is the HOF kernel: the driver's bench runs at sf0.1 where
-    every scoring stage sits below the crossover, and a default must
-    keep that bench comparable (driver contract). At production scale
-    every scoring stage is far above the crossover — set
-    ``SPARK_GRAFT_COSINE_KERNEL=arrow`` there. Both paths produce
-    bit-identical scores (pinned by tests/test_kernels.py), so the
-    switch is a pure physical-plan choice, like AQE join selection."""
-    import os
-    return os.environ.get("SPARK_GRAFT_COSINE_KERNEL", "hof").lower() == \
-        "arrow"
-
-
 def _null_element_to_nan(sim: Column, x: Column, y: Column) -> Column:
     """Map the HOF kernel's NULL-element outcome to the kernel-contract
     NaN (module docstring). Under non-NULL inputs of EQUAL length the
     fold result is NULL iff a NULL element poisoned it — every other
     NULL source (NULL vector, length mismatch) is excluded by the
-    guards, so this rewrites exactly the divergent case and nothing
-    else.
+    guards, so this rewrites exactly that case and nothing else.
 
     Implementation is ``coalesce(sim, <guarded NaN>)``: coalesce
     evaluates ``sim`` exactly ONCE and short-circuits — on the
@@ -255,67 +140,19 @@ def _null_element_to_nan(sim: Column, x: Column, y: Column) -> Column:
 
 
 def cosine_pairs_kernel(x: Column, y: Column) -> Column:
-    """Bulk pair-scoring kernel with env-dispatched evaluator (see
-    ``_arrow_kernel_enabled``). Semantics of ``cosine_similarity(x, y)``
-    in both modes, plus the kernel-contract NULL-element → NaN rule —
-    the dispatch is a pure physical-plan choice on EVERY input."""
-    if _arrow_kernel_enabled():
-        return cosine_similarity_arrow(x, y)
+    """Bulk pair-scoring kernel: ``cosine_similarity(x, y)`` plus the
+    NULL-element → NaN rule (module docstring)."""
     x, y = _as_double(x), _as_double(y)
     return _null_element_to_nan(cosine_similarity(x, y), x, y)
 
 
 def cosine_scores_kernel(vec: Column, qvec: list[float]) -> Column:
-    """Bulk literal-query scoring kernel with env-dispatched evaluator.
-    Semantics of ``cosine_similarity(vec, array(<qvec literals>))`` in
-    both modes, plus the kernel-contract NULL-element → NaN rule."""
-    if _arrow_kernel_enabled():
-        return cosine_scores_arrow(vec, qvec)
+    """Bulk literal-query scoring kernel:
+    ``cosine_similarity(vec, array(<qvec literals>))`` plus the
+    NULL-element → NaN rule (module docstring)."""
     vec = _as_double(vec)
     q = F.array(*[F.lit(float(v)) for v in qvec])
     return _null_element_to_nan(cosine_similarity(vec, q), vec, q)
-
-
-def cosine_scores_arrow(vec: Column, qvec: list[float]) -> Column:
-    """Arrow-vectorized bit-exact twin of
-    ``cosine_similarity(vec, F.array(*map(F.lit, qvec)))`` for a single
-    LITERAL query vector. The query rides the UDF closure, so only the
-    record vector crosses the Arrow boundary — half the transfer of the
-    pair form on single-query scans."""
-    q = np.asarray([float(v) for v in qvec], dtype=np.float64)
-
-    @pandas_udf(DoubleType())
-    def _score(xs: pd.Series) -> pd.Series:
-        xv = xs.to_numpy()
-        n = len(xv)
-        res = np.zeros(n, dtype=np.float64)
-        res_null = np.zeros(n, dtype=bool)
-        idxs: list[int] = []
-        groups: dict[int, list[int]] = {}
-        for i in range(n):
-            if xv[i] is None:
-                res_null[i] = True
-            elif len(xv[i]) != len(q):
-                groups.setdefault(len(xv[i]), []).append(i)
-            else:
-                idxs.append(i)
-        if idxs:
-            X = _stack_f64([xv[i] for i in idxs])
-            Q = np.broadcast_to(q, X.shape)
-            res[np.asarray(idxs)] = _fold_cosine_block(X, Q)
-        # mismatched lengths: den-before-dot HOF semantics (see
-        # _cosine_pair_arrow) — zero-norm sides give 0.0, else NULL
-        qn = _fold_norm_block(q.reshape(1, -1))[0]
-        for dx, mism in groups.items():
-            ii = np.asarray(mism)
-            den = _fold_norm_block(_stack_f64([xv[i] for i in mism])) * qn
-            zero = den == 0.0
-            res[ii[zero]] = 0.0
-            res_null[ii[~zero]] = True
-        # same NaN-preserving construction as _cosine_pair_arrow
-        return pd.Series(pd.arrays.FloatingArray(res, res_null))
-
-    return _score(_as_double(vec))
 
 
 def well_formed_vector(v: Column, dim: int) -> Column:

@@ -461,7 +461,7 @@ def repetition_features(text: Column) -> dict[str, Column]:
     out["n_words"] = F.size(ws)
     out["dup_word_frac"] = (n_words - F.size(F.array_distinct(ws))) / safe
     for n in (2, 3):
-        grams = ngrams_all_kernel(text, n)
+        grams = ngrams_all(text, n)
         total = F.size(grams).cast("double")
         safe_g = F.when(total == 0, 1.0).otherwise(total)
         out[f"dup_{n}gram_frac"] = (
@@ -549,86 +549,8 @@ def pii_counts_sql(expr: str) -> dict[str, str]:
     }
 
 
-# -- Arrow-vectorized tokenizer twins (round-11 optimization) ----------------
-#
-# The array-producing tokenizer expressions above (shingles / ngrams_all /
-# ngram_bag) are built from Catalyst higher-order functions, which are
-# CodegenFallback: the per-shingle lambda tree (array_join over slice)
-# evaluates INTERPRETED, the same ~15 µs/row class the round-10 pass
-# measured for the cosine HOF kernel. The twins below run the existing
-# Python kernels (shingles_py / ngram_bag_py — already the UNICHECK-audited
-# twins the signature UDFs use) over Arrow batches instead. Values are
-# identical by construction: ASCII ``\s`` equals WS_CHARS exactly,
-# lower_x_py carries the İ/Σ pre-substitution, dict.fromkeys reproduces
-# array_distinct's first-occurrence order, and the blank/NULL conventions
-# match the Column twins (NULL → NULL restored at the boundary; the py
-# kernels' None→[] convention applies only inside batches). Pinned by
-# tests/test_text.py::test_text_kernel_twins_match_catalyst_exactly.
-#
-# Dispatch: SPARK_GRAFT_TEXT_KERNEL=arrow selects the vectorized twins in
-# the bulk dedup/selection paths (operators.dedup, operators.dsir,
-# operators.retrieval). Default stays the Catalyst expression — the same
-# measured-crossover reasoning as SPARK_GRAFT_COSINE_KERNEL (ArrowEvalPython
-# stages pay a fixed ~0.1-0.25 s worker/transpose cost that the sf0.1 gate
-# regime does not amortize); SCALE.json's text_kernel_ab rows carry the
-# measured A/B at the gate and 100× shapes.
-
-
-def _text_arrow_enabled() -> bool:
-    import os
-    return os.environ.get("SPARK_GRAFT_TEXT_KERNEL", "hof").lower() == \
-        "arrow"
-
-
-def shingles_arrow(text: Column, n: int = 3) -> Column:
-    """Arrow-batched twin of :func:`shingles` (identical values, NULL →
-    NULL, blank → empty array)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _sh(texts):
-        import pandas as pd
-        return pd.Series(
-            [None if t is None else shingles_py(t, n) for t in texts])
-
-    return _sh(text)
-
-
-def shingles_kernel(text: Column, n: int = 3) -> Column:
-    """Bulk shingling kernel with env-dispatched evaluator (see the
-    section comment). Semantics of ``shingles(text, n)`` in both modes."""
-    if _text_arrow_enabled():
-        return shingles_arrow(text, n)
-    return shingles(text, n)
-
-
-def _bag_arrow(text: Column, n: int) -> Column:
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _bag(texts):
-        import pandas as pd
-        return pd.Series([ngram_bag_py(t, n) for t in texts])
-
-    return _bag(text)
-
-
-def ngrams_all_kernel(text: Column, n: int = 2) -> Column:
-    """Bulk positional-n-gram kernel (``ngrams_all`` semantics — WITH
-    multiplicity) with env-dispatched evaluator. ``ngram_bag_py`` IS the
-    positional bag: ngrams_all and ngram_bag differ only in their
-    consumers, not their construction."""
-    if _text_arrow_enabled():
-        return _bag_arrow(text, n)
-    return ngrams_all(text, n)
-
-
-def ngram_bag_kernel(text: Column, n: int = 2) -> Column:
-    """Bulk DSIR-feature-bag kernel with env-dispatched evaluator.
-    Semantics of ``ngram_bag(text, n)`` in both modes."""
-    if _text_arrow_enabled():
-        return _bag_arrow(text, n)
-    return ngram_bag(text, n)
+# perfbench imports the bulk-shingling name.
+shingles_kernel = shingles
 
 
 def doc_fingerprint(text: Column, n: int = 3) -> Column:
@@ -639,7 +561,7 @@ def doc_fingerprint(text: Column, n: int = 3) -> Column:
     over the r10 zero-shingle convention — through r09 Spark hashed the
     phantom '' shingle here while DuckDB returned NULL)."""
     return F.array_min(
-        F.transform(shingles_kernel(text, n),
+        F.transform(shingles(text, n),
                     lambda s: F.md5(s.cast("binary")))
     )
 

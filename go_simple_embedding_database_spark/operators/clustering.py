@@ -76,90 +76,16 @@ def _dist2_sql(qvd_expr: str, centroid: list[float]) -> str:
 def _argmin_cell(qvd_expr: str, centroids: list[list[float]]) -> Column:
     """Index of the nearest centroid; ties -> smallest index (struct min
     is lexicographic on (distance, cluster_id)). ``qvd_expr`` is a SQL
-    expression string for the double-array column."""
+    expression string for the double-array column.
+
+    A NULL element poisons every centroid's fold, so all k distances are
+    NULL and the struct min picks (NULL, 0): such a row lands in cell 0.
+    Pinned with the tie and on-centroid cases by
+    tests/test_clustering.py::test_argmin_cell_ties_and_malformed_rows."""
     structs = ", ".join(
         f"struct({_dist2_sql(qvd_expr, c)} AS d, {j} AS c)"
         for j, c in enumerate(centroids))
     return F.expr(f"array_min(array({structs})).c")
-
-
-def _kmeans_arrow_enabled() -> bool:
-    """Round-11 dispatch for the assignment argmin, the same
-    measured-crossover pattern as SPARK_GRAFT_COSINE_KERNEL (round 10):
-    the k × 2 HOF folds per row are CodegenFallback (~15 µs/row-class
-    interpreted evaluation × k centroids), the Arrow twin is the same
-    IEEE op sequence vectorized across rows but pays the fixed
-    ArrowEvalPython stage cost the sf0.1 gate regime (2-4k assigned
-    rows/pass) does not amortize. Default hof keeps the driver's bench
-    and the committed default-mode plans byte-comparable;
-    SPARK_GRAFT_KMEANS_KERNEL=arrow is the production value —
-    SCALE.json's kmeans_argmin_ab rows carry the measured A/B."""
-    import os
-    return os.environ.get("SPARK_GRAFT_KMEANS_KERNEL", "hof").lower() == \
-        "arrow"
-
-
-def _argmin_cell_arrow(qvd_col: Column,
-                       centroids: list[list[float]]) -> Column:
-    """Arrow-vectorized bit-exact twin of ``_argmin_cell``.
-
-    Exactness: per centroid j the distance is the strict left fold
-    ``acc = acc + (x_d - c_jd) * (x_d - c_jd)`` over array order — the
-    association order of both the Spark HOF and the DuckDB twin —
-    vectorized ACROSS rows (every numpy elementwise op is one correctly
-    rounded IEEE-754 f64 op, so each row sees the identical op sequence
-    ⇒ identical distance bits). ``np.argmin`` returns the FIRST minimum,
-    which is exactly the struct-min (distance, cluster_id) tie rule.
-
-    Degenerate parity (pinned by tests/test_clustering.py): the inputs
-    are quantized integers as doubles, so NaN can enter ONLY as a NULL
-    element rendered NaN by the Arrow transfer — and a NULL element
-    poisons EVERY centroid's fold, so the row is all-NaN across
-    centroids in both evaluators: the HOF struct-min picks (NULL, 0)
-    (NULL distances sort first, ties on the id) and ``np.argmin`` over
-    an all-NaN row returns 0. A mixed NaN/finite row cannot occur (one
-    x poisons all k distances)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = [np.asarray(c, dtype=np.float64) for c in centroids]
-    dim = len(centroids[0])
-
-    # No type hints on purpose: under this module's ``from __future__
-    # import annotations`` PEP 563 stringifies them and pyspark cannot
-    # resolve 'pd.Series' (pd is function-local) — the exact failure
-    # class that silently disabled the bench warmup until r10.
-    @pandas_udf("int")
-    def _argmin(xs):
-        vals = xs.to_numpy()
-        X = (np.stack(vals).astype(np.float64, copy=False)
-             if len(vals) else np.empty((0, dim)))
-        n = X.shape[0]
-        D = np.empty((n, len(C)), dtype=np.float64)
-        for j, c in enumerate(C):
-            acc = np.zeros(n)
-            for d in range(dim):
-                t = X[:, d] - c[d]
-                acc = acc + t * t
-            D[:, j] = acc
-        # np.argmin: first minimum == (distance, id) struct-min; an
-        # all-NaN row (NULL element) returns 0 on both evaluators.
-        with np.errstate(invalid="ignore"):
-            cell = D.argmin(axis=1) if n else np.empty(0, dtype=np.int64)
-        return pd.Series(cell.astype(np.int32))
-
-    return _argmin(qvd_col)
-
-
-def _argmin_cell_kernel(qvd_name: str,
-                        centroids: list[list[float]]) -> Column:
-    """Assignment argmin with env-dispatched evaluator (see
-    ``_kmeans_arrow_enabled``). ``qvd_name`` is the NAME of the
-    double-array column (both evaluators address it by name)."""
-    if _kmeans_arrow_enabled():
-        return _argmin_cell_arrow(F.col(qvd_name), centroids)
-    return _argmin_cell(qvd_name, centroids)
 
 
 def kmeans_assign(df: DataFrame, centroids: list[list[float]],
@@ -185,7 +111,7 @@ def kmeans_assign(df: DataFrame, centroids: list[list[float]],
                       & (F.size(vec_col) == len(centroids[0])))
             .withColumn("_kmeans_qvd", qvd)
             .withColumn(cell_col,
-                        _argmin_cell_kernel("_kmeans_qvd", centroids))
+                        _argmin_cell("_kmeans_qvd", centroids))
             .drop("_kmeans_qvd"))
 
 
@@ -262,7 +188,7 @@ def kmeans_fit(df: DataFrame, k: int, n_iter: int,
                     for i in range(dim)]
         for _ in range(n_iter):
             assigned = qdd.withColumn(
-                "_cell", _argmin_cell_kernel("_qvd", centroids))
+                "_cell", _argmin_cell("_qvd", centroids))
             # Exact integer sufficient statistics: per-cell component sums
             # as dim COLUMN aggregates (not posexplode): partial aggregation
             # emits k rows per task either way, but explode would first
@@ -280,7 +206,7 @@ def kmeans_fit(df: DataFrame, k: int, n_iter: int,
         qd.unpersist()
     assignments = (q.filter(F.size("_qv") == len(centroids[0]))
         .withColumn("_qvd", F.transform("_qv", lambda x: x.cast("double")))
-        .withColumn("_cell", _argmin_cell_kernel("_qvd", centroids))
+        .withColumn("_cell", _argmin_cell("_qvd", centroids))
         .select(F.col("_id").alias(id_col),
                 F.col("_cell").alias("cluster_id")))
     return assignments, centroids

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from go_simple_embedding_database_spark.functions.text import (
-    ngrams_all_kernel, shingles, shingles_kernel, shingles_sql)
+    ngrams_all, shingles, shingles_sql)
 from go_simple_embedding_database_spark.operators.topk import similarity_join
 
 MERSENNE_P = 2147483647  # 2^31 - 1
@@ -88,14 +88,6 @@ def exact_dedup_keep(df: DataFrame, content_col: str = "text",
 
 # -- MinHash + LSH -------------------------------------------------------------
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """array<bigint>: base hash per distinct word-n-gram shingle."""
-    return F.transform(
-        shingles(text, n),
-        lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("bigint"),
-    )
-
-
 def shingle_hashes_sql(expr: str, n: int = 3) -> str:
     return (
         f"list_transform({shingles_sql(expr, n)}, "
@@ -115,13 +107,13 @@ def _shingle_hashes_py(text: str, n: int) -> "np.ndarray":
 
 def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
     """array<bigint> of length num_hashes: min over shingles of each family
-    hash — identical values to ``minhash_signature_expr`` / the DuckDB twin.
+    hash — identical values to the DuckDB twin ``minhash_signature_sql``.
 
     Implemented as an Arrow-batched pandas_udf: the recipe needs one md5
     per shingle, and hashlib's C md5 + one numpy (S × H) modmul is ~20×
-    faster than the interpreted md5/conv/substring HOF tree (measured
-    20.3s → ~1s for 500 docs × 12 hashes); the expression variant cannot
-    whole-stage-codegen so "UDFs are the slow path" loses to measurement
+    faster than an interpreted md5/conv/substring HOF tree (measured
+    20.3s → ~1s for 500 docs × 12 hashes); such an expression cannot
+    whole-stage-codegen, so "UDFs are the slow path" loses to measurement
     here, exactly as with the mock-hash embedder."""
     params = _minhash_params(num_hashes)
     a = np.array([p[0] for p in params], dtype=np.int64)
@@ -146,22 +138,6 @@ def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
         return pd.Series(out)
 
     return _sig(text)
-
-
-def minhash_signature_expr(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
-    """Pure-Catalyst variant of ``minhash_signature`` (no Python in the
-    plan) — kept for plan-purity comparison; see minhash_signature for why
-    it is not the default."""
-    hs = shingle_hashes(text, n)
-
-    def fam(a: int, b: int):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE_P
-
-    mins = [
-        F.array_min(F.transform(hs, fam(a, b)))
-        for a, b in _minhash_params(num_hashes)
-    ]
-    return F.array(*mins)
 
 
 def minhash_signature_sql(expr: str, num_hashes: int = 12, n: int = 3) -> str:
@@ -295,7 +271,7 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     outnumber documents when boilerplate shares band buckets)."""
     cand = minhash_candidate_pairs(df, text_col, id_col, num_hashes, bands, n)
     sh = df.select(F.col(id_col),
-                   shingles_kernel(F.col(text_col), n).alias("_sh"))
+                   shingles(F.col(text_col), n).alias("_sh"))
     withs = (
         cand.join(sh.withColumnRenamed(id_col, "id_a")
                   .withColumnRenamed("_sh", "_sa"), "id_a")
@@ -353,7 +329,7 @@ def length_band_jaccard_dedup(df: DataFrame, text_col: str = "text",
     # Shingle ONCE per document — the verify stage reads these arrays back
     # by id instead of re-tokenizing per candidate pair (measured 20x).
     base = (df.select(id_col, *block_cols, band.alias("_band"),
-                      shingles_kernel(F.col(text_col), n).alias("_sh"))
+                      shingles(F.col(text_col), n).alias("_sh"))
             .localCheckpoint(eager=False))
     tok = base.select(id_col, *block_cols, "_band",
                       F.size("_sh").alias("_nsh"),
@@ -520,17 +496,6 @@ def _shingle_hashes60_py(text: str, n: int) -> "np.ndarray":
     )
 
 
-def shingle_hashes60(text: Column, n: int = 3) -> Column:
-    """array<bigint>: 60-bit base hash per shingle (Catalyst twin of
-    ``_shingle_hashes60_py``)."""
-    return F.transform(
-        shingles(text, n),
-        lambda s: F.conv(
-            F.substring(F.md5(s.cast("binary")), 1, _SIMHASH_HEX_CHARS),
-            16, 10).cast("bigint"),
-    )
-
-
 def shingle_hashes60_sql(expr: str, n: int = 3) -> str:
     return (
         f"list_transform({shingles_sql(expr, n)}, "
@@ -546,7 +511,7 @@ def simhash(text: Column, n: int = 3) -> Column:
     Arrow-batched pandas_udf for the same reason as ``minhash_signature``:
     60 interpreted per-bit folds over the shingle array cannot codegen
     (measured 13.7s → ~1s for 500 docs at 32 bits); values are identical
-    to ``simhash_expr`` and the DuckDB twin."""
+    to the DuckDB twin ``simhash_sql``."""
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     @pandas_udf("bigint")
@@ -559,25 +524,6 @@ def simhash(text: Column, n: int = 3) -> Column:
         return pd.Series(out)
 
     return _fp(text)
-
-
-def simhash_expr(text: Column, n: int = 3) -> Column:
-    """Pure-Catalyst variant of ``simhash`` — kept for plan-purity
-    comparison; see simhash for why it is not the default."""
-    hs = shingle_hashes60(text, n)
-
-    def vote(b: int):
-        return lambda acc, x: acc + (
-            F.shiftright(x, b).bitwiseAND(F.lit(1)) * 2 - 1
-        ).cast("int")
-
-    bit_votes = [
-        F.aggregate(hs, F.lit(0), vote(b)) for b in range(SIMHASH_BITS)
-    ]
-    out = F.lit(0).cast("bigint")
-    for b, vote in enumerate(bit_votes):
-        out = out + F.when(vote > 0, F.lit(1 << b).cast("bigint")).otherwise(F.lit(0))
-    return out
 
 
 def simhash_sql(expr: str, n: int = 3) -> str:
@@ -1005,7 +951,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     grams = df.select(F.col(id_col).alias("_id"),
-                      F.explode(shingles_kernel(F.col(text_col), n))
+                      F.explode(shingles(F.col(text_col), n))
                       .alias("_g"))
     # Document frequency as a count-over-gram window, not a separate
     # aggregate joined back: one shuffle on the gram produces the
@@ -1194,9 +1140,8 @@ def positional_spans(text: Column, n: int = 5) -> Column:
     >=50-token spans across a corpus are memorization fuel). This IS
     ``functions.text.ngrams_all`` (repetition scoring needs the same
     with-multiplicity grams) — delegated so the tokenization and the
-    short-document rule have exactly one definition (the _kernel form
-    rides the SPARK_GRAFT_TEXT_KERNEL dispatch)."""
-    return ngrams_all_kernel(text, n)
+    short-document rule have exactly one definition."""
+    return ngrams_all(text, n)
 
 
 def positional_spans_sql(expr: str, n: int = 5) -> str:
@@ -1336,12 +1281,12 @@ def probe_band_index(new_docs: DataFrame, band_index: DataFrame,
               .join(cand.select("_new_id").distinct(),
                     F.col(id_col) == F.col("_new_id"), "leftsemi")
               .select(F.col(id_col).alias("_new_id"),
-                      shingles_kernel(F.col(text_col), n).alias("_sa")))
+                      shingles(F.col(text_col), n).alias("_sa")))
     corp_sh = (corpus
                .join(cand.select("_corpus_id").distinct(),
                      F.col(id_col) == F.col("_corpus_id"), "leftsemi")
                .select(F.col(id_col).alias("_corpus_id"),
-                       shingles_kernel(F.col(text_col), n).alias("_sb")))
+                       shingles(F.col(text_col), n).alias("_sb")))
     scored = (cand.join(new_sh, "_new_id").join(corp_sh, "_corpus_id")
               .select(F.col("_new_id").alias("new_id"),
                       F.col("_corpus_id").alias("corpus_id"),

@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import ngram_bag_kernel, ngram_bag_sql
+from ..functions.text import ngram_bag, ngram_bag_sql
 from .sampling import hash_bucket, hash_bucket_sql
 
 DEFAULT_BUCKETS = 4096  # divides 2^16: the md5-hex-prefix bucket is uniform
@@ -69,10 +69,11 @@ def ngram_bucket_table(df: DataFrame, id_col: str, text_col: str,
     """(id, bucket, _t) — one row per gram OCCURRENCE, localCheckpointed
     (lazy: blocks self-release when the result is dropped) because three
     consumers read it. NULL and whitespace-only text explode to zero
-    rows here (zero grams in all three ngram_bag twins since r10); the
-    corpus left join in :func:`dsir_weights` restores those documents."""
+    rows here (zero grams from ``ngram_bag`` and ``ngram_bag_sql`` since
+    r10); the corpus left join in :func:`dsir_weights` restores those
+    documents."""
     return (df.select(F.col(id_col), is_target.alias("_t"),
-                      F.explode(ngram_bag_kernel(F.col(text_col), n))
+                      F.explode(ngram_bag(F.col(text_col), n))
                       .alias("_g"))
             .select(id_col, "_t",
                     hash_bucket(F.col("_g"), num_buckets).alias("_b"))

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from go_simple_embedding_database_spark.functions.text import (
-    lower_x, lower_x_py, lower_x_sql, words, words_sql)
+    lower_x, lower_x_py, lower_x_sql, shingles, words, words_sql)
 
 __all__ = ["bm25_topk", "bm25_topk_sql", "unigram_quality",
            "unigram_quality_sql", "ngram_novelty", "ngram_novelty_sql"]
@@ -224,9 +224,6 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
     Returns (id_col, n_grams, novelty) — novelty rounded to 6 decimals
     for cross-engine hash parity.
     """
-    from go_simple_embedding_database_spark.functions.text import (
-        shingles_kernel)
-
     # A doc with zero words produces the degenerate empty shingle ''
     # under Spark's shingles() short-doc rule, where the SQL twin's list
     # comprehension produces no grams at all — drop it so empty /
@@ -234,7 +231,7 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
     # of nothing is undefined, not 1.0). Non-empty word slices can never
     # join to '', so no real gram is affected.
     grams = (docs.select(F.col(id_col).alias("_id"),
-                         F.explode(shingles_kernel(F.col(text_col), n))
+                         F.explode(shingles(F.col(text_col), n))
                          .alias("_g"))
              .filter(F.col("_g") != "")
              .localCheckpoint(eager=False))

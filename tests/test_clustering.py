@@ -147,57 +147,22 @@ def test_kmeans_excludes_null_and_ragged_vectors(spark, embeddings):
         r.vec_id for r in assigned.collect()}
 
 
-def test_argmin_kernel_dispatch_bitwise_parity(spark, embeddings, monkeypatch):
-    """Round-11 Arrow argmin twin: assignments and fitted centroids are
-    IDENTICAL (centroids bit-compared) under SPARK_GRAFT_KMEANS_KERNEL=
-    arrow, the dispatch is physical-only (default plan stays
-    Python-free; arrow plan carries ArrowEvalPython), and the
-    adversarial tie/degenerate fixtures agree."""
-    import struct
-
-    from go_simple_embedding_database_spark.operators.clustering import (
-        kmeans_assign, kmeans_fit)
-    from go_simple_embedding_database_spark.plans.explain_utils import (
-        formatted_plan)
-
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_KERNEL", raising=False)
-    a_hof, c_hof = kmeans_fit(embeddings, k=4, n_iter=2)
-    r_hof = sorted(map(tuple, a_hof.collect()))
-    assert "EvalPython" not in formatted_plan(a_hof)
-
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_KERNEL", "arrow")
-    a_ar, c_ar = kmeans_fit(embeddings, k=4, n_iter=2)
-    r_ar = sorted(map(tuple, a_ar.collect()))
-    assert "ArrowEvalPython" in formatted_plan(a_ar)
-    assert r_hof == r_ar
-    for x, y in zip(c_hof, c_ar):
-        assert struct.pack(f"<{len(x)}d", *x) == \
-               struct.pack(f"<{len(y)}d", *y)
-
-    # adversarial fixtures through kmeans_assign in both modes:
-    # exact-tie rows (equidistant -> smallest cluster id), a vector ON a
-    # centroid, and a NULL-element vector (all distances poisoned -> the
-    # all-NaN/all-NULL row lands in cell 0 under both evaluators)
+def test_argmin_cell_ties_and_malformed_rows(spark):
+    """The assignment argmin on adversarial fixtures through
+    kmeans_assign: exact-tie rows (equidistant -> smallest cluster id), a
+    vector ON a centroid, and a NULL-element vector (all distances
+    poisoned -> cell 0); NULL and wrong-dim vectors are excluded. The
+    plan stays Python-free."""
     cents = [[0.0, 0.0], [4.0, 0.0], [2.0, 0.0]]
-    rows = [(1, [2.0, 0.0]),      # tie between all three -> cell 2? no:
-                                  # d(c0)=4, d(c1)=4, d(c2)=0 -> cell 2
+    rows = [(1, [2.0, 0.0]),      # d(c0)=4, d(c1)=4, d(c2)=0 -> cell 2
             (2, [1.0, 0.0]),      # tie c0 vs c2 (1 vs 1) -> smaller id 0
             (3, [4.0, 0.0]),      # exactly on c1
             (4, [3.0, 0.0]),      # tie c1 vs c2 -> smaller id 1
-            (5, [None, 1.0]),     # NULL element -> cell 0 both modes
+            (5, [None, 1.0]),     # NULL element -> cell 0
             (6, None),            # NULL vector -> excluded
             (7, [1.0, 2.0, 3.0])]  # wrong dim -> excluded
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def assign(mode):
-        if mode:
-            monkeypatch.setenv("SPARK_GRAFT_KMEANS_KERNEL", mode)
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_KMEANS_KERNEL", raising=False)
-        out = kmeans_assign(df, cents, vec_col="embedding", scale=1)
-        return sorted((r.vec_id, r.cluster_id) for r in out.collect())
-
-    hof = assign(None)
-    arrow = assign("arrow")
-    assert hof == arrow
-    assert hof == [(1, 2), (2, 0), (3, 1), (4, 1), (5, 0)]
+    out = kmeans_assign(df, cents, vec_col="embedding", scale=1)
+    assert_not_in_plan(out, "EvalPython")
+    got = sorted((r.vec_id, r.cluster_id) for r in out.collect())
+    assert got == [(1, 2), (2, 0), (3, 1), (4, 1), (5, 0)]

@@ -256,6 +256,24 @@ def test_compact_keeps_numeric_collection_id_a_string(spark, tmp_path):
     assert sorted(r.id for r in db.records_df("123").collect()) == ["a", "b"]
 
 
+def test_compact_twice_to_one_path_keeps_records(db, spark, tmp_path):
+    """A second compact() to the path the records table now reads from
+    raises before writing, so no record is lost; a fresh path works."""
+    db.add_record("c1", _mk(db, "first", "r1"))
+    path = str(tmp_path / "compacted")
+    db.compact(path)
+    db.add_record("c1", _mk(db, "second", "r2"))
+    with pytest.raises(ValueError, match="reads from"):
+        db.compact(path)
+    assert sorted(r.id for r in db.records_df("c1").collect()) == ["r1", "r2"]
+    assert sorted(r.id for r in db.query("c1", "q", 5).collect()) == \
+        ["r1", "r2"]
+    db.compact(str(tmp_path / "fresh"))
+    assert sorted(r.id for r in db.records_df("c1").collect()) == ["r1", "r2"]
+    with pytest.raises(ValueError, match="reads from"):
+        SparkEmbeddingDatabase.load_parquet(spark, path).save_parquet(path)
+
+
 def _persistent_rdd_ids(spark) -> set:
     return {int(k) for k in
             spark.sparkContext._jsc.getPersistentRDDs().keySet()}

@@ -53,8 +53,8 @@ ROTATING_OFFICIAL_R09 = {
 
 # Official in the r10 gate (CORRECTNESS_r10.json) — the r11 tail. All
 # byte-identical in DEFAULT mode this round: the round-11 text/kmeans
-# kernel dispatches change plans only under their SPARK_GRAFT_*_KERNEL
-# env (plans/r11 before/after diffs pin this). TWO of them
+# kernel dispatches (since deleted) left default plans unchanged
+# (plans/r11 before/after diffs pin this). TWO of them
 # (similarity_join_knn, ann_recall) do carry the round-11 kernel guard
 # in their default plans with only r10-official rows: the window has no
 # free slot (1 + 3 + 2 + 44 = 50 exactly), their only delta is the same

@@ -129,113 +129,15 @@ def test_well_formed_vector_twins_agree_on_every_edge(spark):
     assert bool(d) is False
 
 
-def test_arrow_kernel_bitwise_matches_hof_kernel(spark):
-    """The Arrow-vectorized kernels (round-10 optimization) must be
-    BIT-IDENTICAL to the Catalyst HOF kernel on every well-formed edge:
-    identical/opposite/orthogonal vectors, zero norms, empty vectors,
-    NULL vectors, length mismatches, NaN/Inf values, float32 promotion,
-    and 64-dim vectors drawn from the real embeddings fixture shape.
-    struct.pack comparison — repr/round would hide last-ulp drift."""
-    import struct
-
-    from go_simple_embedding_database_spark.functions.kernels import (
-        cosine_pairs_kernel, cosine_scores_kernel, cosine_similarity,
-        cosine_similarity_arrow, cosine_scores_arrow)
-
-    rows = [
-        ([0.0, 1.0, 2.0, 3.0], [0.0, 1.0, 2.0, 3.0]),
-        ([0.0, 1.0, 2.0, 3.0], [0.0, -1.0, -2.0, -3.0]),
-        ([1.0, 1.0, 0.0, 0.0], [1.0, -1.0, 0.0, 0.0]),
-        ([0.0, 0.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.0]),   # zero norm -> 0.0
-        ([], []),                                        # empty -> 0.0
-        (None, [1.0, 2.0]),                              # NULL -> NULL
-        ([1.0, 2.0], None),
-        ([1.0, 2.0], [1.0, 2.0, 3.0]),                   # mismatch -> NULL
-        ([float("nan"), 1.0], [1.0, 1.0]),               # NaN flows
-        ([float("inf"), 1.0], [1.0, 1.0]),               # Inf flows
-        # 64-dim deterministic pseudo-embeddings (the gate shape)
-        ([float((i * 2654435761) % 1000) / 250.0 - 2.0 for i in range(64)],
-         [float((i * 40503 + 7) % 1000) / 250.0 - 2.0 for i in range(64)]),
-        ([float(i % 7) for i in range(64)],
-         [float((i + 3) % 7) for i in range(64)]),
-    ]
-    df = spark.createDataFrame(rows, "x array<double>, y array<double>")
-
-    def bits(col):
-        out = df.select(col.alias("s")).collect()
-        return [None if r.s is None
-                else struct.pack("<d", r.s) for r in out]
-
-    hof = bits(cosine_similarity(F.col("x"), F.col("y")))
-    arrow = bits(cosine_similarity_arrow(F.col("x"), F.col("y")))
-    assert arrow == hof
-
-    # closure (literal-query) form, incl. the zero-norm and NaN rows
-    for q in ([1.0, 2.0], [0.0, 0.0], [float((i * 31 + 1) % 17) / 4.0
-                                       for i in range(64)]):
-        hof_q = bits(cosine_similarity(
-            F.col("x"), F.array(*[F.lit(float(v)) for v in q])))
-        arrow_q = bits(cosine_scores_arrow(F.col("x"), q))
-        assert arrow_q == hof_q, q
-
-    # float32 promotion parity
-    f32 = spark.createDataFrame([([1.1, 2.2], [3.3, 4.4])],
-                                "x array<float>, y array<float>")
-    a = f32.select(cosine_similarity(F.col("x"), F.col("y")).alias("s")) \
-        .collect()[0].s
-    b = f32.select(cosine_similarity_arrow(F.col("x"), F.col("y"))
-                   .alias("s")).collect()[0].s
-    assert struct.pack("<d", a) == struct.pack("<d", b)
-
-
-def test_kernel_dispatch_honors_env(spark, monkeypatch):
-    """cosine_pairs_kernel/cosine_scores_kernel: HOF by default (the
-    sf0.1 bench regime sits below the ~15k-rows/stage crossover), Arrow
-    when SPARK_GRAFT_COSINE_KERNEL=arrow (the production regime). Both
-    modes must plan (and agree) — the switch is a physical choice only."""
-    import struct
-
+def test_null_element_vectors_score_nan(spark):
+    """A NULL element inside a vector scores NaN in both bulk kernels
+    (module docstring's NULL-element convention — the value the record
+    scorer computes). NULL vectors and length mismatches keep their
+    NULL/0.0 semantics, and neither kernel plans a Python evaluator."""
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel, cosine_scores_kernel)
     from go_simple_embedding_database_spark.plans.explain_utils import (
-        formatted_plan)
-
-    df = spark.createDataFrame([([1.0, 2.0], [2.0, 1.0])],
-                               "x array<double>, y array<double>")
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL", raising=False)
-    hof_col = cosine_pairs_kernel(F.col("x"), F.col("y"))
-    assert "EvalPython" not in formatted_plan(df.select(hof_col))
-    v_hof = df.select(hof_col.alias("s")).collect()[0].s
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "arrow")
-    arrow_col = cosine_pairs_kernel(F.col("x"), F.col("y"))
-    assert "ArrowEvalPython" in formatted_plan(df.select(arrow_col))
-    v_arrow = df.select(arrow_col.alias("s")).collect()[0].s
-    assert struct.pack("<d", v_hof) == struct.pack("<d", v_arrow)
-
-    # env is INTENTIONALLY still 'arrow' here: this draw exercises the
-    # scores kernel's arrow dispatch (ADVICE r10 — the old name v_hof_q
-    # misdescribed it, inviting a reorder that would drop the coverage)
-    v_arrow_q = df.select(
-        cosine_scores_kernel(F.col("x"), [1.0, 0.5]).alias("s")) \
-        .collect()[0].s
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL")
-    v_hof_q = df.select(
-        cosine_scores_kernel(F.col("x"), [1.0, 0.5]).alias("s")) \
-        .collect()[0].s
-    assert struct.pack("<d", v_arrow_q) == struct.pack("<d", v_hof_q)
-
-
-def test_null_element_vectors_agree_in_both_modes(spark, monkeypatch):
-    """Round-11 closure of the r10 'KNOWN EDGE': a NULL element inside a
-    vector scores NaN under BOTH kernel modes (module docstring's
-    NULL-element convention), so SPARK_GRAFT_COSINE_KERNEL is a pure
-    physical-plan choice on EVERY input, malformed ones included. NULL
-    vectors and length mismatches keep their NULL/0.0 semantics."""
-    import math
-
-    from go_simple_embedding_database_spark.functions.kernels import (
-        cosine_pairs_kernel, cosine_scores_kernel)
+        assert_not_in_plan)
 
     rows = [
         ([1.0, None, 2.0], [1.0, 1.0, 1.0]),   # NULL element -> NaN
@@ -246,22 +148,16 @@ def test_null_element_vectors_agree_in_both_modes(spark, monkeypatch):
         ([1.0, 2.0, 3.0], [1.0, 1.0, 1.0]),     # well-formed control
     ]
     df = spark.createDataFrame(rows, "x array<double>, y array<double>")
-
-    def sample():
-        out = df.select(
-            cosine_pairs_kernel(F.col("x"), F.col("y")).alias("p"),
-            cosine_scores_kernel(F.col("x"), [1.0, 1.0, 1.0]).alias("q"),
-        ).collect()
-        return [("nan" if isinstance(v, float) and math.isnan(v) else v)
-                for r in out for v in (r.p, r.q)]
-
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL", raising=False)
-    hof = sample()
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "arrow")
-    arrow = sample()
-    assert hof == arrow
-    # the formerly-divergent case is now NaN in both modes
-    assert hof[0] == "nan" and hof[2] == "nan"
-    # NULL vector stays NULL; zero-norm-side mismatch stays 0.0 (row 3's
-    # scores draw: [0.0, 0.0] vs the 3-dim literal query)
-    assert hof[8] is None and hof[7] == 0.0
+    scored = df.select(
+        cosine_pairs_kernel(F.col("x"), F.col("y")).alias("p"),
+        cosine_scores_kernel(F.col("x"), [1.0, 1.0, 1.0]).alias("q"))
+    assert_not_in_plan(scored, "EvalPython")
+    got = [("nan" if isinstance(v, float) and math.isnan(v) else v)
+           for r in scored.collect() for v in (r.p, r.q)]
+    # (pair, literal-query) score per row
+    assert got[:3] == ["nan", "nan", "nan"]
+    assert got[3] == pytest.approx(1.0)
+    # NULL vector stays NULL; the zero-norm side against the 3-dim
+    # literal query is 0.0 despite the length mismatch
+    assert got[4:10] == [None, None, None, 0.0, None, None]
+    assert got[10:] == pytest.approx([6.0 / math.sqrt(42.0)] * 2)

@@ -383,10 +383,10 @@ def test_ngram_bag_blank_document_convention(spark):
         assert n == 0, (sf, n)
 
 
-# ---- round-11 Arrow tokenizer twins ----------------------------------------
+# ---- tokenizer parity with the Python twins ------------------------------
 
-# The adversarial parity corpus for the text kernel dispatch: every class
-# the unicode/degenerate audits ever forked an engine on — the WS_CHARS
+# The adversarial parity corpus for the tokenizers: every class the
+# unicode/degenerate audits ever forked an engine on — the WS_CHARS
 # vertical tab, Turkish İ and Greek final-sigma casing, spaceless CJK,
 # blank/NULL/short documents, repeated grams, punctuation tokens, mixed
 # scripts, combining marks, astral-plane emoji, NBSP (NOT whitespace to
@@ -403,12 +403,14 @@ TEXT_KERNEL_PARITY_CASES = [
 ]
 
 
-def test_text_kernel_twins_match_catalyst_exactly(spark, monkeypatch):
-    """The Arrow tokenizer twins (shingles/ngrams_all/ngram_bag) must be
-    EXACTLY the Catalyst expressions — same values, same order, same
-    NULL/blank conventions — on the full adversarial corpus, so
-    SPARK_GRAFT_TEXT_KERNEL is a pure physical-plan choice (the same
-    contract as the cosine kernel dispatch)."""
+def test_text_kernel_twins_match_catalyst_exactly(spark):
+    """The Catalyst tokenizers (shingles/ngrams_all/ngram_bag) must equal
+    their Python twins (shingles_py/ngram_bag_py) — same values, same
+    order — on the full adversarial corpus: the MinHash/SimHash signature
+    UDFs hash ``shingles_py`` output, so any fork here would split the
+    signature from every Catalyst consumer of the same shingles. NULL
+    documents stay NULL on the Catalyst side (``shingles_py`` maps them
+    to the empty list inside an Arrow batch)."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXT_KERNEL_PARITY_CASES)],
         "i int, t string")
@@ -417,38 +419,11 @@ def test_text_kernel_twins_match_catalyst_exactly(spark, monkeypatch):
         return {r.i: (list(r.g) if r.g is not None else None)
                 for r in df.select("i", col.alias("g")).collect()}
 
-    for kernel, expr, ns in (
-            (tx.shingles_kernel, tx.shingles, (1, 2, 3, 5)),
-            (tx.ngrams_all_kernel, tx.ngrams_all, (1, 2, 3, 5)),
-            (tx.ngram_bag_kernel, tx.ngram_bag, (2, 3))):
+    for expr, py, ns in (
+            (tx.shingles, tx.shingles_py, (1, 2, 3, 5)),
+            (tx.ngrams_all, tx.ngram_bag_py, (1, 2, 3, 5)),
+            (tx.ngram_bag, tx.ngram_bag_py, (2, 3))):
         for n in ns:
-            monkeypatch.delenv("SPARK_GRAFT_TEXT_KERNEL", raising=False)
-            hof = grab(expr(F.col("t"), n))
-            monkeypatch.setenv("SPARK_GRAFT_TEXT_KERNEL", "arrow")
-            arrow = grab(kernel(F.col("t"), n))
-            assert arrow == hof, (kernel.__name__, n)
-            monkeypatch.delenv("SPARK_GRAFT_TEXT_KERNEL")
-            default = grab(kernel(F.col("t"), n))
-            assert default == hof, (kernel.__name__, n)
-
-
-def test_text_kernel_dispatch_is_physical_only(spark, monkeypatch):
-    """Default mode plans Python-free (the committed default-mode gate
-    plans must stay byte-identical); arrow mode plans the tokenizer as
-    ArrowEvalPython. doc_fingerprint and repetition_features ride the
-    same dispatch transitively."""
-    from go_simple_embedding_database_spark.plans.explain_utils import (
-        formatted_plan)
-
-    df = spark.createDataFrame([("a b c d",)], "t string")
-    monkeypatch.delenv("SPARK_GRAFT_TEXT_KERNEL", raising=False)
-    sel = df.select(tx.shingles_kernel(F.col("t")).alias("g"),
-                    tx.doc_fingerprint(F.col("t")).alias("fp"))
-    assert "EvalPython" not in formatted_plan(sel)
-    v_hof = sel.collect()[0]
-    monkeypatch.setenv("SPARK_GRAFT_TEXT_KERNEL", "arrow")
-    sel_a = df.select(tx.shingles_kernel(F.col("t")).alias("g"),
-                      tx.doc_fingerprint(F.col("t")).alias("fp"))
-    assert "ArrowEvalPython" in formatted_plan(sel_a)
-    v_arrow = sel_a.collect()[0]
-    assert (list(v_hof.g), v_hof.fp) == (list(v_arrow.g), v_arrow.fp)
+            want = {i: None if t is None else py(t, n)
+                    for i, t in enumerate(TEXT_KERNEL_PARITY_CASES)}
+            assert grab(expr(F.col("t"), n)) == want, (expr.__name__, n)

@@ -29,8 +29,6 @@ STEPS: dict[str, tuple[list[str], dict[str, str], str]] = {
     "plans": ([sys.executable, "tools/plans_report.py"], {}, "PLANS.md"),
     "selfcheck": ([sys.executable, "tools/self_correctness.py"], {},
                   "SELFCHECK.json"),
-    "selfcheck_arrow": ([sys.executable, "tools/self_correctness.py",
-                         "--arrow"], {}, "SELFCHECK_ARROW.json"),
     "empty": ([sys.executable, "tools/empty_probe.py", "--write"], {},
               "EMPTYCHECK.json"),
     "null": ([sys.executable, "tools/null_probe.py", "--write"], {},

@@ -578,151 +578,6 @@ def _bloom_ab(spark, dirs) -> dict:
     return out
 
 
-def _cosine_kernel_ab(spark, dirs) -> dict:
-    """HOF vs Arrow cosine kernel A/B (round-10 optimization pass): the
-    pair-kernel scored stream — corpus x M-query broadcast cross join,
-    every pair scored (similarity_join's shape) — timed under both
-    evaluators at 1x and deep
-    scale. Justifies the SPARK_GRAFT_COSINE_KERNEL dispatch default
-    (kernels.cosine_pairs_kernel): Catalyst HOFs are CodegenFallback
-    (~15 us/row interpreted at dim=64), the Arrow kernel is the same
-    IEEE-754 left-fold op sequence vectorized across rows (bitwise
-    equality pinned by tests/test_kernels.py) but pays a fixed
-    ArrowEvalPython stage cost — so hof wins below the ~15k-rows/stage
-    crossover (the sf0.1 gate regime) and arrow above it (the
-    production regime). Row counts recorded per side to prove both
-    evaluators computed the same stream."""
-    from pyspark.sql import functions as F
-
-    from go_simple_embedding_database_spark.functions.kernels import (
-        cosine_similarity, cosine_similarity_arrow)
-
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out = {}
-    for label, d, m_queries in dirs:
-        emb = (spark.read.parquet(f"{d}/embeddings.parquet")
-               .select("vec_id",
-                       F.col("embedding").cast("array<double>")
-                       .alias("embedding")))
-        # Query-batch size sets the PER-TASK scored volume (rows x M /
-        # splits) — the quantity the crossover is about. The gate-shaped
-        # M=3 row sits at/below the ~15k-rows/task crossover even at
-        # 100x (600k pairs / 64 splits); the M=100 row is the
-        # production batch_topk shape whose per-task volume is far
-        # above it, where the per-row advantage dominates the fixed
-        # ArrowEvalPython stage cost.
-        qset = (emb.filter(F.col("vec_id") < m_queries)
-                .select(F.col("vec_id").alias("query_id"),
-                        F.col("embedding").alias("query_embedding")))
-        base = emb.crossJoin(F.broadcast(qset))
-
-        def scored(kernel):
-            return base.select(
-                "query_id", "vec_id",
-                kernel(F.col("embedding"),
-                       F.col("query_embedding")).alias("score"))
-
-        rec = {"rows": base.count(), "m_queries": m_queries}
-        for kname, kern in (("hof", cosine_similarity),
-                            ("arrow", cosine_similarity_arrow)):
-            sec, rs = _timed_best(
-                spark, lambda k=kern: run(scored(k)), runs=2)
-            rec[f"sec_{kname}"] = sec
-            rec[f"runs_{kname}"] = rs
-        out[label] = rec
-        print(f"cosine_kernel_ab {label}: {rec}", flush=True)
-    return {"cosine_kernel_ab": out}
-
-
-def _text_kernel_ab(spark, dirs) -> dict:
-    """HOF vs Arrow text-tokenizer A/B (round-11 optimization): the
-    shingle explode — the front stage of every dedup pair generator —
-    timed under both SPARK_GRAFT_TEXT_KERNEL evaluators at 1x and deep
-    scale. Same crossover logic as the cosine kernel: the Catalyst
-    shingles() HOF tree evaluates interpreted per shingle, the Arrow
-    twin runs the (UNICHECK-audited) Python kernel over Arrow batches
-    but pays the fixed ArrowEvalPython stage cost. Values are identical
-    (tests/test_text.py pins the twins); row counts recorded to prove
-    both evaluators produced the same gram stream."""
-    from pyspark.sql import functions as F
-
-    from go_simple_embedding_database_spark.functions.text import (
-        shingles_kernel)
-    from go_simple_embedding_database_spark.session import (
-        ensure_parallelism)
-
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out = {}
-    for label, d in dirs:
-        docs = ensure_parallelism(
-            spark.read.parquet(f"{d}/documents.parquet")
-            .select("doc_id", "text"))
-
-        def grams():
-            return docs.select(
-                "doc_id",
-                F.explode(shingles_kernel(F.col("text"), 3)).alias("_g"))
-
-        rec = {}
-        for mode in ("hof", "arrow"):
-            os.environ["SPARK_GRAFT_TEXT_KERNEL"] = mode
-            try:
-                sec, rs = _timed_best(spark, lambda: run(grams()), runs=2)
-                rec[f"sec_{mode}"] = sec
-                rec[f"runs_{mode}"] = rs
-                rec[f"rows_{mode}"] = grams().count()
-            finally:
-                del os.environ["SPARK_GRAFT_TEXT_KERNEL"]
-        out[label] = rec
-        print(f"text_kernel_ab {label}: {rec}", flush=True)
-    return {"text_kernel_ab": out}
-
-
-def _kmeans_argmin_ab(spark, dirs) -> dict:
-    """HOF vs Arrow k-means argmin A/B (round-11): one assignment pass
-    (kmeans_assign — the per-row k x 2 interpreted HOF folds vs the
-    vectorized twin) over the embeddings at 1x and deep scale, centroids
-    fixed from a 1x fit so both scales and both evaluators score the
-    identical model. Assignment counts recorded per mode (equal counts +
-    the bitwise parity tests pin same-stream)."""
-    from pyspark.sql import functions as F
-
-    from go_simple_embedding_database_spark.operators.clustering import (
-        kmeans_assign, kmeans_fit)
-
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    base = (spark.read.parquet(f"{dirs[0][1]}/embeddings.parquet")
-            .select("vec_id", "embedding"))
-    _, cents = kmeans_fit(base, k=8, n_iter=1)
-    out = {}
-    for label, d in dirs:
-        emb = (spark.read.parquet(f"{d}/embeddings.parquet")
-               .select("vec_id", "embedding"))
-
-        def assign():
-            return kmeans_assign(emb, cents)
-
-        rec = {}
-        for mode in ("hof", "arrow"):
-            os.environ["SPARK_GRAFT_KMEANS_KERNEL"] = mode
-            try:
-                sec, rs = _timed_best(spark, lambda: run(assign()), runs=2)
-                rec[f"sec_{mode}"] = sec
-                rec[f"runs_{mode}"] = rs
-                rec[f"rows_{mode}"] = assign().count()
-            finally:
-                del os.environ["SPARK_GRAFT_KMEANS_KERNEL"]
-        out[label] = rec
-        print(f"kmeans_argmin_ab {label}: {rec}", flush=True)
-    return {"kmeans_argmin_ab": out}
-
-
 def _pagerank_superstep_shuffle(spark) -> dict:
     """PageRank contribution pre-aggregation at scale (VERDICT r10 #7):
     the round-10 zero-seed-union rewrite feeds EDGE-grain rows into each
@@ -1207,18 +1062,6 @@ def main() -> None:
             "output fixed at d(d+1)/2 rows")
         # ANN query family at the scaled operating point (VERDICT r06 #3)
         deep_results.update(_ann_deep(spark, SF_DIR, de, DEEP_REPLICAS))
-        # HOF vs Arrow cosine kernel crossover (round-10 optimization)
-        deep_results.update(_cosine_kernel_ab(
-            spark, [("1x", SF_DIR, 3),
-                    (f"{DEEP_REPLICAS}x_m3", de, 3),
-                    (f"{DEEP_REPLICAS}x_m100", de, 100)]))
-        # round-11 dispatch A/Bs: text tokenizer twins (exact-copy docs
-        # keep tokenization volume comparable) and k-means argmin twins
-        # (perm-embedding replicas)
-        deep_results.update(_text_kernel_ab(
-            spark, [("1x", SF_DIR), (f"{DEEP_REPLICAS}x", db)]))
-        deep_results.update(_kmeans_argmin_ab(
-            spark, [("1x", SF_DIR), (f"{DEEP_REPLICAS}x", de)]))
         # round-11: PageRank per-superstep exchange grain at 10x/100x
         deep_results.update(_pagerank_superstep_shuffle(spark))
     finally:

@@ -7,14 +7,7 @@ with floats rounded to 6) over EVERY ``queries()`` entry and writes
 ``SELFCHECK.json`` at the repo root, so the full surface has an
 auditable, re-runnable record each round. Run:
 
-    python tools/self_correctness.py            # default dispatch mode
-    python tools/self_correctness.py --arrow    # production arrow mode
-
-``--arrow`` sets every SPARK_GRAFT_*_KERNEL dispatch to its
-production (Arrow/vectorized) value and writes ``SELFCHECK_ARROW.json``
-instead — cross-engine rows for the mode the 100 TB deployment actually
-runs (VERDICT r10 #3: production mode must have oracle rows, not only
-unit tests).
+    python tools/self_correctness.py
 """
 
 from __future__ import annotations
@@ -50,20 +43,12 @@ def _norm(v):
     return str(v) if v is not None else None
 
 
-ARROW_MODE = "--arrow" in sys.argv
-ARROW_ENVS = {"SPARK_GRAFT_COSINE_KERNEL": "arrow",
-              "SPARK_GRAFT_TEXT_KERNEL": "arrow",
-              "SPARK_GRAFT_KMEANS_KERNEL": "arrow"}
-
-
 def main() -> None:
     import duckdb
 
     import __spark_entry__ as em
     from go_simple_embedding_database_spark.session import get_spark
 
-    if ARROW_MODE:
-        os.environ.update(ARROW_ENVS)
     spark = get_spark(app_name="self-correctness")
     con = duckdb.connect()
     for t in TABLES:
@@ -100,7 +85,7 @@ def main() -> None:
                          "err": f"{type(e).__name__}: {e}"[:200]}
     dest = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SELFCHECK_ARROW.json" if ARROW_MODE else "SELFCHECK.json")
+        "SELFCHECK.json")
     import platform
 
     import pandas
@@ -118,8 +103,6 @@ def main() -> None:
     }
     with open(dest, "w") as f:
         json.dump({"sf_dir": SF_DIR, "versions": versions,
-                   "dispatch": (ARROW_ENVS if ARROW_MODE
-                                else "default (hof)"),
                    "n_queries": len(out),
                    "n_hash_match": sum(1 for r in out.values()
                                        if r["hash_match"]),
