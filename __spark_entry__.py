@@ -3062,8 +3062,8 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r.vec_id, r.embedding) for r in qrows],
         "query_id bigint, query_embedding array<double>")
     # Exact side: ONE corpus scan for the whole query batch via
-    # batch_topk (per-batch top-k in the record scorer + two-stage
-    # bucketed window), not a scan per query id — M queries cost the same scan as one
+    # batch_topk (per-batch top-k in the record scorer + one per-query
+    # window), not a scan per query id — M queries cost the same scan as one
     # (VERDICT r02 #4). records_id keeps the shuffle slim: only
     # (query_id, vec_id, score) moves, never the embeddings — and
     # attach_payload=False skips the winners-to-records payload join

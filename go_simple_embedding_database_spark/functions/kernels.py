@@ -170,9 +170,10 @@ def well_formed_vector(v: Column, dim: int) -> Column:
     all three with ONE predicate. Pure Catalyst (isnan + comparisons
     inside exists over a codegen'd HOF) — no UDF, stays inside
     whole-stage codegen and pushes no worse than any other derived
-    predicate. r11 wires it into the shared embedding scan plus the
-    mirrored SQL twin below; until then it ships tested but unwired so
-    the r09-certified gate paths stay byte-identical."""
+    predicate. It is wired into no scan and no ingest path yet: it ships
+    tested but unused, so the certified gate plans stay byte-identical.
+    The planned wiring is the ingest doors (``add_records``, the JSON
+    import, streaming ingest), not the scan (ROADMAP item 3)."""
     bad = F.exists(
         v, lambda x: x.isNull() | F.isnan(x.cast("double"))
         | (x.cast("double") == F.lit(float("inf")))

@@ -21,13 +21,14 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from go_simple_embedding_database_spark.functions.kernels import (
     cosine_pairs_kernel, cosine_scores_kernel)
-from go_simple_embedding_database_spark.operators.topk import topk_by_similarity
+from go_simple_embedding_database_spark.operators.topk import (
+    group_topk, record_topk, record_topk_batches, topk_by_similarity)
 
 
 def deterministic_centroids(df: DataFrame, k: int, vec_col: str = "embedding",
@@ -70,12 +71,9 @@ def assign_cells(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding"
     scored = tagged.crossJoin(c).withColumn(
         "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
     )
-    w = Window.partitionBy("_rowid").orderBy(F.desc("_csim"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*df.columns, F.col("centroid_id").alias("cell"))
-    )
+    return (group_topk(scored, ["_rowid"],
+                       [F.desc("_csim"), F.asc("centroid_id")], 1)
+            .select(*df.columns, F.col("centroid_id").alias("cell")))
 
 
 def scalar_quantize(vec: Column) -> Column:
@@ -346,17 +344,13 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     map cell → query indices built from the probe pairs) and keeps each
     query's k best per Arrow batch, carrying the whole cell row through
     — no pair relation and no payload join (the query frame is joined
-    back only for columns beyond its id and vector); (4) the two-stage
-    bucketed window merges those local top-k
-    rows into the exact per-query top-k, so one query's candidates never
-    funnel through a single task.
+    back only for columns beyond its id and vector); (4) ``group_topk``'s
+    single window over ``query_id`` merges those local top-k rows into
+    the exact per-query top-k.
 
     Returns (query columns, index row columns, score_col) — exactly the
     rows the per-query path returns for each query, one plan.
     """
-    from go_simple_embedding_database_spark.operators.topk import (
-        bucketed_topk, record_topk, record_topk_batches)
-
     cents = (spark.read.parquet(f"{path}/centroids")
              .select("centroid_id", "centroid").toArrow().combine_chunks())
     routes: dict = {}
@@ -386,8 +380,8 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     scored = record_topk(cells, q_rows, queries.schema[query_id], k,
                          vec_col, score_col, cells.columns, [id_col],
                          routes=routes, route_col="cell")
-    out = bucketed_topk(scored, query_id,
-                        [F.desc(score_col), F.asc(id_col)], k, id_col)
+    out = group_topk(scored, [query_id],
+                     [F.desc(score_col), F.asc(id_col)], k)
     qattrs = [c for c in queries.columns if c not in (query_id, queries_vec)]
     if qattrs:
         out = out.join(F.broadcast(queries.select(query_id, *qattrs)),

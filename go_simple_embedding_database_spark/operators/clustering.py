@@ -266,29 +266,23 @@ def semantic_dedup_pairs(df: DataFrame, centroids: list[list[float]],
                          threshold: float,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
-                         scale: int = 1000,
-                         use_gemm: bool = True) -> DataFrame:
+                         scale: int = 1000) -> DataFrame:
     """SemDeDup candidate pairs: cosine >= threshold, but only *within*
     a k-means cell — the cluster replaces an O(N^2) corpus cross join
     with per-cell joins (sum of squared cell sizes), the published recipe
     for semantic dedup at dataset scale (Abbas et al. 2023, SemDeDup).
 
     Pair generation reuses the blocked cosine joins in ``operators.dedup``
-    with the learned cell as the block column. Default is the per-cell
-    GEMM kernel (one BLAS call per cell instead of an interpreted fold
-    per candidate pair — the within-cell candidate count is quadratic in
+    with the learned cell as the block column, through the per-cell GEMM
+    kernel (one BLAS call per cell instead of an interpreted fold per
+    candidate pair — the within-cell candidate count is quadratic in
     cell size, so the per-pair kernel dominated the whole query: measured
     4.6 s -> 0.9 s at sf0.1). A cell must fit in executor memory — true
     by construction for SemDeDup, where k is chosen to make cells small.
-    ``use_gemm=False`` falls back to the pure-Catalyst equi-join variant
-    (no per-group memory requirement, plan-asserted CartesianProduct-free).
     """
     from go_simple_embedding_database_spark.operators.dedup import (
-        cosine_neardup_pairs, cosine_neardup_pairs_gemm)
+        cosine_neardup_pairs_gemm)
     cells = kmeans_assign(df, centroids, vec_col=vec_col, scale=scale)
-    if use_gemm:
-        return cosine_neardup_pairs_gemm(cells, vec_col=vec_col,
-                                         id_col=id_col, threshold=threshold,
-                                         block_col="cluster_id")
-    return cosine_neardup_pairs(cells, vec_col=vec_col, id_col=id_col,
-                                threshold=threshold, block_col="cluster_id")
+    return cosine_neardup_pairs_gemm(cells, vec_col=vec_col, id_col=id_col,
+                                     threshold=threshold,
+                                     block_col="cluster_id")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_simple_embedding_database_spark.operators.topk import group_topk
+
 HASH_MOD = 10000
 
 
@@ -272,11 +274,10 @@ def weighted_sample(df: DataFrame, k: int, weight_col: str,
     engines — no seed plumbing, no ``rand()``.
 
     Physical plan: priority is a scalar projection; per-group selection
-    is the TWO-stage bucketed window of ``operators.topk`` (stage 1
-    partitions by (group, bucket) so one group's rows never funnel
-    through a single task; stage 2 re-ranks the surviving buckets x k
-    rows), or TakeOrderedAndProject for the global case — never a full
-    sort of the corpus and no single-task group bottleneck.
+    is ``topk.group_topk``'s single window, whose partial
+    ``WindowGroupLimit`` keeps at most k rows per group per map task
+    before the exchange, or TakeOrderedAndProject for the global case —
+    never a full sort of the corpus.
 
     Rows with weight <= 0 or NULL are excluded (zero weight means
     "never sample"; the reference formula divides by w).
@@ -291,16 +292,7 @@ def weighted_sample(df: DataFrame, k: int, weight_col: str,
             .withColumn("_priority", pri))
     order = [F.asc("_priority"), F.asc(id_col)]
     if group_cols:
-        from pyspark.sql import Window
-        nb = df.sparkSession.sparkContext.defaultParallelism
-        w1 = Window.partitionBy(*group_cols, "_b").orderBy(*order)
-        w2 = Window.partitionBy(*group_cols).orderBy(*order)
-        out = (base.withColumn(
-                   "_b", F.crc32(F.col(id_col).cast("string")) % nb)
-               .withColumn("_rn", F.row_number().over(w1))
-               .filter(F.col("_rn") <= k).drop("_rn", "_b")
-               .withColumn("_rn", F.row_number().over(w2))
-               .filter(F.col("_rn") <= k).drop("_rn"))
+        out = group_topk(base, list(group_cols), order, k)
     else:
         out = base.orderBy(*order).limit(k)
     return out.withColumn("_priority", F.round("_priority", 6))

@@ -12,9 +12,9 @@ Spark-first physical strategy:
 - **batch of queries** → the (small) query set is collected and rides
   the scorer's closure; one scan of the big table scores each record
   against every query and keeps only each query's k best rows per Arrow
-  batch (``record_topk``), then a two-stage ``row_number()`` window
-  partitioned by query merges those local winners into k each — local
-  top-k, then global merge. One pass over the data regardless of the
+  batch (``record_topk``), then one ``row_number()`` window partitioned
+  by query (``group_topk``) merges those local winners into k each —
+  local top-k, then global merge. One pass over the data regardless of the
   number of queries, and at most k·M rows per batch leave Python. Its
   per-batch function, ``record_topk_batches``, is the one code that
   ranks a query batch: ``batch_topk`` and the IVF batch probe's cell
@@ -240,7 +240,7 @@ def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
     """The record-form scorer: (query_id, *keep_cols, score_col) holding,
     for every Arrow batch of ``records``, only each query's ``k`` best
     rows (``record_topk_batches`` in mapInArrow) — the local top-k that
-    ``bucketed_topk`` then merges globally (global top-k ⊆ union of
+    ``group_topk`` then merges globally (global top-k ⊆ union of
     per-batch top-k). Each record row enters the worker once for all M
     queries, and at most k·M rows per batch leave Python instead of
     every (record, query) pair."""
@@ -259,33 +259,28 @@ def record_topk(records: DataFrame, q_rows: list, qid_field, k: int,
         schema)
 
 
-def bucketed_topk(scored: DataFrame, group_col: str, order: list[Column],
-                  k: int, bucket_key: str,
-                  buckets: int | None = None) -> DataFrame:
-    """Exact per-group top-k as a TWO-stage bucketed window — THE shared
-    primitive under ``batch_topk``, ``similarity_join`` and the ANN batch
-    probe. Stage 1 partitions by (group, bucket) so one group's candidate
-    rows never funnel through a single task (a plain
-    ``partitionBy(group)`` window is the canonical straggler/OOM at the
-    100 TB design point — AQE cannot split a window partition); stage 2
-    re-ranks the surviving ``buckets × k`` rows per group. Global top-k ⊆
-    union of per-bucket top-k, and callers pass a TOTAL ``order``
-    (score desc + unique tie-break asc), so the result is identical to
-    the single-window formulation.
+def group_topk(df: DataFrame, group_cols: list[str], order: list[Column],
+               k: int) -> DataFrame:
+    """Exact per-group top-k: the first ``k`` rows of each ``group_cols``
+    group in ``order``, as one ``row_number()`` window — THE shared merge
+    under ``batch_topk``, ``similarity_join``, the IVF batch probe,
+    ``ann.assign_cells`` and ``sampling.weighted_sample``. ``row_number``
+    (not ``rank``) keeps exactly k rows with an arbitrary tie fill; a
+    TOTAL ``order`` (unique tie-break last) makes the result
+    deterministic.
 
-    ``bucket_key`` is a unique-ish column hashed (crc32) into the stage-1
-    bucket — deterministic, so reruns bucket identically."""
-    nb = buckets or scored.sparkSession.sparkContext.defaultParallelism
-    w1 = Window.partitionBy(group_col, "_b").orderBy(*order)
-    w2 = Window.partitionBy(group_col).orderBy(*order)
-    return (
-        scored.withColumn("_b", F.crc32(F.col(bucket_key).cast("string")) % nb)
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k).drop("_rn", "_b")
-        .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    Scale condition (the plan shows it, the code does not): for k ≤
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
+    Catalyst puts a ``WindowGroupLimit … Partial`` below the exchange, so
+    each map task ships at most k rows per group and one reducer holds at
+    most (map tasks × k) rows of a group — local top-k, then global
+    merge. Above the threshold there is no partial limit and all of a
+    group's rows reach one task (AQE cannot split a window partition);
+    a first window per (group, hash bucket) would bound that, but no
+    caller uses k > 10, so it is a known limit, not a code path."""
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k).drop("_rn"))
 
 
 def topk_by_similarity(
@@ -303,9 +298,6 @@ def topk_by_similarity(
     by the optimizer to satisfy the contract (scores still projected for
     the returned rows).
     """
-    # Arrow-vectorized bit-exact kernel (see functions/kernels.py):
-    # the HOF expression evaluates interpreted (~15 µs/row at dim=64);
-    # the closure form ships ONLY the record vector across the boundary.
     scored = records.withColumn(
         score_col, cosine_scores_kernel(F.col(vec_col), qvec)
     )
@@ -323,7 +315,6 @@ def batch_topk(
     score_col: str = "score",
     tie_break: list[str] | None = None,
     records_id: str | None = None,
-    buckets: int | None = None,
     attach_payload: bool = True,
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of queries in ONE scan.
@@ -333,19 +324,16 @@ def batch_topk(
     record VECTOR enters the scoring stage exactly once for all M
     queries, and each Arrow batch emits only its k best rows per query
     (at most k·M rows, not N·M). The global per-query selection is
-    ``bucketed_topk``'s TWO-stage window: stage 1 partitions by (query,
-    bucket) so every query's candidates spread over ``buckets`` tasks (a
-    single ``partitionBy(query_id)`` window would funnel ALL scored rows
-    of a query through one task — an OOM/straggler at the 100 TB design
-    point; AQE cannot split a window partition); stage 2 re-ranks the
-    surviving ``buckets × k`` rows per query — tiny. Global top-k ⊆
-    union of per-batch and per-bucket top-k, so the result is identical.
-    ``row_number`` (not ``rank``) reproduces exactly-k-with-arbitrary-ties.
+    ``group_topk``'s single window over ``query_id``, whose partial
+    ``WindowGroupLimit`` caps each map task at k rows per query before
+    the one exchange. Global top-k ⊆ union of per-batch top-k, so the
+    result is exact. ``row_number`` (not ``rank``) reproduces
+    exactly-k-with-arbitrary-ties.
     ``tie_break`` columns must be record columns (a query column is
     constant within a query, so it never breaks a tie).
 
     Without ``records_id`` every record column passes through the scorer
-    and the windows, and each winner comes back whole with its query
+    and the window, and each winner comes back whole with its query
     columns (query vector dropped) and ``score_col``. With ``records_id``
     (a unique record key) the scorer and the shuffle carry only
     (query_id, id, score, tie columns) — the record payload (embedding
@@ -370,9 +358,7 @@ def batch_topk(
     keep = records.columns if records_id is None else [records_id, *tie_cols]
     scored = record_topk(records, q_rows, queries.schema[query_id], k,
                          records_vec, score_col, keep, tie_cols)
-    # no unique key without records_id: the score spreads the buckets
-    winners = bucketed_topk(scored, query_id, order, k,
-                            records_id or score_col, buckets)
+    winners = group_topk(scored, [query_id], order, k)
     if records_id is not None and not attach_payload:
         return winners
     out = winners if records_id is None else records.join(
@@ -400,8 +386,6 @@ def similarity_join(
     left_id: str = "id",
     right_id: str = "id",
     score_col: str = "score",
-    broadcast_side: str = "left",
-    buckets: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine join: for each left row, its matches on the right.
 
@@ -415,30 +399,16 @@ def similarity_join(
     / IVF cells) which feeds candidate pairs into the same scoring.
 
     Broadcast orientation: the k-NN join shape is "few queries (left) ×
-    huge corpus (right)", so the DEFAULT broadcasts the LEFT side — the
-    corpus is scanned in place, never shuffled and never collected to the
-    driver (a broadcast of the big side is the 100 TB OOM). Broadcasting
-    the right side is opt-in (``broadcast_side="right"``) for the mirrored
-    case of a small reference set; ``broadcast_side=None`` leaves the
-    planner free (local tests of the pure semantics).
+    huge corpus (right)", so the LEFT side is broadcast — the corpus is
+    scanned in place, never shuffled and never collected to the driver (a
+    broadcast of the big side is the 100 TB OOM).
 
-    The per-left top-k is the same TWO-stage bucketed window as
-    ``batch_topk``: stage 1 partitions by (left_id, bucket) so one query's
-    candidates never funnel through a single task, stage 2 re-ranks the
-    surviving buckets × k rows. Global top-k ⊆ union of per-bucket top-k,
-    and the (score desc, right_id asc) order is total, so the result is
-    identical to the single-window formulation.
+    The per-left top-k is ``group_topk`` over ``left_id`` with the total
+    order (score desc, right_id asc): one exchange, with a partial
+    ``WindowGroupLimit`` below it.
     """
-    if broadcast_side not in ("left", "right", None):
-        raise ValueError(
-            f"broadcast_side must be 'left', 'right' or None, got {broadcast_side!r}")
     lv, rv = F.col("_l." + left_vec), F.col("_r." + right_vec)
-    if broadcast_side == "left":
-        pairs = right.alias("_r").crossJoin(F.broadcast(left.alias("_l")))
-    elif broadcast_side == "right":
-        pairs = left.alias("_l").crossJoin(F.broadcast(right.alias("_r")))
-    else:
-        pairs = left.alias("_l").crossJoin(right.alias("_r"))
+    pairs = right.alias("_r").crossJoin(F.broadcast(left.alias("_l")))
     scored = pairs.select(
         F.col("_l." + left_id).alias("left_id"),
         F.col("_r." + right_id).alias("right_id"),
@@ -447,7 +417,6 @@ def similarity_join(
     if threshold is not None:
         scored = scored.filter(F.col(score_col) >= threshold)
     if k is not None:
-        scored = bucketed_topk(
-            scored, "left_id", [F.desc(score_col), F.asc("right_id")], k,
-            "right_id", buckets)
+        scored = group_topk(
+            scored, ["left_id"], [F.desc(score_col), F.asc("right_id")], k)
     return scored

@@ -111,6 +111,51 @@ def test_similarity_join_broadcasts_query_side_only(plans):
     assert "LessThan(vec_id,10)" in p  # the broadcast subtree is the query slice
 
 
+def _hash_exchanges_with_child(p: str):
+    """(hash keys, child node, child arguments) per hash Exchange of the
+    formatted plan ``p``: keys with expression ids stripped, child read
+    from the plan tree (an Exchange has one child, the next deeper line)."""
+    import re
+    tree, details = p.split("\n\n\n", 1)
+    args = dict(re.findall(r"^\((\d+)\) .*\n(?:.+\n)*?Arguments: (.*)$",
+                           details, re.M))
+    nodes = [(m.start(1), m.group(1).strip(), m.group(2))
+             for m in (re.search(r"(\w[\w ]*?) \((\d+)\)\s*$", line)
+                       for line in tree.splitlines()) if m]
+    out = []
+    for (col, name, nid), (ccol, cname, cid) in zip(nodes, nodes[1:]):
+        hp = re.match(r"hashpartitioning\((.*), \d+\)", args.get(nid, ""))
+        if name == "Exchange" and hp and ccol > col:
+            keys = [re.sub(r"#\d+L?$", "", k) for k in hp.group(1).split(", ")]
+            out.append((keys, cname, args.get(cid, "")))
+    return out
+
+
+@pytest.mark.parametrize("name,key,merges", [
+    ("batch_topk", "query_id", 1),
+    ("similarity_join_knn", "left_id", 1),
+    ("ann_recall", "query_id", 2),    # exact side + IVF side
+    ("weighted_sample", "source", 1),
+])
+def test_group_topk_is_one_exchange_over_partial_limit(plans, name, key,
+                                                       merges):
+    """Every per-group top-k merge (``topk.group_topk``) plans as ONE
+    hash exchange on the group key alone, with a Partial
+    WindowGroupLimit on the same key directly beneath it — each map task
+    ships at most k rows per group. A second (group, bucket) stage
+    would show up as an extra exchange whose keys start with the group
+    key."""
+    import re
+    on_key = [e for e in _hash_exchanges_with_child(plans(name))
+              if e[0][0] == key]
+    assert len(on_key) == merges, on_key
+    for keys, child, child_args in on_key:
+        assert keys == [key], keys
+        assert child == "WindowGroupLimit", child
+        assert re.match(rf"\[{key}#\d+L?\], .*, Partial$", child_args), \
+            child_args
+
+
 def test_ann_ivf_driver_query_partition_prunes(plans):
     """The exercised IVF path must read the materialized cell-partitioned
     index with PartitionFilters on cell — not rebuild the assignment per

@@ -161,7 +161,8 @@ def test_record_topk_truncation_parity(spark):
     first — unrouted (through batch_topk, with and without records_id)
     and routed (the IVF shape) —
     with bitwise-equal scores. Several tiny Arrow batches per partition
-    and k above a batch's row count; NaN scores (record-side NULL
+    and k above a batch's row count and above the partial-limit
+    threshold; NaN scores (record-side NULL
     element) rank first, NULL scores (NULL vector, dim mismatch, NULL
     query vector) last; zero norms score 0.0; heavy ties at the k-th
     score, broken by float (NaN/NULL/-0.0), string (NULL) and id
@@ -173,7 +174,7 @@ def test_record_topk_truncation_parity(spark):
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel)
     from go_simple_embedding_database_spark.operators.topk import (
-        batch_topk, bucketed_topk, record_topk)
+        batch_topk, group_topk, record_topk)
 
     nan = float("nan")
     vals = [-1.0, 0.0, 1.0, 2.0]
@@ -233,7 +234,9 @@ def test_record_topk_truncation_parity(spark):
     saved = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        for k in (3, 10):
+        # k = 1001 is above windowGroupLimitThreshold (1000): no partial
+        # WindowGroupLimit, the window alone selects
+        for k in (3, 10, 1001):
             for ties in (["w", "grp", "vec_id"], ["grp", "w", "vec_id"],
                          []):
                 got = batch_topk(
@@ -251,12 +254,14 @@ def test_record_topk_truncation_parity(spark):
                 assert all(repr(tuple(r[c] for c in records.columns))
                            == by_id[r.vec_id] for r in rows)
                 order = [F.desc("s")] + [F.asc(c) for c in ties]
-                routed = bucketed_topk(
+                routed = group_topk(
                     record_topk(records, q_rows, queries.schema["query_id"],
                                 k, "embedding", "s",
                                 ["vec_id", "cell", *ties], ties,
                                 routes=routes, route_col="cell"),
-                    "query_id", order, k, "vec_id")
+                    ["query_id"], order, k)
+                assert ("WindowGroupLimit" in formatted_plan(routed)) == \
+                    (k <= 1000)
                 check(routed.select("query_id", "vec_id", "s").collect(),
                       reference(pairs.join(route_pairs,
                                            ["query_id", "cell"]), k, ties),

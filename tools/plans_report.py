@@ -35,19 +35,22 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "`MapInArrow` over the corpus scan scores each record against "
         "every query and emits only each query's k best rows per Arrow "
         "batch, so no cross join and at most k·M rows per batch leave "
-        "Python. The global per-query ranking runs as a two-stage window: "
-        "stage 1 partitions by (query_id, bucket) so one query's "
-        "candidates never funnel into a single task; the slim projection "
-        "keeps embeddings out of every exchange (`Exchange` operands "
-        "carry id+score only). The only broadcast is the k·M winners "
-        "joined back onto the records for the payload."),
+        "Python. The global per-query ranking is one window over "
+        "query_id: a Partial `WindowGroupLimit` keeps each map task's k "
+        "best per query below the single `Exchange hashpartitioning"
+        "(query_id)`, and the slim projection keeps embeddings out of it "
+        "(the `Exchange` operands carry id+score only). The only "
+        "broadcast is the k·M winners joined back onto the records for "
+        "the payload."),
     "similarity_join_knn": (
         "k-NN similarity join (queries x corpus)",
         "Broadcast orientation: the SMALL query side broadcasts "
         "(`BroadcastExchange` wraps the left/query relation); the corpus "
         "is scanned in place — never shuffled, never collected. At 100 TB "
-        "a corpus-side broadcast is an OOM; this plan's only exchanges "
-        "are the bucketed per-query windows over (left_id, bucket)."),
+        "a corpus-side broadcast is an OOM; this plan's only exchange "
+        "is the per-query window's `hashpartitioning(left_id)`, with a "
+        "Partial `WindowGroupLimit` below it capping each map task at k "
+        "rows per query."),
     "dedup_minhash": (
         "MinHash+LSH near-duplicate pairs",
         "Candidate generation is an equi-join on the LSH band key "
@@ -69,7 +72,7 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "ANN recall evaluation (exact side batched)",
         "The exact reference side runs ONE corpus scan for the whole "
         "query batch via batch_topk (per-batch top-k inside the "
-        "`MapInArrow` scorer + two-stage bucketed window, slim id+score "
+        "`MapInArrow` scorer + one per-query window, slim id+score "
         "shuffle; round 2 scanned once per query); its single-corpus-"
         "scan property is pinned by tests/test_plans.py::"
         "test_ann_recall_exact_side_single_corpus_scan. The IVF side "
@@ -313,11 +316,10 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "Exactly-k weighted sampling without replacement (A-ES)",
         "Priorities are a pure scalar projection (md5 uniform + ln — "
         "whole-stage codegen, no rand()), and the per-group exact-k is "
-        "the two-stage bucketed window: stage 1 partitions by (group, "
-        "bucket) so a hot group's rows never funnel through one task, "
-        "stage 2 re-ranks buckets x k survivors. Deterministic under "
-        "any partitioning — the plan can be changed without changing "
-        "the sample."),
+        "one window over the group: a Partial `WindowGroupLimit` keeps "
+        "at most k rows per group per map task before the single "
+        "exchange. Deterministic under any partitioning — the plan can "
+        "be changed without changing the sample."),
     "incremental_dedup": (
         "Incremental batch-vs-corpus near-dup (band-index probe)",
         "The corpus side enters as its PERSISTED band index — no corpus "
