@@ -435,8 +435,8 @@ def _q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_dedup_jaccard() -> str:
     # Shingles are computed ONCE per document in a CTE, mirroring the
-    # Spark operator's shingle-before-join discipline — the inlined
-    # jaccard_sql form re-tokenized both docs per candidate pair, which
+    # Spark operator's shingle-before-join discipline — a Jaccard with
+    # shingles_sql inlined per pair re-tokenized both docs per pair, which
     # made this oracle infeasible at sf0.1 (the VALUES are identical:
     # for distinct sets inter/(len(union)) of the same integer counts).
     from go_simple_embedding_database_spark.functions.text import shingles_sql
@@ -2013,8 +2013,8 @@ def _clusters_cte() -> str:
     oracles.
 
     The shingle lists are precomputed ONCE PER DOCUMENT in ``docsh`` and
-    MATERIALIZED: ``jaccard_sql`` inlined in the pair WHERE re-tokenizes
-    both texts per candidate pair — and the recursive CTE re-evaluates
+    MATERIALIZED: a Jaccard with ``shingles_sql`` inlined in the pair
+    WHERE re-tokenizes both texts per candidate pair — and the recursive CTE re-evaluates
     its inputs per iteration — which cost ~50 s per oracle at sf0.01
     (measured); with the per-doc lists it is sub-second. The Jaccard
     formula inter / (|A| + |B| - inter) is EXACTLY list_distinct-union

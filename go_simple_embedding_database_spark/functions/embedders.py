@@ -12,9 +12,9 @@ Reference parity (/root/reference/embedders/embedders.go):
 Each embedder exposes three faces so every layer of the engine can use it:
 - ``embed_one(blob)``  — driver-side single embed (query-vector path,
   mirrors the reference's embed-the-query step, collection/collection.go:70)
-- ``column(col)``      — a Spark Column transform for bulk ingest. Mock
-  embedders compile to NATIVE expressions (md5/conv/transform — zero
-  Python in the scan); the remote embedder is a pandas_udf.
+- ``column(col)``      — a Spark Column transform for bulk ingest. The
+  constant mocks compile to literal arrays; mock-hash-64 and the remote
+  embedder are pandas_udfs.
 - ``oracle_sql(expr)`` — (mocks only) the DuckDB SQL string computing the
   identical vector, so the driver's oracle can reproduce embeddings exactly.
 """
@@ -29,7 +29,6 @@ import urllib.request
 from dataclasses import dataclass
 from typing import Callable
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column
@@ -54,8 +53,8 @@ _TWO_32 = 4294967296.0  # 2^32; md5 prefix is 8 hex chars = 32 bits
 # ---------------------------------------------------------------------------
 
 def _hash64_py(blob: str) -> list[float]:
-    # (blob or ""): same null contract as the Arrow batch path below —
-    # the two faces of the embedder must agree on every input.
+    # (blob or ""): a NULL blob embeds as the empty string — the bulk
+    # face below calls this function, so both faces agree on it.
     seed = hashlib.md5((blob or "").encode("utf-8")).hexdigest()
     raw = []
     for block in range(HASH_DIM // 4):
@@ -69,59 +68,22 @@ def _hash64_py(blob: str) -> list[float]:
 
 
 def _hash64_pandas_column(blob: Column) -> Column:
-    """Arrow-batched implementation of the same recipe — the production
-    path. Measured at sf0.1 (5000 docs, local[32]): 3.5s vs 40s for the
-    native expression below. The native HOF tree (16 md5 + 64 conv +
-    substring per row) cannot whole-stage-codegen, so its per-row
-    interpretation cost dwarfs the Arrow transfer; "UDFs are the slow
-    path" loses to measurement here."""
+    """Arrow-batched bulk face of the recipe: ``_hash64_py`` per blob, so
+    a stored vector is bit-identical to the query vector ``embed_one``
+    computes for the same blob (a numpy pairwise sum for the norm
+    differed from the Python left fold in the last bit on ~45% of
+    blobs, scoring a just-ingested blob 0.9999999999999999). Measured at
+    sf0.1 (5000 docs, local[32]): 3.5s vs 40s for a pure-Catalyst
+    md5/conv/substring HOF tree of the same recipe, which cannot
+    whole-stage-codegen; "UDFs are the slow path" loses to measurement
+    here."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<double>")
     def _embed(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            seed = hashlib.md5((t or "").encode("utf-8")).hexdigest()
-            raw = np.empty(HASH_DIM)
-            k = 0
-            for block in range(HASH_DIM // 4):
-                digest = hashlib.md5(f"{seed}:{block}".encode("utf-8")).hexdigest()
-                for part in range(4):
-                    raw[k] = int(digest[8 * part: 8 * part + 8], 16) / _TWO_32 * 2.0 - 1.0
-                    k += 1
-            norm = np.sqrt((raw * raw).sum())
-            if norm:
-                raw /= norm
-            out.append(raw)
-        return pd.Series(out)
+        return pd.Series([_hash64_py(t) for t in texts])
 
     return _embed(blob)
-
-
-def hash64_native_column(blob: Column) -> Column:
-    """Pure-Catalyst variant of the recipe (no Python anywhere in the
-    plan). Kept for environments where a Python worker is unavailable and
-    as the plan-purity benchmark counterpart of ``_hash64_pandas_column``;
-    see that docstring for why it is NOT the default."""
-    seed = F.md5(blob.cast("binary"))
-    raw = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(HASH_DIM // 4 - 1)),
-            lambda block: (
-                lambda digest: F.transform(
-                    F.sequence(F.lit(0), F.lit(3)),
-                    lambda part: F.conv(
-                        F.substring(digest, part * 8 + 1, 8), 16, 10
-                    ).cast("double")
-                    / F.lit(_TWO_32)
-                    * 2.0
-                    - 1.0,
-                )
-            )(F.md5(F.concat(seed, F.lit(":"), block.cast("string")).cast("binary"))),
-        )
-    )
-    norm = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, v: a + v * v))
-    return F.transform(raw, lambda v: v / norm)
 
 
 def hash64_oracle_sql(text_expr: str) -> str:

@@ -13,6 +13,8 @@ counting, fingerprinting over the ``documents`` table.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -264,82 +266,53 @@ def quality_sql(expr: str) -> dict[str, str]:
 
 
 def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (space-joined), distinct. The unit of MinHash /
-    Jaccard dedup. Documents shorter than n words yield their full word
-    sequence as one shingle.
-
-    Degenerate-document convention (r10, uniform across all three twins
-    and shared with :func:`ngram_bag`): NULL text → NULL; non-NULL text
-    that tokenizes to ZERO words (empty / whitespace-only) → the EMPTY
-    shingle array. Through r09 the Catalyst and Python twins emitted
-    ``['']`` here while the DuckDB twin's ``array_to_string`` over an
-    empty slice stringified to NULL and ``list_distinct`` then dropped
-    it — a latent cross-twin hash divergence (unreachable on gate data:
-    zero blank/NULL docs at every SF, asserted each round), and a skew
-    bomb at scale: every blank doc in a 100 TB corpus used to collide on
-    the single '' shingle. Zero shingles means blank docs drop out of
-    all pair generation; identical-blank duplicates are exact-dedup's
-    job (hash groupBy), not MinHash's. Pinned by
-    tests/test_text.py::test_shingles_degenerate_document_convention.
-
-    The words array is LET-BOUND via a one-element ``transform`` before the
-    shingle loop: HOF lambda bodies re-evaluate captured outer expressions
-    on every element, so referencing ``words(text)`` directly inside the
-    loop re-runs the regex split once per shingle — O(words²) splits per
-    document, measured 12.5s → 1.3s for 5000 × 300-char docs at sf0.1.
-    As a bound lambda variable it is evaluated once per row. The NULL
-    guard is also load-bearing: without it the HOF chain manufactures a
-    phantom ``[NULL]`` array for NULL text (the round-8 ngram_bag
-    lesson)."""
-    def per_words(ws: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0)))
-        sh = F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(ws, i + 1, n), " "))
-        )
-        return F.when(F.size(ws) > 0, sh).otherwise(
-            F.array().cast("array<string>"))
-
-    bag = F.element_at(
-        F.transform(F.array(words(lower_x(text))), per_words), 1)
-    return F.when(text.isNotNull(), bag)
+    """Word n-gram shingles (space-joined), distinct: ``array_distinct``
+    over :func:`ngram_bag`, first occurrence first. The unit of MinHash /
+    Jaccard dedup. Tokenization, the short-document rule and the
+    degenerate-document convention are ngram_bag's, so NULL text → NULL
+    and blank text → the EMPTY shingle array here too: blank docs drop
+    out of all pair generation instead of colliding on one '' shingle
+    (a skew bomb at 100 TB); identical-blank duplicates are
+    exact-dedup's job, not MinHash's. Pinned by
+    tests/test_text.py::test_shingles_degenerate_document_convention."""
+    return F.array_distinct(ngram_bag(text, n))
 
 
 def shingles_sql(expr: str, n: int = 3) -> str:
-    w = words_sql(f"{lower_x_sql(expr)}")
-    return (
-        f"CASE WHEN {expr} IS NULL THEN NULL "
-        f"WHEN len({w}) = 0 THEN CAST([] AS VARCHAR[]) "
-        f"ELSE list_distinct([array_to_string(list_slice({w}, i + 1, i + {n}), ' ') "
-        f"for i in range(greatest(len({w}) - {n}, 0) + 1)]) END"
-    )
+    return f"list_distinct({ngram_bag_sql(expr, n)})"
 
 
 def ngram_bag(text: Column, n: int = 2) -> Column:
-    """Word n-grams WITH multiplicity — the bag-of-hashed-ngrams feature
-    map of importance-resampling data selection (DSIR, Xie et al. 2023),
-    where a gram repeated k times contributes k counts. Identical
-    construction to :func:`shingles` (same tokenizer, same short-document
-    rule: < n words yield the full word sequence as one gram) minus the
-    ``array_distinct`` — dedup features and selection features must not
-    silently share multiplicity semantics. NULL text yields NULL (zero
-    grams after an explode) on BOTH engines — without the guard the
-    Spark HOF chain manufactures a phantom ``[NULL]`` single-gram array
-    that inflates every corpus total by one per NULL document.
+    """Word n-grams WITH multiplicity, in document order — the one word
+    n-gram builder: :func:`shingles` is its distinct, and repetition
+    scoring, duplicated-span statistics and the bag-of-hashed-ngrams
+    feature map of importance-resampling data selection (DSIR, Xie et
+    al. 2023) read it directly. Lowercase (:func:`lower_x`), split on
+    whitespace runs, join each n consecutive words with a space; a
+    document shorter than n words yields its full word sequence as one
+    gram.
 
-    Blank-document convention (r10, all three twins): a non-NULL
-    document whose text is whitespace-only tokenizes to zero words and
-    yields ZERO grams — the empty array, exactly like an explode of a
-    NULL doc. Blank docs therefore join NULL docs at DSIR's neutral
-    prior (weight 0 via the corpus left join in
+    Degenerate-document convention (r10, all three twins): NULL text →
+    NULL (zero grams after an explode); non-NULL text that tokenizes to
+    ZERO words (empty / whitespace-only) → the EMPTY array, exactly like
+    an explode of a NULL doc. Blank docs therefore join NULL docs at
+    DSIR's neutral prior (weight 0 via the corpus left join in
     ``operators/dsir.dsir_weights``) instead of carrying a phantom ''
     feature. History: r08 shipped ``['']`` here on the Catalyst and
     Python twins while the DuckDB twin's
     ``array_to_string(list_slice(w, 1, n), ' ')`` over an empty word
-    list yields ``[NULL]`` — a latent three-twin hash divergence the
-    pin test found (the r08 ADVICE's "all three twins agree" was
-    false). The r10 fix guards blank → zero grams in ALL THREE twins;
-    agreement on every edge is pinned by
-    tests/test_text.py::test_ngram_bag_blank_document_convention."""
+    list yields ``[NULL]`` — a three-twin hash divergence the pin test
+    found. Agreement on every edge is pinned by
+    tests/test_text.py::test_ngram_bag_blank_document_convention.
+
+    The words array is LET-BOUND via a one-element ``transform`` before
+    the gram loop: HOF lambda bodies re-evaluate captured outer
+    expressions on every element, so referencing ``words(text)``
+    directly inside the loop re-runs the regex split once per gram —
+    O(words²) splits per document, measured 12.5s → 1.3s for 5000 ×
+    300-char docs at sf0.1. As a bound lambda variable it is evaluated
+    once per row. The NULL guard is also load-bearing: without it the
+    HOF chain manufactures a phantom ``[NULL]`` array for NULL text."""
     def per_words(ws: Column) -> Column:
         idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0)))
         grams = F.transform(
@@ -352,15 +325,20 @@ def ngram_bag(text: Column, n: int = 2) -> Column:
     return F.when(text.isNotNull(), bag)
 
 
+def words_py(text: str) -> list[str]:
+    """Python twin of ``words(lower_x(text))`` — ASCII ``\\s`` equals
+    WS_CHARS exactly, and lower_x_py carries the İ/Σ pre-substitution."""
+    return [w for w in re.split(r"\s+", lower_x_py(text), flags=re.ASCII)
+            if w]
+
+
 def ngram_bag_py(text: str | None, n: int = 2) -> list[str] | None:
-    """Python twin of ``ngram_bag`` (same recipe as ``shingles_py`` minus
-    the distinct; NULL in, NULL out) — the brute-force oracle the DSIR
-    property tests recompute weights with."""
-    import re
+    """Python twin of ``ngram_bag`` (NULL in, NULL out) — the
+    brute-force oracle the DSIR property tests recompute weights with,
+    and the gram source of the Arrow-batched dedup UDFs."""
     if text is None:
         return None
-    ws = [w for w in re.split(r"\s+", lower_x_py(text), flags=re.ASCII)
-          if w]
+    ws = words_py(text)
     if not ws:
         return []
     return [" ".join(ws[i:i + n]) for i in range(max(len(ws) - n, 0) + 1)]
@@ -374,6 +352,17 @@ def ngram_bag_sql(expr: str, n: int = 2) -> str:
         f"ELSE [array_to_string(list_slice({w}, i + 1, i + {n}), ' ') "
         f"for i in range(greatest(len({w}) - {n}, 0) + 1)] END"
     )
+
+
+def shingles_py(text: str | None, n: int = 3) -> list[str]:
+    """Python twin of ``shingles`` (first-occurrence distinct over
+    ``ngram_bag_py``) — the batch kernel used by the vectorized dedup
+    UDFs. Kernel convention: None and blank both map to the EMPTY
+    shingle list (the Column/SQL twins carry the NULL-in-NULL-out guard
+    at the relational layer; inside an Arrow batch there is no NULL
+    array to propagate, and every kernel consumer treats zero shingles
+    as 'no signature')."""
+    return list(dict.fromkeys(ngram_bag_py(text or "", n)))
 
 
 def chunk_text(text: Column, chunk_size: int = 4096) -> Column:
@@ -396,57 +385,6 @@ def chunk_text_sql(expr: str, chunk_size: int = 4096) -> str:
     )
 
 
-def shingles_py(text: str, n: int = 3) -> list[str]:
-    """Python twin of ``shingles`` (same recipe — ASCII ``\\s`` equals
-    WS_CHARS exactly, and lower_x_py carries the İ/Σ pre-substitution;
-    first-occurrence distinct) — the batch kernel used by the vectorized
-    dedup UDFs. Kernel convention: None and blank both map to the EMPTY
-    shingle list (the Column/SQL twins carry the NULL-in-NULL-out guard
-    at the relational layer; inside an Arrow batch there is no NULL
-    array to propagate, and every kernel consumer treats zero shingles
-    as 'no signature')."""
-    import re
-    ws = [w for w in re.split(r"\s+", lower_x_py(text or ""),
-                              flags=re.ASCII) if w]
-    k = len(ws)
-    if k == 0:
-        return []
-    if k <= n:
-        return [" ".join(ws)]
-    return list(dict.fromkeys(" ".join(ws[i:i + n]) for i in range(k - n + 1)))
-
-
-def ngrams_all(text: Column, n: int = 2) -> Column:
-    """Word n-grams WITH multiplicity (contrast ``shingles``, which
-    dedups): the denominator of repetition scoring needs every
-    occurrence. Same let-binding trick as ``shingles`` so the word split
-    runs once per row, not once per n-gram. Docs shorter than n words
-    yield their full word sequence as the single n-gram; NULL → NULL and
-    blank → zero grams (the r10 degenerate-document convention shared by
-    shingles/ngram_bag — repetition fractions then read 0.0 for blank
-    docs and NULL for NULL docs in BOTH engines)."""
-    def per_words(ws: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0)))
-        grams = F.transform(
-            idx, lambda i: F.array_join(F.slice(ws, i + 1, n), " "))
-        return F.when(F.size(ws) > 0, grams).otherwise(
-            F.array().cast("array<string>"))
-
-    bag = F.element_at(
-        F.transform(F.array(words(lower_x(text))), per_words), 1)
-    return F.when(text.isNotNull(), bag)
-
-
-def ngrams_all_sql(expr: str, n: int = 2) -> str:
-    w = words_sql(f"{lower_x_sql(expr)}")
-    return (
-        f"CASE WHEN {expr} IS NULL THEN NULL "
-        f"WHEN len({w}) = 0 THEN CAST([] AS VARCHAR[]) "
-        f"ELSE [array_to_string(list_slice({w}, i + 1, i + {n}), ' ') "
-        f"for i in range(greatest(len({w}) - {n}, 0) + 1)] END"
-    )
-
-
 def repetition_features(text: Column) -> dict[str, Column]:
     """Gopher-style intra-document repetition signals: the fraction of
     word occurrences (and 2-/3-gram occurrences) that are repeats of an
@@ -461,7 +399,7 @@ def repetition_features(text: Column) -> dict[str, Column]:
     out["n_words"] = F.size(ws)
     out["dup_word_frac"] = (n_words - F.size(F.array_distinct(ws))) / safe
     for n in (2, 3):
-        grams = ngrams_all(text, n)
+        grams = ngram_bag(text, n)
         total = F.size(grams).cast("double")
         safe_g = F.when(total == 0, 1.0).otherwise(total)
         out[f"dup_{n}gram_frac"] = (
@@ -479,7 +417,7 @@ def repetition_sql(expr: str) -> dict[str, str]:
             f"(CAST(len({w}) AS DOUBLE) - len(list_distinct({w}))) / {safe}",
     }
     for n in (2, 3):
-        g = ngrams_all_sql(expr, n)
+        g = ngram_bag_sql(expr, n)
         total = f"CAST(len({g}) AS DOUBLE)"
         safe_g = f"(CASE WHEN len({g}) = 0 THEN 1.0 ELSE {total} END)"
         out[f"dup_{n}gram_frac"] = (

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import lower_x, words
+from ..functions.text import lower_x, words, words_py
 
 EOW = "</w>"
 
@@ -231,17 +231,12 @@ def bpe_train_py(texts: list[str | None], num_merges: int,
     """Pure-Python reference (the correctness oracle for tests): same
     tokenization, same greedy fold, same (cnt desc, left, right)
     tie-break."""
-    import re
-
-    from ..functions.text import lower_x_py
-
     counts: dict[str, int] = {}
     for t in texts:
         if t is None:
             continue
-        for w in re.split(r"\s+", lower_x_py(t), flags=re.ASCII):
-            if w:
-                counts[w] = counts.get(w, 0) + 1
+        for w in words_py(t):
+            counts[w] = counts.get(w, 0) + 1
     vocab = {w: list(w) + [EOW] for w in counts}
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):

@@ -8,10 +8,11 @@ all-pairs unless the candidate set is already bucketed):
   (band, key) for candidates → exact Jaccard verify. The classic
   near-dedup at scale: candidate generation is a hash join on band keys,
   O(N·sig) not O(N²).
-- **SimHash**   — 32-bit sign fingerprint; near-dups = small Hamming
+- **SimHash**   — 60-bit sign fingerprint; near-dups = small Hamming
   distance (bit_count(xor)); bucketable by fingerprint prefix at scale.
-- **embedding cosine** — semantic near-dup via similarity_join threshold
-  (exact) or ann.ivf buckets (scale path).
+- **embedding cosine** — semantic near-dup pairs above a cosine
+  threshold: ``cosine_neardup_pairs`` (per-pair dot product, optionally
+  blocked) or ``cosine_neardup_pairs_gemm`` (one GEMM per block).
 
 Hashing recipe (identical in Python / Spark / DuckDB, so every operator
 oracle-checks): base hash = first 8 hex chars of md5 → int in [0, 2^32);
@@ -31,8 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from go_simple_embedding_database_spark.functions.text import (
-    ngrams_all, shingles, shingles_sql)
-from go_simple_embedding_database_spark.operators.topk import similarity_join
+    ngram_bag, ngram_bag_py, ngram_bag_sql, shingles, shingles_py,
+    shingles_sql)
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 _KNUTH = 2654435761  # Knuth multiplicative constant
@@ -88,19 +89,24 @@ def exact_dedup_keep(df: DataFrame, content_col: str = "text",
 
 # -- MinHash + LSH -------------------------------------------------------------
 
-def shingle_hashes_sql(expr: str, n: int = 3) -> str:
-    return (
-        f"list_transform({shingles_sql(expr, n)}, "
-        f"s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT))"
-    )
+def md5_prefix_sql(grams: str, hex_chars: int) -> str:
+    """Each gram of the list expression ``grams`` → the integer value of
+    the first ``hex_chars`` hex chars of its md5 (DuckDB twin of
+    ``_md5_prefix_py``)."""
+    return (f"list_transform({grams}, "
+            f"s -> CAST(concat('0x', substr(md5(s), 1, {hex_chars})) "
+            f"AS BIGINT))")
 
 
-def _shingle_hashes_py(text: str, n: int) -> "np.ndarray":
-    from go_simple_embedding_database_spark.functions.text import shingles_py
-
+def _md5_prefix_py(grams: list[str], hex_chars: int) -> "np.ndarray":
+    """int64 array of the first ``hex_chars`` hex chars of each gram's md5.
+    MinHash and winnowing take 8 (32 bits: the permutation family
+    multiplies the base hash, which must stay < 2^32 to avoid int64
+    overflow); SimHash takes ``_SIMHASH_HEX_CHARS`` (it wants the most
+    independent bits)."""
     return np.array(
-        [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-         for s in shingles_py(text, n)],
+        [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:hex_chars], 16)
+         for s in grams],
         dtype=np.int64,
     )
 
@@ -123,7 +129,7 @@ def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
     def _sig(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            hs = _shingle_hashes_py(t, n)
+            hs = _md5_prefix_py(shingles_py(t, n), 8)
             if hs.size == 0:
                 # zero shingles (NULL/blank doc, r10 convention): the
                 # min over an empty set is NULL per hash — identical to
@@ -141,7 +147,7 @@ def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
 
 
 def minhash_signature_sql(expr: str, num_hashes: int = 12, n: int = 3) -> str:
-    hs = shingle_hashes_sql(expr, n)
+    hs = md5_prefix_sql(shingles_sql(expr, n), 8)
     mins = ", ".join(
         f"list_min(list_transform(h, x -> ({a} * x + {b}) % {MERSENNE_P}))"
         for a, b in _minhash_params(num_hashes)
@@ -212,24 +218,6 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
         buckets.select(F.explode(pairs).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
-    )
-
-
-def jaccard_similarity(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact n-gram Jaccard |A∩B| / |A∪B| over distinct shingle sets.
-    Computed as inter / (|A| + |B| - inter): |A∪B| = |A|+|B|-|A∩B| for
-    distinct sets, and skipping ``array_union`` halves the expensive
-    array-hashing work (the sets are distinct by construction)."""
-    sa, sb = shingles(text_a, n), shingles(text_b, n)
-    return jaccard_from_shingle_arrays(sa, sb)
-
-
-def jaccard_sql(expr_a: str, expr_b: str, n: int = 3) -> str:
-    sa, sb = shingles_sql(expr_a, n), shingles_sql(expr_b, n)
-    return (
-        f"CASE WHEN len(list_distinct({sa} || {sb})) = 0 THEN 0.0 "
-        f"ELSE CAST(len(list_intersect({sa}, {sb})) AS DOUBLE) "
-        f"/ len(list_distinct({sa} || {sb})) END"
     )
 
 
@@ -371,31 +359,6 @@ def length_band_jaccard_dedup(df: DataFrame, text_col: str = "text",
 
 # -- winnowing fingerprints ------------------------------------------------------
 
-def _shingle_hash_seq_py(text: str, n: int) -> "np.ndarray":
-    """POSITIONAL (non-distinct) shingle-hash sequence — winnowing needs
-    document order, unlike the distinct set MinHash uses. Zero words →
-    the EMPTY sequence (the r10 degenerate-document convention shared
-    with shingles/ngram_bag: through r09 blank docs hashed a phantom ''
-    shingle here, and the DuckDB twin CRASHED on the same input —
-    concat('0x', md5(NULL)) is the string '0x', which does not cast)."""
-    import re
-
-    from go_simple_embedding_database_spark.functions.text import lower_x_py
-    ws = [w for w in re.split(r"\s+", lower_x_py(text or ""),
-                              flags=re.ASCII) if w]
-    k = len(ws)
-    if k == 0:
-        return np.array([], dtype=np.int64)
-    if k <= n:
-        seq = [" ".join(ws)]
-    else:
-        seq = [" ".join(ws[i:i + n]) for i in range(k - n + 1)]
-    return np.array(
-        [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) for s in seq],
-        dtype=np.int64,
-    )
-
-
 def winnow_fingerprints(text: Column, window: int = 4, n: int = 3) -> Column:
     """Winnowing (Schleimer et al., SIGMOD 2003): the distinct minima of a
     sliding window over the positional shingle-hash sequence. Guarantees a
@@ -413,7 +376,7 @@ def winnow_fingerprints(text: Column, window: int = 4, n: int = 3) -> Column:
             if t is None:
                 out.append(None)
                 continue
-            hs = _shingle_hash_seq_py(t, n)
+            hs = _md5_prefix_py(ngram_bag_py(t, n), 8)
             if hs.size == 0:
                 out.append(np.array([], dtype=np.int64))
                 continue
@@ -435,36 +398,26 @@ def winnow_fingerprints_sql(expr: str, window: int = 4, n: int = 3) -> str:
     and ``concat('0x', NULL)`` is the string ``'0x'`` in DuckDB — which
     does not CAST to BIGINT, so the twin CRASHED the whole oracle query
     on the first degenerate doc (found by the r10 degenerate-input
-    audit; unreachable on gate data, fatal for any external caller)."""
-    from go_simple_embedding_database_spark.functions.text import (
-        WS_CHARS, lower_x_sql)
-    ws = (
-        f"list_filter(regexp_split_to_array({lower_x_sql(expr)}, "
-        f"'[{WS_CHARS}]+'), x -> x <> '')"
-    )
-    # The zero-word guard must live INSIDE the subquery (on _wd), not
-    # only in an outer CASE: DuckDB decorrelates the scalar subquery
-    # over table rows and evaluates it for EVERY row regardless of the
-    # CASE branch taken, so an outer-only guard still crashed on the
-    # degenerate rows it was guarding (caught by
-    # tests/test_degenerate_parity.py — the scalar-literal probe never
-    # decorrelates and passed).
-    seq = (
-        f"CASE WHEN _wd IS NULL OR len(_wd) = 0 THEN CAST([] AS VARCHAR[]) "
-        f"ELSE [array_to_string(list_slice(_wd, i + 1, i + {n}), ' ') "
-        f"for i in range(greatest(len(_wd) - {n}, 0) + 1)] END"
-    )
-    hs = "list_transform(_sq, x -> CAST(concat('0x', substr(md5(x), 1, 8)) AS BIGINT))"
+    audit; unreachable on gate data, fatal for any external caller).
+
+    The zero-word guard must live INSIDE the subquery, not only in the
+    outer CASE: DuckDB decorrelates the scalar subquery over table rows
+    and evaluates it for EVERY row regardless of the CASE branch taken,
+    so an outer-only guard still crashed on the degenerate rows it was
+    guarding (caught by tests/test_degenerate_parity.py — the
+    scalar-literal probe never decorrelates and passed). ``ngram_bag_sql``
+    is that guard: its own CASE maps NULL and blank docs to NULL and
+    ``[]`` before any md5, and an empty hash list winnows to ``[]``
+    (``list_distinct`` drops the NULL window minimum)."""
     mins = (
         f"[list_min(list_slice(_hs, i + 1, i + {window})) "
         f"for i in range(greatest(len(_hs) - {window}, 0) + 1)]"
     )
     return (
         f"CASE WHEN {expr} IS NULL THEN NULL "
-        f"WHEN len({ws}) = 0 THEN CAST([] AS BIGINT[]) "
         f"ELSE (SELECT list_sort(list_distinct({mins})) FROM "
-        f"(SELECT {hs} AS _hs FROM (SELECT {seq} AS _sq "
-        f"FROM (SELECT {ws} AS _wd) _w) _s) _h) END"
+        f"(SELECT {md5_prefix_sql('_sq', 8)} AS _hs FROM "
+        f"(SELECT {ngram_bag_sql(expr, n)} AS _sq) _s) _h) END"
     )
 
 
@@ -481,29 +434,6 @@ SIMHASH_BITS = 60
 _SIMHASH_HEX_CHARS = SIMHASH_BITS // 4
 
 
-def _shingle_hashes60_py(text: str, n: int) -> "np.ndarray":
-    """60-bit base hash per shingle (simhash voting pool). Separate from
-    the 32-bit ``_shingle_hashes_py`` on purpose: minhash's permutation
-    family multiplies the base hash and must stay < 2^32 to avoid int64
-    overflow, while simhash wants maximum independent bits."""
-    from go_simple_embedding_database_spark.functions.text import shingles_py
-
-    return np.array(
-        [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:_SIMHASH_HEX_CHARS],
-             16)
-         for s in shingles_py(text, n)],
-        dtype=np.int64,
-    )
-
-
-def shingle_hashes60_sql(expr: str, n: int = 3) -> str:
-    return (
-        f"list_transform({shingles_sql(expr, n)}, "
-        f"s -> CAST(concat('0x', substr(md5(s), 1, {_SIMHASH_HEX_CHARS})) "
-        f"AS BIGINT))"
-    )
-
-
 def simhash(text: Column, n: int = 3) -> Column:
     """60-bit SimHash over shingle hashes: bit b of the fingerprint is the
     sign of Σ_shingles (2·bit_b(h) − 1). Near-dups differ in few bits.
@@ -518,7 +448,7 @@ def simhash(text: Column, n: int = 3) -> Column:
     def _fp(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            hs = _shingle_hashes60_py(t, n)
+            hs = _md5_prefix_py(shingles_py(t, n), _SIMHASH_HEX_CHARS)
             votes = (((hs[:, None] >> bit_idx[None, :]) & 1) * 2 - 1).sum(axis=0)
             out.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
         return pd.Series(out)
@@ -527,7 +457,7 @@ def simhash(text: Column, n: int = 3) -> Column:
 
 
 def simhash_sql(expr: str, n: int = 3) -> str:
-    hs = shingle_hashes60_sql(expr, n)
+    hs = md5_prefix_sql(shingles_sql(expr, n), _SIMHASH_HEX_CHARS)
     votes = " + ".join(
         f"(CASE WHEN list_sum(list_transform(h, x -> ((x >> {b}) & 1) * 2 - 1)) > 0 "
         f"THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
@@ -983,8 +913,6 @@ def containment_pairs_sql(table: str = "documents", text_expr: str = "text",
                           threshold: float = 0.9, max_df: int = 50) -> str:
     """DuckDB twin of ``containment_pairs`` — identical gram recipe
     (``shingles_sql``), identical df cutoff, identical ratio."""
-    from go_simple_embedding_database_spark.functions.text import shingles_sql
-
     sh = shingles_sql(text_expr, n)
     return f"""
 WITH grams AS (
@@ -1133,22 +1061,6 @@ WHERE b._len > a._len AND {verify}
 
 # -- duplicated token-span statistics -----------------------------------------
 
-def positional_spans(text: Column, n: int = 5) -> Column:
-    """All word n-gram spans of a document IN POSITION ORDER, duplicates
-    kept — the unit of exact-substring dedup (Lee et al. 2021,
-    "Deduplicating Training Data Makes Language Models Better": repeated
-    >=50-token spans across a corpus are memorization fuel). This IS
-    ``functions.text.ngrams_all`` (repetition scoring needs the same
-    with-multiplicity grams) — delegated so the tokenization and the
-    short-document rule have exactly one definition."""
-    return ngrams_all(text, n)
-
-
-def positional_spans_sql(expr: str, n: int = 5) -> str:
-    from go_simple_embedding_database_spark.functions.text import ngrams_all_sql
-    return ngrams_all_sql(expr, n)
-
-
 def duplicated_span_stats(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 5) -> DataFrame:
     """Per-document contamination by CROSS-DOCUMENT duplicated spans:
@@ -1157,7 +1069,11 @@ def duplicated_span_stats(df: DataFrame, text_col: str = "text",
     dominated by spans seen elsewhere are templates, mirrors or spam, and
     exact-substring dedup (Lee et al. 2021) would cut those spans.
 
-    Scale shape: explode positional spans once; collapse to distinct
+    The spans are ``ngram_bag``'s grams — position order, duplicates
+    kept — the unit of exact-substring dedup (Lee et al. 2021: repeated
+    long spans across a corpus are memorization fuel).
+
+    Scale shape: explode the spans once; collapse to distinct
     (span, doc) pairs with the per-doc occurrence count in ONE hash agg;
     a count-over-span window on that collapsed relation (rows = distinct
     docs) yields each span's document frequency without a second explode
@@ -1175,7 +1091,7 @@ def duplicated_span_stats(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     spans = df.select(F.col(id_col).alias("_id"),
-                      F.explode(positional_spans(F.col(text_col), n))
+                      F.explode(ngram_bag(F.col(text_col), n))
                       .alias("_g"))
     per_doc_gram = spans.groupBy("_id", "_g").agg(F.count("*").alias("_m"))
     marked = per_doc_gram.withColumn(
@@ -1209,7 +1125,7 @@ def duplicated_span_stats_sql(table: str = "documents",
     exact integers (correctly-rounded IEEE op → bit-identical input to
     round-6), so no fold-order hazard exists.
     """
-    sp = positional_spans_sql(text_expr, n)
+    sp = ngram_bag_sql(text_expr, n)
     return f"""
 WITH spans AS (
   SELECT {id_expr} AS _id, unnest({sp}) AS _g FROM {table}),

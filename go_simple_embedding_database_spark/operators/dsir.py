@@ -10,9 +10,9 @@ like Wikipedia" selection step of an LLM training-data pipeline.
 Spark-first shape (every stage is Catalyst, no Python in the hot path):
 
 1. ``ngram_bucket_table`` — ONE pass over the corpus explodes word
-   n-grams WITH multiplicity (``functions.text.ngram_bag`` — dedup
-   shingles deliberately not reused: selection features are bags, not
-   sets), hashes each gram into ``num_buckets`` buckets with the
+   n-grams WITH multiplicity (``functions.text.ngram_bag`` — the bag
+   itself, not its distinct ``shingles``: selection features are bags,
+   not sets), hashes each gram into ``num_buckets`` buckets with the
    repo-wide portable md5 bucket (``operators.sampling.hash_bucket`` —
    the same construction the corpus split and the mixture sampler use,
    so the DuckDB twin is exact), and is localCheckpointed: three

@@ -224,12 +224,12 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
     Returns (id_col, n_grams, novelty) — novelty rounded to 6 decimals
     for cross-engine hash parity.
     """
-    # A doc with zero words produces the degenerate empty shingle ''
-    # under Spark's shingles() short-doc rule, where the SQL twin's list
-    # comprehension produces no grams at all — drop it so empty /
-    # whitespace-only docs get NO novelty row in both engines (novelty
-    # of nothing is undefined, not 1.0). Non-empty word slices can never
-    # join to '', so no real gram is affected.
+    # Empty / whitespace-only / NULL docs explode to zero grams (the
+    # shingles degenerate-document convention), so they get NO novelty
+    # row in either engine — novelty of nothing is undefined, not 1.0.
+    # No gram is '' (words() never yields an empty token); the filter
+    # stays for the NOT NULL it implies on _g, without which Catalyst
+    # adds an isnotnull Filter on each read of the checkpoint.
     grams = (docs.select(F.col(id_col).alias("_id"),
                          F.explode(shingles(F.col(text_col), n))
                          .alias("_g"))

@@ -261,7 +261,9 @@ def test_winnow_shared_passage_guarantee(spark):
 
 def test_jaccard_kernel(spark):
     df = spark.createDataFrame([("a b c d e", "a b c d e zz")], "ta string, tb string")
-    j = df.select(dd.jaccard_similarity(F.col("ta"), F.col("tb")).alias("j")).collect()[0].j
+    from go_simple_embedding_database_spark.functions.text import shingles
+    j = df.select(dd.jaccard_from_shingle_arrays(
+        shingles(F.col("ta")), shingles(F.col("tb"))).alias("j")).collect()[0].j
     # shingles(ta) = {a b c, b c d, c d e}; tb adds {d e zz}
     assert j == pytest.approx(3 / 4)
 

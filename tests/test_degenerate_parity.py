@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 
 # The queries whose results flow through the shared tokenizer family
-# (words/shingles/ngram_bag/ngrams_all/doc_fingerprint/winnow) or the
+# (words/ngram_bag/shingles/doc_fingerprint/winnow) or the
 # text-analysis scalars. Index-materializing and non-text queries are
 # covered by their own parity tests on the clean corpus.
 TEXT_SURFACE = [

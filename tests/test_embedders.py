@@ -64,15 +64,15 @@ def test_hash64_unit_norm_and_determinism():
 
 
 def test_hash64_spark_matches_python(spark):
-    """The NATIVE column expression must produce the identical vector as
-    the driver-side Python recipe — this is what makes query-vector vs
-    stored-vector similarities exact."""
+    """The bulk column face must produce the identical vector, bit for
+    bit, as the driver-side Python recipe: a query for a just-ingested
+    blob then scores exactly 1.0 against its stored vector."""
     e = get_embedder("mock-hash-64")
-    df = spark.createDataFrame([("hello",), ("wörld",)], "blob string")
-    rows = {r.blob: list(r.v) for r in df.select("blob", e.column(F.col("blob")).alias("v")).collect()}
-    for blob in ("hello", "wörld"):
-        py = e.embed_one(blob)
-        assert rows[blob] == pytest.approx(py, abs=1e-12)
+    blobs = ["hello", "wörld", ""] + [f"blob {i}" for i in range(250)]
+    df = spark.createDataFrame([(b,) for b in blobs], "blob string")
+    rows = {r.blob: list(r.v) for r in
+            df.select("blob", e.column(F.col("blob")).alias("v")).collect()}
+    assert [b for b in blobs if rows[b] != e.embed_one(b)] == []
 
 
 def test_hash64_duckdb_oracle_matches_python():
@@ -92,18 +92,3 @@ def test_constant_embedder_is_native(spark):
     e = get_embedder("mock-constant")
     df = spark.createDataFrame([("a",)], "blob string").select(e.column(F.col("blob")))
     assert "EvalPython" not in formatted_plan(df)
-
-
-def test_hash64_native_variant_matches_pandas(spark):
-    """The pure-Catalyst fallback and the Arrow production path must agree
-    bit-for-bit (same recipe, two physical strategies)."""
-    from go_simple_embedding_database_spark.functions.embedders import hash64_native_column
-    from go_simple_embedding_database_spark.plans.explain_utils import formatted_plan
-
-    df = spark.createDataFrame([("hello",), ("wörld",)], "blob string")
-    native = df.select("blob", hash64_native_column(F.col("blob")).alias("v"))
-    assert "EvalPython" not in formatted_plan(native)
-    got = {r.blob: list(r.v) for r in native.collect()}
-    e = get_embedder("mock-hash-64")
-    for blob in ("hello", "wörld"):
-        assert got[blob] == pytest.approx(e.embed_one(blob), abs=1e-12)

@@ -259,8 +259,9 @@ def test_words_and_lower_are_engine_stable_on_unicode(spark):
 
 def test_shingles_degenerate_document_convention(spark):
     """r10 whole-class closure: the blank/NULL-document convention is
-    uniform across shingles' three twins (and transitively across
-    ngrams_all, doc_fingerprint and the repetition fractions): NULL text
+    uniform across shingles' three twins (each the distinct of its
+    ngram_bag twin, pinned by test_ngram_bag_blank_document_convention;
+    doc_fingerprint and the repetition fractions inherit it): NULL text
     → NULL (Column/SQL twins), blank text → ZERO shingles. Through r09
     the Catalyst/Python twins emitted [''] while DuckDB's
     list_distinct dropped the NULL-stringified empty slice — the same
@@ -288,16 +289,6 @@ def test_shingles_degenerate_document_convention(spark):
                (sorted(want) if want is not None else None), (t, sql, want)
         py = tx.shingles_py(t)
         assert py == (want if want is not None else []), (t, py)
-    # ngrams_all shares the convention (repetition's denominators)
-    na = {r.i: (list(r.g) if r.g is not None else None)
-          for r in df.select("i", tx.ngrams_all(F.col("t")).alias("g"))
-          .collect()}
-    na_sql = tx.ngrams_all_sql("?")
-    for i, (t, _) in enumerate(cases):
-        s = con.execute(f"SELECT {na_sql}",
-                        [t] * na_sql.count("?")).fetchone()[0]
-        assert na[i] == s, (t, na[i], s)
-    assert na[0] == [] and na[1] == [] and na[2] is None
     # doc_fingerprint: blank/NULL → NULL on both engines
     fp = {r.i: r.fp for r in
           df.select("i", tx.doc_fingerprint(F.col("t")).alias("fp"))
@@ -404,7 +395,7 @@ TEXT_KERNEL_PARITY_CASES = [
 
 
 def test_text_kernel_twins_match_catalyst_exactly(spark):
-    """The Catalyst tokenizers (shingles/ngrams_all/ngram_bag) must equal
+    """The Catalyst tokenizers (shingles/ngram_bag) must equal
     their Python twins (shingles_py/ngram_bag_py) — same values, same
     order — on the full adversarial corpus: the MinHash/SimHash signature
     UDFs hash ``shingles_py`` output, so any fork here would split the
@@ -421,8 +412,7 @@ def test_text_kernel_twins_match_catalyst_exactly(spark):
 
     for expr, py, ns in (
             (tx.shingles, tx.shingles_py, (1, 2, 3, 5)),
-            (tx.ngrams_all, tx.ngram_bag_py, (1, 2, 3, 5)),
-            (tx.ngram_bag, tx.ngram_bag_py, (2, 3))):
+            (tx.ngram_bag, tx.ngram_bag_py, (1, 2, 3, 5))):
         for n in ns:
             want = {i: None if t is None else py(t, n)
                     for i, t in enumerate(TEXT_KERNEL_PARITY_CASES)}
