@@ -10,8 +10,8 @@ One evaluator: ``cosine_similarity``, the pure-Catalyst HOF expression
 mirrors it. Catalyst higher-order functions are CodegenFallback — each
 row evaluates the lambda tree interpreted, measured ~15 µs/row for
 dim=64 (round-10 optimization pass), so a scoring scan burns one
-core-second per ~65k rows. Query batches are ranked by
-``operators.topk.record_topk_batches`` instead, which runs the same
+core-second per ~65k rows. Query batches and IVF centroids are ranked
+by ``operators.topk.record_topk_batches`` instead, which runs the same
 strict left fold over the dimension (``acc = acc + x_d * y_d``)
 vectorized across rows and queries, so its scores are bit-identical to
 this kernel. numpy's own ``dot``/``einsum`` are deliberately NOT used

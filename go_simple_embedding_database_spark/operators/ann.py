@@ -5,9 +5,12 @@ scale Spark can scan. The sub-linear paths:
 
 - **IVF (inverted file)**: partition vectors into cells by nearest
   centroid; a query probes only the ``nprobe`` closest cells. Index build
-  is one broadcast-join pass (centroids are tiny); search prunes the scan
-  to cells — on a cell-partitioned table that is partition pruning, so a
-  1000-executor cluster touches only the probed cells' files.
+  is one map-only pass (the tiny centroid table rides the closure of a
+  ``mapInArrow`` over the records); search prunes the scan to cells — on
+  a cell-partitioned table that is partition pruning, so a
+  1000-executor cluster touches only the probed cells' files. The build
+  and both materialized-index probes rank centroids with one function,
+  ``_nearest_centroids``.
 - **sign-LSH**: random-hyperplane sign buckets; bucket equality is the
   candidate filter for similarity joins.
 
@@ -57,23 +60,52 @@ def kmeans_centroids(df: DataFrame, k: int, vec_col: str = "embedding",
     return centers
 
 
-def assign_cells(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """IVF index build: every vector gets its nearest (max-cosine) centroid
-    id as ``cell``. One scan, centroids broadcast, no shuffle of the data
-    side; at scale, write the result partitioned by ``cell``.
+def _nearest_centroids(cents, vecs: list, n: int):
+    """(i, centroid_id) for each of the ``n`` centroids nearest
+    ``vecs[i]`` in the order (score desc, centroid_id asc), in no
+    particular output order. ``cents`` is the (centroid_id, centroid)
+    Arrow table; ``topk.record_topk_batches`` ranks it as ONE batch, so
+    its per-batch top-k is the exact top-k. The only code that ranks
+    centroids: the build, the per-query probe and the batch probe all
+    call it, so they share the pair kernel's bit-exact scores and its
+    malformed-vector rules (a NULL, NULL-element or wrong-dim vector
+    scores NULL/NaN instead of raising)."""
+    rank = record_topk_batches(
+        list(enumerate(vecs)), StructField("_q", LongType()), n,
+        "centroid", "_s", ["centroid_id"], ["centroid_id"])
+    for b in rank(cents.combine_chunks().to_batches()):
+        yield from zip(b.column("_q").to_pylist(),
+                       b.column("centroid_id").to_pylist())
 
-    A synthetic per-row id anchors the argmax window: windowing by a data
-    column would collapse rows that share its value — duplicate ids,
-    NULL ids, byte-identical rows — into one output row, silently
-    dropping records from the index."""
-    tagged = df.withColumn("_rowid", F.monotonically_increasing_id())
-    c = F.broadcast(centroids)
-    scored = tagged.crossJoin(c).withColumn(
-        "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
-    )
-    return (group_topk(scored, ["_rowid"],
-                       [F.desc("_csim"), F.asc("centroid_id")], 1)
-            .select(*df.columns, F.col("centroid_id").alias("cell")))
+
+def assign_cells(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """IVF index build: every row gets the id of its nearest (max-cosine,
+    then lowest centroid_id) centroid as ``cell``. The centroids are
+    collected once and ride a ``mapInArrow`` closure; each Arrow batch
+    of rows is ranked against them by ``_nearest_centroids`` — one scan,
+    no exchange, no record × centroid pair relation. Each input row is
+    its own output row, so duplicate ids, NULL ids and byte-identical
+    rows all stay in the index. With no centroids there is no cell and
+    no row. At scale, write the result partitioned by ``cell``."""
+    cents = centroids.select("centroid_id", "centroid").toArrow()
+    cell_type = cents.schema.field("centroid_id").type
+    cid = centroids.schema["centroid_id"]
+    schema = StructType([*df.schema.fields,
+                         StructField("cell", cid.dataType, cid.nullable,
+                                     cid.metadata)])
+
+    def with_cells(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            best = sorted(_nearest_centroids(
+                cents, batch.column(vec_col).to_pylist(), 1))
+            if best:
+                rows, cells = zip(*best)
+                yield batch.take(pa.array(rows)).append_column(
+                    "cell", pa.array(cells, cell_type))
+
+    return df.mapInArrow(with_cells, schema)
 
 
 def scalar_quantize(vec: Column) -> Column:
@@ -226,8 +258,8 @@ def ivf_topk(df: DataFrame, centroids: DataFrame, qvec: list[float], k: int,
 def ivf_write_index(df: DataFrame, centroids: DataFrame, path: str,
                     vec_col: str = "embedding",
                     mode: str = "overwrite") -> None:
-    """Materialize the IVF index: one pass assigns cells (centroids
-    broadcast), writes the table PARTITIONED BY cell, and stores the
+    """Materialize the IVF index: one map-only pass assigns cells
+    (``assign_cells``), writes the table PARTITIONED BY cell, and stores the
     centroids beside it. This is the bulk-index-construction shape that
     fits Spark at 100 TB: the expensive assignment runs once, and every
     subsequent query's cell filter becomes PARTITION PRUNING — a
@@ -295,16 +327,15 @@ def ensure_ivf_index(spark, src_path: str, index_path: str,
 def ivf_query_index(spark, path: str, qvec: list[float], k: int,
                     nprobe: int = 2, vec_col: str = "embedding",
                     id_col: str = "vec_id", score_col: str = "score") -> DataFrame:
-    """Query a materialized IVF index: rank the (tiny, driver-side)
-    centroids against the query, then scan ONLY the ``nprobe`` best cell
-    partitions (`cell IN (...)` prunes at the file-listing level — assert
-    via PartitionFilters in the plan) and take the exact top-k inside."""
-    centroids = spark.read.parquet(f"{path}/centroids")
-    probe = [
-        r.centroid_id
-        for r in topk_by_similarity(centroids, qvec, nprobe, vec_col="centroid",
-                                    score_col="_s", tie_break=["centroid_id"]).collect()
-    ]
+    """Query a materialized IVF index: collect the (tiny) centroids and
+    rank them against the query on the driver with
+    ``_nearest_centroids``, then scan ONLY the ``nprobe`` best cell
+    partitions (`cell IN (...)` prunes at the file-listing
+    level — assert via PartitionFilters in the plan) and take the exact
+    top-k inside."""
+    cents = (spark.read.parquet(f"{path}/centroids")
+             .select("centroid_id", "centroid").toArrow())
+    probe = [c for _, c in _nearest_centroids(cents, [qvec], nprobe)]
     # An EMPTY index has no centroids and therefore no probe set;
     # isin([]) is unbuildable, and the right answer is the empty relation.
     cell_filter = F.col("cell").isin(probe) if probe else F.lit(False)
@@ -329,11 +360,9 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     pruned cells read below needs the probe list driver-side anyway, so
     a Spark job here would buy distribution nobody needs at the price of
     a whole scheduler round-trip (measured ~1 s of the ann_recall gate
-    query at sf0.1 — VERDICT r03 #3). The ranking is the scorer's own
-    per-batch function, ``topk.record_topk_batches``, over the collected
-    centroids as one Arrow batch: the kernel's bit-exact fold and the
-    per-query path's exact order (score desc, centroid_id asc), so probe
-    sets are identical (pinned by
+    query at sf0.1 — VERDICT r03 #3). The ranking is
+    ``_nearest_centroids``, the same function as the per-query probe's,
+    so probe sets are identical (pinned by
     tests/test_ann.py::test_ivf_query_index_batch_equals_per_query), and
     a malformed query vector (NULL, NULL element, wrong dim) scores
     NULL/NaN instead of raising. Its cost is one |centroids| × |queries|
@@ -352,7 +381,7 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     rows the per-query path returns for each query, one plan.
     """
     cents = (spark.read.parquet(f"{path}/centroids")
-             .select("centroid_id", "centroid").toArrow().combine_chunks())
+             .select("centroid_id", "centroid").toArrow())
     routes: dict = {}
     q_rows: list = []
     if cents.num_rows:
@@ -363,14 +392,9 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
         # pairs are keyed by the query's index in q_rows — the key the
         # routes need.
         q_rows = queries.select(query_id, queries_vec).collect()
-        rank = record_topk_batches(
-            list(enumerate(qr[1] for qr in q_rows)),
-            StructField("_q", LongType()), nprobe, "centroid", "_s",
-            ["centroid_id"], ["centroid_id"])
-        for b in rank(cents.to_batches()):
-            for i, cid in zip(b.column("_q").to_pylist(),
-                              b.column("centroid_id").to_pylist()):
-                routes.setdefault(cid, []).append(i)
+        for i, cid in _nearest_centroids(cents, [qr[1] for qr in q_rows],
+                                         nprobe):
+            routes.setdefault(cid, []).append(i)
     # Empty probe set (empty query batch OR empty index): isin([]) is
     # unbuildable; the empty relation is the correct result either way.
     probed_cells = sorted(routes)

@@ -256,18 +256,18 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
     Shingle arrays are computed ONCE per document and joined to the
     candidate pairs — not recomputed per pair (candidates can vastly
-    outnumber documents when boilerplate shares band buckets)."""
+    outnumber documents when boilerplate shares band buckets). Both
+    sides join the same ``sh`` relation under two aliases, so their
+    plans are identical: when AQE broadcasts both sides it reuses the
+    first side's exchange for the second and shingles the corpus once."""
     cand = minhash_candidate_pairs(df, text_col, id_col, num_hashes, bands, n)
-    sh = df.select(F.col(id_col),
+    sh = df.select(F.col(id_col).alias("_id"),
                    shingles(F.col(text_col), n).alias("_sh"))
-    withs = (
-        cand.join(sh.withColumnRenamed(id_col, "id_a")
-                  .withColumnRenamed("_sh", "_sa"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b")
-              .withColumnRenamed("_sh", "_sb"), "id_b")
-    )
+    withs = (cand.join(sh.alias("a"), F.col("id_a") == F.col("a._id"))
+             .join(sh.alias("b"), F.col("id_b") == F.col("b._id")))
     return (
-        withs.withColumn("jaccard", jaccard_from_shingle_arrays(F.col("_sa"), F.col("_sb")))
+        withs.withColumn("jaccard", jaccard_from_shingle_arrays(
+            F.col("a._sh"), F.col("b._sh")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -17,9 +17,10 @@ Spark-first physical strategy:
   local top-k, then global merge. One pass over the data regardless of the
   number of queries, and at most k·M rows per batch leave Python. Its
   per-batch function, ``record_topk_batches``, is the one code that
-  ranks a query batch: ``batch_topk`` and the IVF batch probe's cell
-  scoring run it on the workers, the probe's centroid ranking on the
-  driver.
+  ranks a query batch. It has two callers: ``record_topk`` (workers;
+  ``batch_topk`` and the IVF batch probe's cell scoring) and
+  ``ann._nearest_centroids`` (every IVF centroid ranking: the index
+  build on the workers, both probes on the driver).
 - **all-pairs similarity join** → a broadcast cross join scored by the
   pair kernel, both sides potentially large; the LSH/IVF variants in
   ``operators.ann`` cut the candidate set at scale.
@@ -104,9 +105,9 @@ def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
     and, when routed, ``route_col``) → for each batch, the
     (query_id, *keep_cols, score_col) rows of each query's ``k`` best in
     the order ``desc(score)``, ``asc(tie_cols)``. Workers run it inside
-    ``record_topk``'s mapInArrow; the IVF batch probe runs it on the
-    driver over its collected centroids (one batch, so the per-batch top-k
-    is the exact top-k).
+    ``record_topk``'s mapInArrow; ``ann._nearest_centroids`` runs it over
+    the collected centroids as one batch (so the per-batch top-k is the
+    exact top-k), with the vectors to place as the queries.
 
     ``q_rows`` are the collected (query_id, query vector) rows, riding
     the closure; ``qid_field`` is the query_id StructField. Each record
@@ -263,8 +264,8 @@ def group_topk(df: DataFrame, group_cols: list[str], order: list[Column],
                k: int) -> DataFrame:
     """Exact per-group top-k: the first ``k`` rows of each ``group_cols``
     group in ``order``, as one ``row_number()`` window — THE shared merge
-    under ``batch_topk``, ``similarity_join``, the IVF batch probe,
-    ``ann.assign_cells`` and ``sampling.weighted_sample``. ``row_number``
+    under ``batch_topk``, ``similarity_join``, the IVF batch probe and
+    ``sampling.weighted_sample``. ``row_number``
     (not ``rank``) keeps exactly k rows with an arbitrary tie fill; a
     TOTAL ``order`` (unique tie-break last) makes the result
     deterministic.

@@ -95,8 +95,9 @@ def streaming_index_ingest(spark, source_dir: str, index_path: str,
                            schema: str = "id string, blob string, ts timestamp",
                            available_now: bool = True) -> StreamingQuery:
     """Continuous ANN-index maintenance: stream of blobs → embed (Arrow
-    batched) → nearest-centroid cell assignment (centroids broadcast) →
-    append into the cell-partitioned IVF index of ``operators.ann``.
+    batched) → nearest-centroid cell assignment (``ann.assign_cells``:
+    the centroids ride a ``mapInArrow`` closure) → append into the
+    cell-partitioned IVF index of ``operators.ann``.
 
     Uses ``foreachBatch`` because the sink is a partitioned-parquet APPEND
     keyed by a computed column — each micro-batch runs the same batch

@@ -21,26 +21,83 @@ def test_assign_cells_covers_all(spark, embeddings, centroids):
     assert all(r.cell == r.vec_id for r in own)
 
 
-def test_assign_cells_matches_id_argmax_on_unique_ids(spark, embeddings,
-                                                      centroids):
-    """On a unique-id corpus the per-row anchor picks the same cell as an
-    argmax window over the id itself."""
+def _argmax_reference_cells(frame, centroids, key):
+    """(key, cell) of every row by the HOF pair kernel over a broadcast
+    cross join and an argmax window over ``key`` — an independent
+    reference for ``assign_cells`` on frames whose ``key`` is unique."""
     from pyspark.sql import Window
 
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel)
 
-    w = Window.partitionBy("vec_id").orderBy(F.desc("_csim"),
-                                             F.asc("centroid_id"))
-    by_id = (embeddings.crossJoin(F.broadcast(centroids))
-             .withColumn("_csim", cosine_pairs_kernel(F.col("embedding"),
-                                                      F.col("centroid")))
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1))
-    want = {r.vec_id: r.centroid_id for r in by_id.collect()}
-    got = {r.vec_id: r.cell
-           for r in ann.assign_cells(embeddings, centroids).collect()}
+    w = Window.partitionBy(key).orderBy(F.desc("_csim"),
+                                        F.asc("centroid_id"))
+    ref = (frame.crossJoin(F.broadcast(centroids))
+           .withColumn("_csim", cosine_pairs_kernel(F.col("embedding"),
+                                                    F.col("centroid")))
+           .withColumn("_rn", F.row_number().over(w))
+           .filter(F.col("_rn") == 1))
+    return sorted((r[key], r.centroid_id) for r in ref.collect())
+
+
+def test_assign_cells_matches_id_argmax_on_unique_ids(spark, embeddings,
+                                                      centroids):
+    """On a unique-id corpus the per-batch centroid ranking picks the
+    same cell as an argmax window over the id itself."""
+    got = sorted((r.vec_id, r.cell)
+                 for r in ann.assign_cells(embeddings, centroids).collect())
+    assert got == _argmax_reference_cells(embeddings, centroids, "vec_id")
+
+
+def _poisoned_frame(spark, embeddings, centroids):
+    """40 well-formed rows plus one row per malformed-vector class, a
+    duplicate id with a different vector, a NULL id and a negated
+    centroid; ``tag`` is the unique key (vec_id is not)."""
+    good = [(f"ok{r.vec_id}", r.vec_id, [float(v) for v in r.embedding])
+            for r in embeddings.filter(F.col("vec_id") < 40).collect()]
+    v = good[10][2]
+    c0 = centroids.orderBy("centroid_id").first().centroid
+    inf = float("inf")
+    bad = [("null_vec", 1001, None),
+           ("null_elem", 1002, [None] + v[1:]),
+           ("all_nan", 1003, [float("nan")] * len(v)),
+           ("zero", 1004, [0.0] * len(v)),
+           ("wrong_dim", 1005, v[:10]),
+           ("pos_inf", 1006, [inf] + v[1:]),
+           ("neg_inf", 1007, [-inf] + v[1:]),
+           ("dup_id", 3, list(reversed(v))),
+           ("null_id", None, v[::-1][:32] + v[:32]),
+           ("neg_centroid", 1008, [-x for x in c0])]
+    return spark.createDataFrame(
+        good + bad, "tag string, vec_id bigint, embedding array<double>")
+
+
+def _tied_centroids(spark, centroids):
+    """8 centroids holding only 4 distinct vectors, listed in reverse id
+    order: every tie must go to the lowest centroid_id."""
+    vecs = [r.centroid for r in centroids.orderBy("centroid_id").collect()]
+    return spark.createDataFrame(
+        [(i, vecs[i % 4]) for i in reversed(range(8))],
+        "centroid_id bigint, centroid array<double>")
+
+
+@pytest.mark.parametrize("frame,cents", [
+    ("poisoned", "first8"), ("unique", "tied"), ("poisoned", "tied"),
+    ("unique", "empty"), ("poisoned", "empty")])
+def test_assign_cells_matches_argmax_reference_on_degenerate_inputs(
+        spark, embeddings, centroids, frame, cents):
+    """Malformed vectors, duplicate and NULL ids, tied centroids and an
+    empty centroid table: every row still gets the reference's cell
+    (and no row at all without centroids)."""
+    df = (_poisoned_frame(spark, embeddings, centroids) if frame == "poisoned"
+          else embeddings.withColumn("tag", F.col("vec_id").cast("string")))
+    c = {"first8": centroids,
+         "tied": _tied_centroids(spark, centroids),
+         "empty": centroids.filter(F.lit(False))}[cents]
+    got = sorted((r.tag, r.cell) for r in ann.assign_cells(df, c).collect())
+    want = _argmax_reference_cells(df, c, "tag")
     assert got == want
+    assert len(got) == (0 if cents == "empty" else df.count())
 
 
 def test_ivf_index_keeps_duplicate_and_null_id_rows(spark, embeddings,

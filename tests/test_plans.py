@@ -173,6 +173,45 @@ def test_ann_ivf_driver_query_partition_prunes(plans):
     assert "Window" not in p
 
 
+def test_ivf_build_is_one_map_in_arrow_over_the_scan(spark, embeddings):
+    """The IVF build ranks centroids inside one ``MapInArrow`` over the
+    record scan: no record x centroid nested-loop join, no exchange, no
+    argmax window. Its schema is the input's plus a ``cell`` shaped like
+    ``centroid_id`` (the index's ``_cells_schema.json`` sidecar)."""
+    import re
+
+    from pyspark.sql.types import StructField, StructType
+
+    from go_simple_embedding_database_spark.operators import ann
+
+    centroids = ann.deterministic_centroids(embeddings, 8)
+    cells = ann.assign_cells(embeddings, centroids)
+    p = formatted_plan(cells)
+    for op in ("Exchange", "Window", "BroadcastNestedLoopJoin"):
+        assert op not in p, op
+    assert len(re.findall(r"^\(\d+\) MapInArrow", p, re.M)) == 1, p
+    cid = centroids.schema["centroid_id"]
+    assert cells.schema == StructType(
+        [*embeddings.schema.fields,
+         StructField("cell", cid.dataType, cid.nullable)])
+
+
+def test_minhash_verify_reads_one_shingle_broadcast(spark, documents):
+    """Both sides of ``minhash_dedup``'s verify step join the same
+    per-document shingle relation, so after execution AQE's final plan
+    reuses the first side's broadcast for the second: the corpus is
+    shingled once. (Only the executed plan shows the reuse.)"""
+    from go_simple_embedding_database_spark.operators.dedup import (
+        minhash_dedup)
+
+    out = minhash_dedup(documents, threshold=0.7)
+    out.collect()
+    final = (out._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial Plan ==")[0])
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert len(reused) == 1 and "BroadcastExchange" in reused[0], final
+
+
 def test_dedup_cosine_blocked_join_not_cross(plans):
     """Blocked cosine near-dup joins on the block column (label)."""
     p = plans("dedup_cosine")

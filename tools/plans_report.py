@@ -85,7 +85,10 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "The per-query scan must show `PartitionFilters: [cell IN (..)]` "
         "on the cell-partitioned index — only the probed cells' files "
         "open. The full assign-every-vector pass runs only at [re]build "
-        "(fingerprint-guarded), not per query."),
+        "(fingerprint-guarded), not per query: one `MapInArrow` over the "
+        "corpus scan ranks the collected centroids per Arrow batch, with "
+        "no record x centroid join, no exchange and no window. The probe "
+        "ranks the centroids on the driver with the same function."),
     "ann_quantized": (
         "Two-stage quantized retrieval",
         "Stage 1 scans the MATERIALIZED int8 copy — `ReadSchema` of the "
