@@ -19,11 +19,23 @@ Spark DataFrames, designed for 100 TB scale:
 Everything is declarative DataFrame API so Catalyst/Tungsten pick the
 physical strategy; Python UDFs appear only where built-ins cannot express
 the semantics (remote embedding HTTP, multimodal decode stubs).
-"""
 
-from go_simple_embedding_database_spark.session import get_spark
-from go_simple_embedding_database_spark.database import SparkEmbeddingDatabase
+The two public names load on first use, so importing a submodule alone
+(the Python-worker daemon, ``worker_daemon``) does not pull in the engine,
+pandas and pyarrow.
+"""
 
 __all__ = ["get_spark", "SparkEmbeddingDatabase"]
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    if name == "get_spark":
+        from go_simple_embedding_database_spark.session import get_spark
+        return get_spark
+    if name == "SparkEmbeddingDatabase":
+        from go_simple_embedding_database_spark.database import (
+            SparkEmbeddingDatabase)
+        return SparkEmbeddingDatabase
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -39,6 +39,15 @@ from pyspark.sql import functions as F
 from go_simple_embedding_database_spark.functions.kernels import (
     cosine_pairs_kernel, cosine_scores_kernel)
 
+# Cap on one score block's cells (rows × queries) in
+# ``record_topk_batches``: a batch meets its queries in column chunks of
+# ``_SCORE_BLOCK_CELLS // rows`` queries, so Python-worker memory stays
+# bounded whatever the query-batch size M. A block peaks at ~60 bytes
+# per cell across its score, mask, key and dot arrays (tracemalloc, 64
+# dims), so 2^20 cells is ~63 MB; a full 10 000-row Arrow batch still
+# meets up to 104 queries in one chunk.
+_SCORE_BLOCK_CELLS = 1 << 20
+
 
 def _order_keys(arr) -> list:
     """numpy sort keys (most significant first) that order the Arrow
@@ -122,7 +131,13 @@ def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
     row only against the queries that may rank it — IVF's probe pairs;
     a row whose value has no route is dropped. Without routes every row
     meets every query. The record columns pass through as Arrow data,
-    untouched, so any payload can ride along."""
+    untouched, so any payload can ride along.
+
+    A block of rows meets its queries in chunks of at most
+    ``_SCORE_BLOCK_CELLS // rows`` queries (read when the closure is
+    built); each query's top-k lies in one chunk, and the chunks' picks
+    are put back in the unchunked (row, query) order, so the output does
+    not depend on the chunking."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
@@ -150,6 +165,7 @@ def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
     route_idx = None if routes is None else {
         c: np.asarray(sorted(set(js)), dtype=np.int64)
         for c, js in routes.items()}
+    block_cells = _SCORE_BLOCK_CELLS
 
     def score_block(X, J):
         """Scores and NULL mask of rows X (n × d) against queries J."""
@@ -173,6 +189,26 @@ def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
             with np.errstate(divide="ignore", invalid="ignore"):
                 S[:, same] = np.where(dn == 0.0, 0.0, dot / dn)
         return S, null
+
+    def block_topk(Rd, X, J, ties):
+        """Each query of J's first k rows among Rd (X their vectors, None
+        for NULL vectors), scored in query chunks of bounded size."""
+        step = max(1, block_cells // len(Rd))
+        picks = []
+        for lo in range(0, len(J) or 1, step):
+            Jc = J[lo:lo + step]
+            if X is None:
+                S = np.zeros((len(Rd), len(Jc)))
+                null = np.ones(S.shape, dtype=bool)
+            else:
+                S, null = score_block(X, Jc)
+            r, c = _first_k(S, null, ties, k)
+            picks.append((r, c + lo, S[r, c], null[r, c]))
+        r, c, s, null = (np.concatenate(p) for p in zip(*picks))
+        if len(picks) > 1:
+            order = np.lexsort([c, r])
+            r, c, s, null = r[order], c[order], s[order], null[order]
+        return Rd[r], J[c], s, null
 
     def topk_batches(batches):
         for batch in batches:
@@ -202,14 +238,10 @@ def record_topk_batches(q_rows: list, qid_field, k: int, records_vec: str,
                 lr = lens[R]
                 for d in np.unique(lr).tolist():
                     Rd = R[lr == d]
-                    if d < 0:
-                        S = np.zeros((len(Rd), len(J)))
-                        null = np.ones(S.shape, dtype=bool)
-                    else:
-                        X = flat[starts[Rd][:, None] + np.arange(d)]
-                        S, null = score_block(X, J)
-                    r, c = _first_k(S, null, [t[Rd] for t in ties], k)
-                    parts.append((Rd[r], J[c], S[r, c], null[r, c]))
+                    X = (None if d < 0 else
+                         flat[starts[Rd][:, None] + np.arange(d)])
+                    parts.append(
+                        block_topk(Rd, X, J, [t[Rd] for t in ties]))
             if not parts:
                 continue
             rows, qs, s, null = (np.concatenate(p) for p in zip(*parts))

@@ -268,3 +268,66 @@ def test_record_topk_truncation_parity(spark):
                       bool(ties))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", saved)
+
+
+def test_record_scorer_query_chunks_keep_rows_and_order(spark, embeddings,
+                                                        monkeypatch):
+    """With ``_SCORE_BLOCK_CELLS`` patched small, every score block meets
+    its queries in several chunks (one query per chunk for a full block,
+    several for a block of a few rows); the scorer's output batches hold
+    the same rows, bitwise, in the same order as unchunked, routed and
+    unrouted, with NULL, NULL-element and wrong-dim vectors on both
+    sides. batch_topk through the chunked scorer matches
+    ``topk_by_similarity`` per query. The default cap keeps a full Arrow
+    batch against batch_search's 64 queries in one chunk."""
+    import struct
+
+    from go_simple_embedding_database_spark.operators import topk
+    from go_simple_embedding_database_spark.operators.topk import (
+        record_topk_batches)
+
+    rows_per_batch = int(spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert topk._SCORE_BLOCK_CELLS // rows_per_batch >= 64
+
+    base = embeddings.select("vec_id", F.col("embedding")
+                             .cast("array<double>").alias("embedding"))
+    records = base.unionByName(spark.createDataFrame(
+        [(90001, None), (90002, [1.0, None, 2.0]), (90003, [1.0, 2.0])],
+        "vec_id long, embedding array<double>")).withColumn(
+        "cell", F.col("vec_id") % 3)
+    queries = (base.filter(F.col("vec_id") < 5)
+               .select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("query_embedding"))
+               .unionByName(spark.createDataFrame(
+                   [(80001, None), (80002, [1.0, 0.0])],
+                   "query_id long, query_embedding array<double>")))
+    q_rows = queries.collect()
+    qid_field = queries.schema["query_id"]
+    batches = records.toArrow().to_batches(max_chunksize=97)
+    routes = {0: [0, 1, 5], 1: [2, 3, 4, 6], 2: list(range(7))}
+
+    def run(**route):
+        fn = record_topk_batches(q_rows, qid_field, 4, "embedding", "s",
+                                 ["vec_id"], ["vec_id"], **route)
+        return [(r["query_id"], r["vec_id"],
+                 None if r["s"] is None else struct.pack("<d", r["s"]))
+                for out in fn(iter(batches)) for r in out.to_pylist()]
+
+    for route in ({}, {"routes": routes, "route_col": "cell"}):
+        whole = run(**route)
+        monkeypatch.setattr(topk, "_SCORE_BLOCK_CELLS", 5)
+        chunked = run(**route)
+        monkeypatch.undo()
+        assert chunked == whole and len(whole) > 0
+
+    monkeypatch.setattr(topk, "_SCORE_BLOCK_CELLS", 5)
+    got = batch_topk(base, queries.filter(F.col("query_id") < 5), 3,
+                     score_col="s", tie_break=["vec_id"],
+                     records_id="vec_id", attach_payload=False).collect()
+    for q in q_rows[:5]:
+        want = topk_by_similarity(base, list(q.query_embedding), 3,
+                                  score_col="s", tie_break=["vec_id"])
+        assert sorted((r.vec_id, r.s) for r in got
+                      if r.query_id == q.query_id) == \
+            sorted((r.vec_id, r.s) for r in want.collect())
