@@ -510,7 +510,8 @@ WHERE list_cosine_similarity(a.v, b.v) >= 0.999999
 
 def _q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN join: top-3 neighbors for each of the first 10 vectors in ONE
-    scan of the big side (query side broadcast, row_number window)."""
+    scan of the big side (the query slice rides ``batch_topk``'s record
+    scorer; one row_number window on left_id merges)."""
     emb = _emb(spark, sf_dir)
     left = emb.filter(F.col("vec_id") < 10)
     out = similarity_join(left, emb, k=3, left_id="vec_id", right_id="vec_id",

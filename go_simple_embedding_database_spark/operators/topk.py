@@ -18,12 +18,10 @@ Spark-first physical strategy:
   number of queries, and at most k·M rows per batch leave Python. Its
   per-batch function, ``record_topk_batches``, is the one code that
   ranks a query batch. It has two callers: ``record_topk`` (workers;
-  ``batch_topk`` and the IVF batch probe's cell scoring) and
-  ``ann._nearest_centroids`` (every IVF centroid ranking: the index
-  build on the workers, both probes on the driver).
-- **all-pairs similarity join** → a broadcast cross join scored by the
-  pair kernel, both sides potentially large; the LSH/IVF variants in
-  ``operators.ann`` cut the candidate set at scale.
+  ``batch_topk`` — and through it the k-NN ``similarity_join`` — and
+  the IVF batch probe's cell scoring) and ``ann._nearest_centroids``
+  (every IVF centroid ranking: the index build on the workers, both
+  probes on the driver).
 
 Tie semantics: ``limit``/``row_number`` keep an arbitrary subset of rows
 tied at the k-th score — exactly k rows out, matching the reference's
@@ -37,7 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from go_simple_embedding_database_spark.functions.kernels import (
-    cosine_pairs_kernel, cosine_scores_kernel)
+    cosine_scores_kernel)
 
 # Cap on one score block's cells (rows × queries) in
 # ``record_topk_batches``: a batch meets its queries in column chunks of
@@ -296,8 +294,8 @@ def group_topk(df: DataFrame, group_cols: list[str], order: list[Column],
                k: int) -> DataFrame:
     """Exact per-group top-k: the first ``k`` rows of each ``group_cols``
     group in ``order``, as one ``row_number()`` window — THE shared merge
-    under ``batch_topk``, ``similarity_join``, the IVF batch probe and
-    ``sampling.weighted_sample``. ``row_number``
+    under ``batch_topk`` (and so ``similarity_join``), the IVF batch
+    probe and ``sampling.weighted_sample``. ``row_number``
     (not ``rank``) keeps exactly k rows with an arbitrary tie fill; a
     TOTAL ``order`` (unique tie-break last) makes the result
     deterministic.
@@ -412,7 +410,7 @@ def batch_topk(
 def similarity_join(
     left: DataFrame,
     right: DataFrame,
-    k: int | None = None,
+    k: int,
     threshold: float | None = None,
     left_vec: str = "embedding",
     right_vec: str = "embedding",
@@ -420,36 +418,34 @@ def similarity_join(
     right_id: str = "id",
     score_col: str = "score",
 ) -> DataFrame:
-    """All-pairs cosine join: for each left row, its matches on the right.
+    """k-NN cosine join: for each left row, its ``k`` best right rows as
+    (left_id, right_id, score_col), ranked by (score desc, right_id asc).
 
-    - ``threshold`` keeps pairs with score >= threshold (near-duplicate
-      detection shape);
-    - ``k`` keeps the top-k right rows per left row (k-NN join shape);
-    - both → threshold first, then top-k.
+    The k-NN shape is "few queries (left) × huge corpus (right)", which
+    is ``batch_topk``'s contract, so this is an adapter over it: the left
+    side is the query batch (collected, riding the scorer's closure),
+    the corpus is scanned in place — never shuffled, never collected —
+    and the per-left merge is ``group_topk``'s one exchange on
+    ``left_id``. Both sides are renamed before the call, so no right
+    column can collide with ``left_id``. Left rows sharing an id form
+    one group and share its k.
 
-    Exact O(|L|·|R|) — correct at any scale but quadratic; this is the
-    correctness oracle. The scale path is ``operators.ann`` (LSH bucketing
-    / IVF cells) which feeds candidate pairs into the same scoring.
-
-    Broadcast orientation: the k-NN join shape is "few queries (left) ×
-    huge corpus (right)", so the LEFT side is broadcast — the corpus is
-    scanned in place, never shuffled and never collected to the driver (a
-    broadcast of the big side is the 100 TB OOM).
-
-    The per-left top-k is ``group_topk`` over ``left_id`` with the total
-    order (score desc, right_id asc): one exchange, with a partial
-    ``WindowGroupLimit`` below it.
+    ``threshold`` then keeps rows with score >= threshold. Filtering
+    after the top-k equals filtering before it, because the kept rows
+    are a prefix of each left row's order: Spark sorts NaN first under
+    ``desc`` and NaN >= t holds, while NULL scores sort last and fail
+    the filter. All-pairs threshold search is
+    ``dedup.cosine_neardup_pairs``; at scale, ``operators.ann`` (LSH
+    bucketing / IVF cells) cuts the candidate set.
     """
-    lv, rv = F.col("_l." + left_vec), F.col("_r." + right_vec)
-    pairs = right.alias("_r").crossJoin(F.broadcast(left.alias("_l")))
-    scored = pairs.select(
-        F.col("_l." + left_id).alias("left_id"),
-        F.col("_r." + right_id).alias("right_id"),
-        cosine_pairs_kernel(lv, rv).alias(score_col),
-    )
+    out = batch_topk(
+        right.select(F.col(right_id).alias("right_id"),
+                     F.col(right_vec).alias("embedding")),
+        left.select(F.col(left_id).alias("left_id"),
+                    F.col(left_vec).alias("query_embedding")),
+        k, query_id="left_id", score_col=score_col, tie_break=["right_id"],
+        records_id="right_id", attach_payload=False,
+    ).select("left_id", "right_id", score_col)
     if threshold is not None:
-        scored = scored.filter(F.col(score_col) >= threshold)
-    if k is not None:
-        scored = group_topk(
-            scored, ["left_id"], [F.desc(score_col), F.asc("right_id")], k)
-    return scored
+        out = out.filter(F.col(score_col) >= threshold)
+    return out

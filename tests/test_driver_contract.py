@@ -55,14 +55,16 @@ ROTATING_OFFICIAL_R09 = {
 # byte-identical in DEFAULT mode this round: the round-11 text/kmeans
 # kernel dispatches (since deleted) left default plans unchanged
 # (plans/r11 before/after diffs pin this). TWO of them
-# (similarity_join_knn, ann_recall) do carry the round-11 kernel guard
-# in their default plans with only r10-official rows: the window has no
-# free slot (1 + 3 + 2 + 44 = 50 exactly), their only delta is the same
-# shared guard expression seven in-window similarity queries re-certify,
-# and the guard is proven result-invariant bitwise
-# (tests/test_kernels.py) and on the whole surface by SELFCHECK — the
-# documented, bounded exception this round (they lead the tail so a
-# reorder can't hide them).
+# (similarity_join_knn, ann_recall) carry plan changes with only
+# r10-official rows: the window has no free slot (1 + 3 + 2 + 44 = 50
+# exactly). In round 11 both gained the shared kernel guard that seven
+# in-window similarity queries re-certify; since then
+# similarity_join_knn ranks through batch_topk's record scorer instead
+# of a broadcast cross join (plans/r19), with rows pinned against a
+# single row_number window over the pair kernel
+# (tests/test_topk.py::test_similarity_join_threshold_and_k) and its
+# SELFCHECK hash unchanged — the documented, bounded exception (they
+# lead the tail so a reorder can't hide them).
 OFFICIAL_R10_TAIL = {
     "similarity_join_knn", "ann_recall", "dedup_minhash", "dedup_prefix",
     "text_stats", "dedup_winnow", "multimodal_decode", "ingest_embed",

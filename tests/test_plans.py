@@ -99,16 +99,28 @@ def test_dedup_simhash_pairs_is_banded_equi_join(plans):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_similarity_join_broadcasts_query_side_only(plans):
-    """The k-NN join must broadcast the SMALL query side; the corpus is
-    scanned in place (a corpus broadcast is the 100 TB driver OOM). In the
-    plan tree the BroadcastExchange subtree is the filtered query relation
-    and the corpus scan is its bare sibling."""
+def test_similarity_join_scans_corpus_in_place(plans):
+    """The k-NN join ranks through ``batch_topk``'s record scorer: the
+    query slice is collected when the plan is built and rides the
+    scorer's closure, so the corpus is scanned in place — one parquet
+    scan feeding one MapInArrow, with no nested-loop or cartesian join
+    and no broadcast anywhere above it (a corpus broadcast or collect is
+    the 100 TB driver OOM)."""
     import re
     p = plans("similarity_join_knn")
-    assert re.search(r"BroadcastExchange \(\d+\)\n\s*\+- Filter", p)
-    assert re.search(r":- Scan parquet", p)  # corpus side: plain scan, no exchange
-    assert "LessThan(vec_id,10)" in p  # the broadcast subtree is the query slice
+    tree = p.split("\n\n\n", 1)[0]
+    nodes = [m.group(1).strip() for m in
+             re.finditer(r"(\w[\w ]*?) \(\d+\)\s*$", tree, re.M)]
+    assert nodes.count("Scan parquet") == 1, nodes
+    assert nodes.count("MapInArrow") == 1, nodes
+    below = nodes[nodes.index("MapInArrow") + 1:]
+    assert below[-1] == "Scan parquet" and set(below[:-1]) <= {
+        "Project", "Filter", "ColumnarToRow"}, below
+    assert "embeddings.parquet" in p
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct",
+                 "BroadcastExchange"):
+        assert node not in p, node
+    assert "LessThan(vec_id,10)" not in p  # the query slice is not scanned
 
 
 def _hash_exchanges_with_child(p: str):
@@ -557,23 +569,14 @@ def test_ngram_novelty_single_gram_exchange(plans):
 
 # query -> why its BNLJ build side is bounded (does not grow with the data)
 _BNLJ_ALLOWED = {
-    "batch_topk": "constant query-vector relation (n_queries rows) broadcast "
-                  "against records; shape pinned by "
-                  "test_batch_topk_broadcasts_queries",
-    "similarity_join_knn": "query side broadcast only; shape pinned by "
-                           "test_similarity_join_broadcasts_query_side_only",
     "cosine_kernel_pairs": "fixed probe-vector pairs (constant relation) "
                            "against the kernel expressions",
-    "ann_recall": "exact/candidate winner sets (n_queries x k rows) joined "
-                  "for recall — bounded by the query batch, not the corpus",
     "frequent_tokens": "scalar Misra-Gries admission threshold broadcast "
                        "onto candidate tokens (1-row build side)",
     "bm25_search": "scalar corpus stats (N, avgdl — 1 row) broadcast onto "
                    "the per-term scores",
     "events_retention": "cohort-week scaffold (calendar-bounded sequence) "
                         "crossed with per-cohort sizes",
-    "mixture_sample": "per-source rate table (n_sources rows) broadcast; "
-                      "shape pinned by test_mixture_sample_broadcasts_rates",
     "events_pmi": "scalar event-total marginal (1 row) broadcast onto "
                   "pair counts; shape pinned by "
                   "test_events_pmi_broadcasts_marginals",
@@ -615,6 +618,7 @@ _GLOBAL_WINDOW_ALLOWED = {
 # fixed by materializing the tiny intermediate. Two same-table scans are
 # free (build+probe, old+new, tf+stats are all legitimate); more needs a
 # rationale. query -> {table: max scan nodes allowed}.
+_MULTISCAN_DEFAULT = 2
 _MULTISCAN_ALLOWED = {
     # MERGE reads target + source + writes a new version (txn layer)
     "corpus_upsert": {"documents": 3},
@@ -631,20 +635,29 @@ _MULTISCAN_ALLOWED = {
     # UNION/INTERSECT/EXCEPT demo — set semantics are inherently
     # one-scan-per-operand
     "set_ops_customers": {"orders": 3},
-    # corpus side + the constant query-vector relation drawn twice
-    "batch_topk": {"embeddings": 3},
 }
 
 
-def test_bnlj_allowlist_entries_are_live_queries():
-    """A renamed/removed query must not leave a stale allowlist entry
-    silently widening the sweep."""
+def test_bnlj_allowlist_entries_are_live_queries(plans):
+    """A renamed/removed query, or a plan that no longer needs its
+    exception, must not leave a stale allowlist entry silently widening
+    the sweep: every BNLJ entry's plan still holds a
+    BroadcastNestedLoopJoin, and every multiscan entry still scans its
+    table more often than the default cap."""
     stale = set(_BNLJ_ALLOWED) - set(_ALL_QUERIES)
     assert not stale, f"allowlist entries without a query: {sorted(stale)}"
     stale_w = set(_GLOBAL_WINDOW_ALLOWED) - set(_ALL_QUERIES)
     assert not stale_w, f"window allowlist stale: {sorted(stale_w)}"
     stale_m = set(_MULTISCAN_ALLOWED) - set(_ALL_QUERIES)
     assert not stale_m, f"multiscan allowlist stale: {sorted(stale_m)}"
+    dead = [n for n in _BNLJ_ALLOWED
+            if "BroadcastNestedLoopJoin" not in plans(n)]
+    assert not dead, f"BNLJ allowlist entries without a BNLJ: {dead}"
+    dead_m = [(n, t) for n, caps in _MULTISCAN_ALLOWED.items()
+              for t in caps
+              if _same_table_scan_counts(plans(n)).get(t, 0)
+              <= _MULTISCAN_DEFAULT]
+    assert not dead_m, f"multiscan entries within the default cap: {dead_m}"
 
 
 def _same_table_scan_counts(plan: str) -> dict:
@@ -706,7 +719,7 @@ def test_surface_plan_antipattern_sweep(plans, name):
     # shared relation is re-derived per consumer unless allowlisted.
     caps = _MULTISCAN_ALLOWED.get(name, {})
     for table, n in _same_table_scan_counts(p).items():
-        assert n <= caps.get(table, 2), (
+        assert n <= caps.get(table, _MULTISCAN_DEFAULT), (
             f"{name}: {n} parquet scans of `{table}` — a multi-consumer "
             f"relation is being re-derived per consumer; materialize it "
             f"(lazy localCheckpoint) or add a rationale to "

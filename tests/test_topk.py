@@ -72,20 +72,62 @@ def test_batch_topk_rejects_query_side_tie_break(spark, embeddings):
 
 
 def test_similarity_join_threshold_and_k(spark, embeddings):
-    left = embeddings.filter(F.col("vec_id") < 5)
-    out = similarity_join(left, embeddings, k=3, left_id="vec_id", right_id="vec_id")
-    assert out.groupBy("left_id").count().filter("count != 3").count() == 0
-    # self-pair present with sim ~1
-    selfs = out.filter(F.col("left_id") == F.col("right_id"))
-    assert selfs.count() == 5
+    """The k-NN join (a ``batch_topk`` adapter, threshold applied after
+    the top-k) returns exactly the rows of a single ``row_number``
+    window over an inline cross join scored by the pair kernel, with the
+    threshold applied BEFORE the window — a threshold keeps a prefix of
+    each left row's order. Over a k × threshold grid, with NULL,
+    NULL-element, all-NaN, wrong-dim, zero and +Inf vectors on both
+    sides and duplicate left ids (same and different vectors); compared
+    by ``repr`` so NaN, -0.0 and NULL scores count."""
+    from pyspark.sql import Window
 
+    from go_simple_embedding_database_spark.functions.kernels import (
+        cosine_pairs_kernel)
 
-def test_similarity_join_threshold_only(spark, embeddings):
-    left = embeddings.filter(F.col("vec_id") < 5)
-    out = similarity_join(left, embeddings, threshold=0.999999,
-                          left_id="vec_id", right_id="vec_id")
-    # at minimum the self-pairs survive a ~1.0 threshold
-    assert out.filter(F.col("left_id") == F.col("right_id")).count() == 5
+    vtype = embeddings.schema["embedding"].dataType
+    base = embeddings.select("vec_id", "embedding")
+    dim = len(base.first().embedding)
+    nan, inf = float("nan"), float("inf")
+    poison = [None, [1.0, None] + [2.0] * (dim - 2), [nan] * dim,
+              [1.0, 2.0], [0.0] * dim, [inf] + [1.0] * (dim - 1)]
+
+    def rows(ids, vecs):
+        return spark.createDataFrame(
+            list(zip(ids, vecs)),
+            "vec_id long, embedding array<double>").select(
+                "vec_id", F.col("embedding").cast(vtype))
+
+    v0, v7 = (base.filter(F.col("vec_id") == i).first().embedding
+              for i in (0, 7))
+    # left ids 0 and 1 repeat: 0 with its own vector, 1 with another's
+    left = (base.filter(F.col("vec_id") < 5)
+            .unionByName(rows([0, 1], [v0, v7]))
+            .unionByName(rows(range(90001, 90007), poison)).localCheckpoint())
+    # ids descend in row order, so only the right_id tie-break orders
+    # the tied (NULL, NaN, duplicate-vector) scores
+    right = (rows(range(80006, 80000, -1), poison)
+             .unionByName(rows([70002, 70001], [v0, v0]))
+             .unionByName(base).localCheckpoint())
+
+    pairs = right.alias("r").crossJoin(left.alias("l")).select(
+        F.col("l.vec_id").alias("left_id"),
+        F.col("r.vec_id").alias("right_id"),
+        cosine_pairs_kernel(F.col("l.embedding"),
+                            F.col("r.embedding")).alias("score")
+    ).localCheckpoint()
+    w = Window.partitionBy("left_id").orderBy(F.desc("score"),
+                                              F.asc("right_id"))
+    for k in (1, 3, 5, 10):
+        for t in (None, -1.0, 0.0, 0.3, 0.5, 0.9, 0.999999, 1.0):
+            ref = pairs if t is None else pairs.filter(F.col("score") >= t)
+            want = sorted(map(repr, ref.withColumn(
+                "_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+                .drop("_rn").collect()))
+            out = similarity_join(left, right, k=k, threshold=t,
+                                  left_id="vec_id", right_id="vec_id")
+            assert out.columns == ["left_id", "right_id", "score"]
+            assert sorted(map(repr, out.collect())) == want, (k, t)
 
 
 def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings):

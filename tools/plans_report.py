@@ -44,13 +44,14 @@ COMMENTARY: dict[str, tuple[str, str]] = {
         "the payload."),
     "similarity_join_knn": (
         "k-NN similarity join (queries x corpus)",
-        "Broadcast orientation: the SMALL query side broadcasts "
-        "(`BroadcastExchange` wraps the left/query relation); the corpus "
-        "is scanned in place — never shuffled, never collected. At 100 TB "
-        "a corpus-side broadcast is an OOM; this plan's only exchange "
-        "is the per-query window's `hashpartitioning(left_id)`, with a "
-        "Partial `WindowGroupLimit` below it capping each map task at k "
-        "rows per query."),
+        "An adapter over `batch_topk`: the small query slice is "
+        "collected when the plan is built and rides the record scorer's "
+        "closure, so the plan is the corpus scan feeding one "
+        "`MapInArrow` — no cross join, no broadcast, the corpus never "
+        "shuffled and never collected. The only exchange is the "
+        "per-query window's `hashpartitioning(left_id)`, with a Partial "
+        "`WindowGroupLimit` below it capping each map task at k rows per "
+        "query."),
     "dedup_minhash": (
         "MinHash+LSH near-duplicate pairs",
         "Candidate generation is an equi-join on the LSH band key "
